@@ -323,6 +323,7 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.stop()
     q.awaitTermination()
     ticks = spark.table(name)
+    spark.catalog.dropTempView(name)  # the DataFrame keeps the rows
     return (ticks.groupBy("symbol")
             .agg(F.count("*").alias("n_ticks"),
                  F.min("ts").alias("first_ts"),

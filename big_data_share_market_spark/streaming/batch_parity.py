@@ -319,28 +319,12 @@ WHERE p.event_type = 'purchase'
 
 
 def q_stream_drawdown_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G6: running per-key peak and drawdown via the Spark 4
-    arbitrary-state v2 API (transformWithStateInPandas + typed
-    ValueState) where its protobuf dependency exists, else the
-    output-identical applyInPandasWithState form (state.py picks).
-    Oracle = the batch running-max window. The RocksDB provider (a
-    v2 requirement, harmless for v1) is set for this query and
-    restored after."""
+    """G6: running per-key peak and drawdown as keyed state
+    (state.drawdown_per_key, one double per key) on the default state
+    store. Oracle = the batch running-max window."""
     from .state import drawdown_per_key
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming."
-                        "state.RocksDBStateStoreProvider")
-    try:
-        out = run_available_now(
-            drawdown_per_key(events_stream(spark, sf_dir)), spark,
-            output_mode="append")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return out
+    return run_available_now(drawdown_per_key(events_stream(spark, sf_dir)),
+                             spark, output_mode="append")
 
 
 _STREAM_DRAWDOWN_SQL = """

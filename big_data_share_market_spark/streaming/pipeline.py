@@ -194,7 +194,9 @@ def run_available_now(sdf: DataFrame, spark: SparkSession,
     available data (availableNow trigger → memory sink) and return the
     materialized result. Complete mode is the test-harness choice: the
     final window would otherwise be withheld as not-yet-finalized by
-    the watermark at end-of-stream."""
+    the watermark at end-of-stream. The memory sink's temp view is
+    dropped at once: the returned DataFrame keeps the sink's rows, so
+    repeated runs leave no `mem_*` table in the catalog."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (
         sdf.writeStream.format("memory").queryName(name)
@@ -203,7 +205,9 @@ def run_available_now(sdf: DataFrame, spark: SparkSession,
         .start()
     )
     q.awaitTermination()
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def run_with_cadence(sdf: DataFrame, spark: SparkSession,

@@ -1,18 +1,42 @@
-"""Custom stateful operator: bounded last-N-per-key buffer
-(SURVEY §2.G6/D4) — the reference's per-symbol 20-record FIFO
-(`streamlit_app/provider.py:20-22,107-113`) as an
-`applyInPandasWithState` operator.
+"""Keyed streaming state machines (SURVEY §2.G6/D4) — the reference's
+per-symbol consumer-thread state (`streamlit_app/provider.py:20-22,
+107-113`: a 20-record FIFO plus indicators recomputed per key) as
+`applyInPandasWithState` operators, partition-parallel and
+checkpointed by Spark.
 
-The state per key is the buffer itself (ts-micros, event_id, value
-arrays), updated incrementally per micro-batch and re-emitted in
-update mode — exactly the consumer thread's evict-at-N behavior, but
-partition-parallel and fault-tolerant (state checkpointed by Spark).
+Every NoTimeout machine runs on one adapter, :func:`_keyed_state`,
+which owns the select, the optional NULL filter, the grouping, state
+load and update, and the output frame. A machine is a pure step
 
-Scale notes: state size is O(n_keys × N) — tiny. The shuffle is one
-hash partitioning on the key, the same as any grouped agg.
+    step(state, pdf) -> (new_state, columns or None)
+
+with this contract:
+
+- ``state`` is the key's tuple in its ``*_STATE_DDL`` layout (the
+  machine's ``init`` tuple on the key's first micro-batch);
+- ``pdf`` holds the key's rows of ONE micro-batch, concatenated and
+  sorted ascending on ``(ts, event_id)`` — event_id breaks ``ts``
+  ties, the same order as the batch window forms;
+- NULL ``value`` ticks arrive as NaN unless the machine asks for
+  ``drop_null``, in which case they are filtered out before the
+  shuffle (the machines whose recurrence a NaN would poison forever;
+  their oracles filter ``value IS NOT NULL`` the same way);
+- the returned columns follow the ``*_OUTPUT_DDL`` order WITHOUT
+  ``user_id``; the adapter puts the key in front. ``None`` emits
+  nothing for this batch.
+
+Each recurrence keeps the IEEE operation order of its batch kernel or
+recursive-CTE oracle, so a replay is bit-identical to the batch
+result and does not depend on how the input splits into micro-batches.
+
+Scale notes: state is O(n_keys × a few scalars) (last-N: × N). The
+shuffle is one hash partitioning on the key, the same as any grouped
+agg. Sessionization (EventTimeTimeout) keeps its own function below.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -20,6 +44,39 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def _keyed_state(sdf: DataFrame, cols: list[str], step, *, init: tuple,
+                 state_ddl: str, output_ddl: str, mode: str = "append",
+                 drop_null: bool = False) -> DataFrame:
+    """Run the pure per-key `step` (module docstring) as a NoTimeout
+    `applyInPandasWithState` operator over `user_id` + `cols`."""
+
+    def fn(key: tuple, pdf_iter, state: GroupState):
+        (user_id,) = key
+        parts = [pdf for pdf in pdf_iter if len(pdf)]
+        if not parts:  # NoTimeout calls only keys with rows
+            return
+        pdf = (pd.concat(parts, ignore_index=True)
+               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+        new_state, out = step(state.get if state.exists else init, pdf)
+        state.update(new_state)
+        if out is not None:
+            yield pd.DataFrame({"user_id": user_id, **out})
+
+    sdf = sdf.select("user_id", *cols)
+    if drop_null:
+        sdf = sdf.filter(F.col("value").isNotNull())
+    return sdf.groupBy("user_id").applyInPandasWithState(
+        fn,
+        outputStructType=output_ddl,
+        stateStructType=state_ddl,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+_TICK_COLS = ["event_id", "ts", "value"]
 
 #: Output: the buffered rows, ranked 1 = newest (matches the batch
 #: form operators/keyed.q_latest_n_per_key for oracle parity).
@@ -31,59 +88,39 @@ STATE_DDL = "ts_us ARRAY<BIGINT>, event_id ARRAY<BIGINT>, value ARRAY<DOUBLE>"
 _N_DEFAULT = 20
 
 
-def _last_n_fn(n: int):
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            ts_us, event_id, value = state.get
-            buf = pd.DataFrame({"ts_us": list(ts_us),
-                                "event_id": list(event_id),
-                                "value": list(value)})
-        else:
-            buf = pd.DataFrame(columns=["ts_us", "event_id", "value"])
-
-        for pdf in pdf_iter:
-            newer = pd.DataFrame({
-                "ts_us": pdf["ts"].astype("datetime64[us]").astype("int64"),
-                "event_id": pdf["event_id"],
-                "value": pdf["value"],
-            })
-            buf = pd.concat([buf, newer], ignore_index=True)
-
+def _last_n_step(n: int):
+    def step(state, pdf):
+        ts_us, event_id, value = state
+        pdf_us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
+        buf = pd.DataFrame({
+            "ts_us": np.r_[np.asarray(ts_us, "int64"), pdf_us],
+            "event_id": np.r_[np.asarray(event_id, "int64"),
+                              pdf["event_id"].to_numpy("int64")],
+            "value": np.r_[np.asarray(value, "float64"),
+                           pdf["value"].to_numpy("float64")],
+        })
         # Keep the N newest by (ts, event_id) — deterministic tiebreak,
         # same order as the batch window rank.
         buf = (buf.sort_values(["ts_us", "event_id"],
                                ascending=[False, False])
                .head(n).reset_index(drop=True))
-        state.update((buf["ts_us"].tolist(),
-                      buf["event_id"].tolist(),
-                      buf["value"].tolist()))
+        return ((buf["ts_us"].tolist(), buf["event_id"].tolist(),
+                 buf["value"].tolist()),
+                {"event_id": buf["event_id"],
+                 "ts": pd.to_datetime(buf["ts_us"], unit="us"),
+                 "value": buf["value"],
+                 "rn": range(1, len(buf) + 1)})
 
-        out = pd.DataFrame({
-            "user_id": user_id,
-            "event_id": buf["event_id"].astype("int64"),
-            "ts": pd.to_datetime(buf["ts_us"], unit="us"),
-            "value": buf["value"].astype("float64"),
-            "rn": range(1, len(buf) + 1),
-        })
-        yield out
-
-    return fn
+    return step
 
 
 def last_n_per_key(sdf: DataFrame, n: int = _N_DEFAULT) -> DataFrame:
-    """Streaming bounded buffer: latest `n` events per user_id."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _last_n_fn(n),
-            outputStructType=OUTPUT_DDL,
-            stateStructType=STATE_DDL,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    """Streaming bounded buffer: latest `n` events per user_id, the
+    whole buffer re-emitted in update mode — the consumer thread's
+    evict-at-N behavior."""
+    return _keyed_state(sdf, _TICK_COLS, _last_n_step(n),
+                        init=([], [], []), state_ddl=STATE_DDL,
+                        output_ddl=OUTPUT_DDL, mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -97,7 +134,7 @@ EMA_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 EMA_STATE_DDL = "acc ARRAY<DOUBLE>, started ARRAY<BOOLEAN>"
 
 
-def _ema_fn(alphas: list[float]):
+def _ema_step(alphas: list[float]):
     """Per-key seeded continuation of the adjust=False ewm recurrence
     (`acc := acc + alpha*(x - acc)`, NULL inputs carry the
     accumulator) — the same IEEE op order as the batch kernel
@@ -106,24 +143,9 @@ def _ema_fn(alphas: list[float]):
     this eagerly per dashboard refresh (`streamlit_app/
     streamlit_app.py:165-166,346-347`); here the state lives in the
     checkpoint, updated once per event."""
-    import math
 
-    import numpy as np
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            accs_t, started_t = state.get
-            accs, started = list(accs_t), list(started_t)
-        else:
-            accs = [math.nan] * len(alphas)
-            started = [False] * len(alphas)
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((accs, started))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        accs, started = list(state[0]), list(state[1])
         vals = pdf["value"].to_numpy(dtype="float64")
         out_cols = []
         for j, alpha in enumerate(alphas):
@@ -140,17 +162,15 @@ def _ema_fn(alphas: list[float]):
                 col[i] = acc
             accs[j], started[j] = acc, on
             out_cols.append(col)
-        state.update((accs, started))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (accs, started), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
             "ema_5": out_cols[0],
             "ema_15": out_cols[1],
-        })
+        }
 
-    return fn
+    return step
 
 
 def ema_per_key(sdf: DataFrame,
@@ -158,17 +178,10 @@ def ema_per_key(sdf: DataFrame,
     """Streaming EMA(5)/EMA(15) per user_id with checkpointed
     accumulator state. One hash shuffle on the key per micro-batch;
     state is O(n_keys x 2 doubles) — negligible at any key count."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _ema_fn(list(alphas)),
-            outputStructType=EMA_OUTPUT_DDL,
-            stateStructType=EMA_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(sdf, _TICK_COLS, _ema_step(list(alphas)),
+                        init=([math.nan] * len(alphas),
+                              [False] * len(alphas)),
+                        state_ddl=EMA_STATE_DDL, output_ddl=EMA_OUTPUT_DDL)
 
 
 ATR_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
@@ -176,29 +189,16 @@ ATR_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 ATR_STATE_DDL = "prev DOUBLE, acc DOUBLE, started BOOLEAN"
 
 
-def _atr_fn(alpha: float):
+def _atr_step(alpha: float):
     """Checkpointed Wilder ATR over tick ranges: tr = |x - prev x|
     (NULL on each key's first tick, exactly `abs(value - lag(value))`),
     smoothed by the shared NULL-skipping ewm recurrence — same op
     order as operators/channels.q_atr_wilder's kernel, so the streamed
     trajectory is bit-identical to the batch closed form."""
-    import math
 
-    import numpy as np
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            prev, acc, started = state.get
-            prev = math.nan if prev is None else prev
-        else:
-            prev, acc, started = math.nan, math.nan, False
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((prev, acc, started))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        prev, acc, started = state
+        prev = math.nan if prev is None else prev
         vals = pdf["value"].to_numpy(dtype="float64")
         out_tr = np.empty(len(vals), dtype="float64")
         out_atr = np.empty(len(vals), dtype="float64")
@@ -214,34 +214,24 @@ def _atr_fn(alpha: float):
             else:
                 acc = acc + alpha * (tr - acc)
                 out_atr[i] = acc
-        state.update((prev, acc, started))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (prev, acc, started), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
             "tr": out_tr,
             "atr_14": out_atr,
-        })
+        }
 
-    return fn
+    return step
 
 
 def atr_per_key(sdf: DataFrame, alpha: float = 1.0 / 14.0) -> DataFrame:
     """Streaming Wilder ATR(14) per user_id — live volatility per
     symbol. State is O(n_keys × 2 doubles); one hash shuffle on the
     key per micro-batch, like the EMA/Holt kernels."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _atr_fn(alpha),
-            outputStructType=ATR_OUTPUT_DDL,
-            stateStructType=ATR_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(sdf, _TICK_COLS, _atr_step(alpha),
+                        init=(math.nan, math.nan, False),
+                        state_ddl=ATR_STATE_DDL, output_ddl=ATR_OUTPUT_DDL)
 
 
 SUPERTREND_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
@@ -250,30 +240,16 @@ SUPERTREND_STATE_DDL = ("atr DOUBLE, fub DOUBLE, flb DOUBLE, trend INT, "
                         "prev_close DOUBLE, started BOOLEAN")
 
 
-def _supertrend_fn(alpha: float, mult: float):
+def _supertrend_step(alpha: float, mult: float):
     """Checkpointed tick-level supertrend: with high = low = close,
     true range reduces to |close − prev close| and the first tick
     seeds atr = 0 (bands collapse onto the price, trend −1) — the
     same recurrence order as the batch bar kernel
     (operators/channels.q_supertrend), so replay is bit-identical to
     the recursive-CTE oracle."""
-    import math
 
-    import numpy as np
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            atr, fub, flb, trend, pc, started = state.get
-        else:
-            atr, fub, flb, trend, pc, started = (
-                math.nan, math.nan, math.nan, 0, math.nan, False)
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((atr, fub, flb, trend, pc, started))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        atr, fub, flb, trend, pc, started = state
         vals = pdf["value"].to_numpy(dtype="float64")
         out_st = np.empty(len(vals), dtype="float64")
         out_tr = np.empty(len(vals), dtype="int32")
@@ -294,42 +270,28 @@ def _supertrend_fn(alpha: float, mult: float):
             pc = cl
             out_st[i] = flb if trend == 1 else fub
             out_tr[i] = trend
-        state.update((atr, fub, flb, trend, pc, started))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (atr, fub, flb, trend, pc, started), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
             "supertrend": out_st,
             "trend": out_tr,
-        })
+        }
 
-    return fn
+    return step
 
 
 def supertrend_per_key(sdf: DataFrame, alpha: float = 1.0 / 10.0,
                        mult: float = 3.0) -> DataFrame:
     """Streaming supertrend(10, 3) per user_id — the live band-ratchet
-    state machine; state is O(n_keys × 5 scalars).
-
-    NULL ticks are dropped BEFORE the stateful kernel: a NULL close
-    would become NaN inside the recurrence and permanently poison the
-    checkpointed (atr, bands) state; the recursive-CTE oracle
-    (_stream_supertrend_sql) filters value IS NOT NULL to match, so
-    stream and oracle row sets stay identical even on NULL ticks."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _supertrend_fn(alpha, mult),
-            outputStructType=SUPERTREND_OUTPUT_DDL,
-            stateStructType=SUPERTREND_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
+    state machine; state is O(n_keys × 5 scalars). NULL ticks are
+    dropped: a NULL close would poison the (atr, bands) state, and the
+    recursive-CTE oracle (_stream_supertrend_sql) filters them too."""
+    return _keyed_state(sdf, _TICK_COLS, _supertrend_step(alpha, mult),
+                        init=(math.nan, math.nan, math.nan, 0, math.nan,
+                              False),
+                        state_ddl=SUPERTREND_STATE_DDL,
+                        output_ddl=SUPERTREND_OUTPUT_DDL, drop_null=True)
 
 
 # ---------------------------------------------------------------------------
@@ -340,54 +302,31 @@ TRANSITIONS_OUTPUT_DDL = "user_id BIGINT, from_type STRING, to_type STRING"
 TRANSITIONS_STATE_DDL = "last_type STRING"
 
 
-def _transition_fn():
+def _transition_step(state, pdf):
     """Per-key consecutive (event, next event) pair emitter: the only
     state is the key's LAST event type, carried across micro-batches
     so the pair straddling a batch boundary is emitted exactly once —
     the streaming twin of the batch lead() in
     operators/behavior.q_event_transitions."""
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        last = state.get[0] if state.exists else None
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((last,))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
-        frm: list = []
-        to: list = []
-        for t in pdf["event_type"].tolist():
-            if last is not None:
-                frm.append(last)
-                to.append(t)
-            last = t
-        state.update((last,))
-        if frm:
-            yield pd.DataFrame({
-                "user_id": user_id,
-                "from_type": frm,
-                "to_type": to,
-            })
-
-    return fn
+    (last,) = state
+    frm: list = []
+    to: list = []
+    for t in pdf["event_type"].tolist():
+        if last is not None:
+            frm.append(last)
+            to.append(t)
+        last = t
+    return (last,), ({"from_type": frm, "to_type": to} if frm else None)
 
 
 def transitions_per_key(sdf: DataFrame) -> DataFrame:
     """Streaming per-key transition pair stream; state is ONE string
     per key — the cheapest possible stateful operator."""
-    return (
-        sdf.select("user_id", "event_type", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transition_fn(),
-            outputStructType=TRANSITIONS_OUTPUT_DDL,
-            stateStructType=TRANSITIONS_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(sdf, ["event_type", "ts", "event_id"],
+                        _transition_step, init=(None,),
+                        state_ddl=TRANSITIONS_STATE_DDL,
+                        output_ddl=TRANSITIONS_OUTPUT_DDL)
+
 
 #: Output mirrors the batch Holt kernel's per-row trajectory
 #: (operators/ewm.q_holt_forecast computes the same recurrence).
@@ -396,27 +335,14 @@ HOLT_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 HOLT_STATE_DDL = "lvl DOUBLE, trend DOUBLE, started BOOLEAN"
 
 
-def _holt_fn(a: float, b_const: float):
+def _holt_step(a: float, b_const: float):
     """Checkpointed continuation of the coupled Holt recurrence —
     the same operation order as the batch kernel
     (operators/ewm.q_holt_forecast), so the streamed trajectory is
     bit-identical to the batch fit when events arrive in order."""
-    import math
 
-    import numpy as np
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            lvl, trend, started = state.get
-        else:
-            lvl, trend, started = math.nan, math.nan, False
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((lvl, trend, started))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        lvl, trend, started = state
         vals = pdf["value"].to_numpy(dtype="float64")
         out_l = np.empty(len(vals), dtype="float64")
         out_b = np.empty(len(vals), dtype="float64")
@@ -429,17 +355,15 @@ def _holt_fn(a: float, b_const: float):
                 lvl = l2
             out_l[i] = lvl
             out_b[i] = trend
-        state.update((lvl, trend, started))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (lvl, trend, started), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
             "holt_level": out_l,
             "holt_trend": out_b,
-        })
+        }
 
-    return fn
+    return step
 
 
 #: Output mirrors the batch Kalman kernel's per-row trajectory
@@ -450,29 +374,16 @@ KALMAN_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 KALMAN_STATE_DDL = "lvl DOUBLE, p DOUBLE, started BOOLEAN"
 
 
-def _kalman_fn(q_noise: float, r_noise: float):
+def _kalman_step(q_noise: float, r_noise: float):
     """Checkpointed continuation of the coupled Kalman (level,
     variance) recurrence — identical operation order to the batch
     kernel (operators/ewm.q_kalman_level), so the streamed trajectory
     is bit-identical to the batch fit when events arrive in order.
     The first observation of a key has no gain (NaN here; the caller
     normalizes to NULL to match the oracle's first recursive row)."""
-    import math
 
-    import numpy as np
-
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            lvl, p, started = state.get
-        else:
-            lvl, p, started = math.nan, math.nan, False
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((lvl, p, started))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        lvl, p, started = state
         vals = pdf["value"].to_numpy(dtype="float64")
         out_l = np.empty(len(vals), dtype="float64")
         out_p = np.empty(len(vals), dtype="float64")
@@ -488,176 +399,73 @@ def _kalman_fn(q_noise: float, r_noise: float):
             out_l[i] = lvl
             out_p[i] = p
             out_k[i] = gain
-        state.update((lvl, p, started))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (lvl, p, started), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
             "kal_level": out_l,
             "kal_p": out_p,
             "kal_gain": out_k,
-        })
+        }
 
-    return fn
+    return step
 
 
 def kalman_per_key(sdf: DataFrame, q_noise: float = 0.01,
                    r_noise: float = 1.0) -> DataFrame:
     """Streaming Kalman local-level filter per user_id with
     checkpointed (level, variance) state — O(n_keys × 2 doubles).
-    NULLs are dropped before the kernel (the holt_per_key contract:
-    a NULL would poison the checkpointed state while the oracle
+    NULL ticks are dropped (they would poison the state; the oracle
     filters them)."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _kalman_fn(q_noise, r_noise),
-            outputStructType=KALMAN_OUTPUT_DDL,
-            stateStructType=KALMAN_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(sdf, _TICK_COLS, _kalman_step(q_noise, r_noise),
+                        init=(math.nan, math.nan, False),
+                        state_ddl=KALMAN_STATE_DDL,
+                        output_ddl=KALMAN_OUTPUT_DDL, drop_null=True)
 
 
 def holt_per_key(sdf: DataFrame, a: float = 0.2,
                  b_const: float = 0.1) -> DataFrame:
     """Streaming Holt level+trend per user_id with checkpointed
     coupled state (lvl, trend, started) — O(n_keys × 2 doubles).
-
-    NULL values are dropped BEFORE the stateful kernel: a NULL would
-    become NaN and permanently poison the checkpointed (level, trend)
+    NULL ticks are dropped: a NaN would poison the (level, trend)
     pair, while the oracle (_stream_holt_sql) and the batch sibling
-    q_holt_forecast both filter WHERE value IS NOT NULL — the filter
-    keeps stream/batch/oracle row sets identical."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _holt_fn(a, b_const),
-            outputStructType=HOLT_OUTPUT_DDL,
-            stateStructType=HOLT_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    q_holt_forecast both filter WHERE value IS NOT NULL."""
+    return _keyed_state(sdf, _TICK_COLS, _holt_step(a, b_const),
+                        init=(math.nan, math.nan, False),
+                        state_ddl=HOLT_STATE_DDL,
+                        output_ddl=HOLT_OUTPUT_DDL, drop_null=True)
 
 
 # ---------------------------------------------------------------------------
-# Running peak / drawdown via transformWithStateInPandas (the Spark 4
-# arbitrary-state v2 API — typed per-key state handles, RocksDB-backed)
+# Running peak / drawdown
 # ---------------------------------------------------------------------------
 
 DRAWDOWN_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
                        "value DOUBLE, peak DOUBLE, drawdown DOUBLE")
+DRAWDOWN_STATE_DDL = "peak DOUBLE"
 
 
-def _v2_api_available() -> bool:
-    """transformWithStateInPandas speaks protobuf between the JVM and
-    the Python state server; the harness image ships pyspark without
-    `google.protobuf`, so the v2 path is selected only when it can
-    actually run."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def drawdown_per_key(sdf: DataFrame) -> DataFrame:
-    """Per-key running peak and drawdown (peak − value) — the risk
-    metric every trading dashboard keeps per symbol. Two
-    implementations with identical output: the Spark 4
-    arbitrary-state v2 API (`transformWithStateInPandas`, typed
-    ValueState, RocksDB) when its protobuf dependency exists, else
-    the v1 `applyInPandasWithState` form. Same shuffle shape either
-    way (one hash exchange); state is one double per key."""
-    if not _v2_api_available():
-        return _drawdown_per_key_v1(sdf)
-    return _drawdown_per_key_v2(sdf)
-
-
-def _cummax_frame(pdf: pd.DataFrame, prev_peak: float, user_id) -> tuple:
-    """Shared kernel: sort, numpy cummax seeded with the prior peak,
-    build the output frame. Returns (frame, new_peak)."""
-    import numpy as np
-    pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
+def _drawdown_step(state, pdf):
+    """numpy cummax seeded with the key's prior peak."""
     vals = pdf["value"].to_numpy(dtype="float64")
-    peaks = np.maximum.accumulate(np.r_[prev_peak, vals])[1:]
-    out = pd.DataFrame({
-        "user_id": int(user_id),
+    peaks = np.maximum.accumulate(np.r_[state[0], vals])[1:]
+    return (float(peaks[-1]),), {
         "event_id": pdf["event_id"].astype("int64"),
         "ts": pdf["ts"],
         "value": vals,
         "peak": peaks,
         "drawdown": peaks - vals,
-    })
-    return out, float(peaks[-1])
+    }
 
 
-def _drawdown_per_key_v1(sdf: DataFrame) -> DataFrame:
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        prev = state.get[0] if state.exists else float("-inf")
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((prev,))
-            return
-        out, peak = _cummax_frame(pd.concat(parts, ignore_index=True),
-                                  prev, user_id)
-        state.update((peak,))
-        yield out
-
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=DRAWDOWN_OUTPUT_DDL,
-            stateStructType="peak DOUBLE",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _drawdown_per_key_v2(sdf: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._peak = handle.getValueState("peak", "peak DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            parts = [pdf for pdf in rows if len(pdf)]
-            if not parts:
-                return
-            prev = (self._peak.get()[0] if self._peak.exists()
-                    else float("-inf"))
-            (user_id,) = key
-            out, peak = _cummax_frame(pd.concat(parts, ignore_index=True),
-                                      prev, user_id)
-            self._peak.update((peak,))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType=DRAWDOWN_OUTPUT_DDL,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
+def drawdown_per_key(sdf: DataFrame) -> DataFrame:
+    """Per-key running peak and drawdown (peak − value) — the risk
+    metric every trading dashboard keeps per symbol. State is one
+    double per key."""
+    return _keyed_state(sdf, _TICK_COLS, _drawdown_step,
+                        init=(float("-inf"),),
+                        state_ddl=DRAWDOWN_STATE_DDL,
+                        output_ddl=DRAWDOWN_OUTPUT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -676,7 +484,7 @@ CUSUM_K = 5.0
 CUSUM_H = 500.0
 
 
-def _cusum_fn(k_allow: float, h_thresh: float):
+def _cusum_step(k_allow: float, h_thresh: float):
     """Checkpointed continuation of the two-sided Page/CUSUM drift
     recursion — the LIVE twin of operators/stats.q_cusum_changepoint
     (that one locates a shift in a CLOSED series; this one flags it
@@ -694,18 +502,8 @@ def _cusum_fn(k_allow: float, h_thresh: float):
     clamps before the mean update), so trajectories — and therefore
     the drift booleans — are bit-identical."""
 
-    def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            i, mean, s_pos, s_neg = state.get
-        else:
-            i, mean, s_pos, s_neg = 0, 0.0, 0.0, 0.0
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            state.update((i, mean, s_pos, s_neg))
-            return
-        pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+    def step(state, pdf):
+        i, mean, s_pos, s_neg = state
         vals = pdf["value"].to_numpy(dtype="float64")
         out = {"run_mean": [], "s_pos": [], "s_neg": [], "drift": []}
         for y in vals:
@@ -722,40 +520,26 @@ def _cusum_fn(k_allow: float, h_thresh: float):
             out["s_pos"].append(s_pos)
             out["s_neg"].append(s_neg)
             out["drift"].append(s_pos > h_thresh or s_neg > h_thresh)
-        state.update((i, mean, s_pos, s_neg))
-        yield pd.DataFrame({
-            "user_id": user_id,
+        return (i, mean, s_pos, s_neg), {
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "value": vals,
-            "run_mean": out["run_mean"],
-            "s_pos": out["s_pos"],
-            "s_neg": out["s_neg"],
-            "drift": out["drift"],
-        })
+            **out,
+        }
 
-    return fn
+    return step
 
 
 def cusum_per_key(sdf: DataFrame, k_allow: float = CUSUM_K,
                   h_thresh: float = CUSUM_H) -> DataFrame:
     """Streaming two-sided CUSUM drift detector per user_id with
     checkpointed (i, mean, S⁺, S⁻) state — O(n_keys × 4 scalars).
-    NULL values are dropped before the kernel (the kalman_per_key
-    contract: a NULL would poison the checkpointed state while the
-    oracle filters them)."""
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cusum_fn(k_allow, h_thresh),
-            outputStructType=CUSUM_OUTPUT_DDL,
-            stateStructType=CUSUM_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    NULL ticks are dropped (they would poison the state; the oracle
+    filters them)."""
+    return _keyed_state(sdf, _TICK_COLS, _cusum_step(k_allow, h_thresh),
+                        init=(0, 0.0, 0.0, 0.0),
+                        state_ddl=CUSUM_STATE_DDL,
+                        output_ddl=CUSUM_OUTPUT_DDL, drop_null=True)
 
 
 # ---------------------------------------------------------------------------

@@ -229,6 +229,24 @@ def test_processing_time_cadence(spark):
     assert n_live == n_batch > 0
 
 
+def test_stream_runs_leave_no_memory_sink_views(spark):
+    """run_available_now drops its memory-sink view once it holds the
+    result: two runs of a stream_* query add no `mem_*` table to the
+    catalog, and the returned frames still answer actions."""
+    from big_data_share_market_spark.registry import all_queries
+
+    def mem_tables():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("mem_")}
+
+    before = mem_tables()
+    fn, _ = all_queries()["stream_ema_per_key"]
+    first, second = fn(spark, SF_DIR), fn(spark, SF_DIR)
+    assert mem_tables() == before
+    assert first.count() == second.count() > 0
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
 def test_kafka_builders_configured(spark):
     """A5/A6 without a broker: the configured reader/writer must carry
     the reference's options (earliest offsets, tolerant decode, keyed

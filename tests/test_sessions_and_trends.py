@@ -5,6 +5,8 @@ the fixture parity harness:
   hand, boundary gaps, single-event sessions);
 - the EventTimeTimeout session state machine (fake GroupState — the
   timeout branch, in-batch closure, the empty-iterator re-arm path);
+- the NoTimeout keyed state machines on the shared adapter (same
+  rows and state however the input splits into micro-batches);
 - Theil–Sen exact recovery with injected outliers (Spark).
 """
 
@@ -253,6 +255,156 @@ def test_state_fn_vectorized_matches_scalar_reference_randomized():
             want.extend(emitted)
         assert got == want
         assert state.get == ref_state
+
+
+class _CaptureStream:
+    """Stands in for a streaming DataFrame: records the column select,
+    the optional ``value IS NOT NULL`` filter and the function handed
+    to ``applyInPandasWithState``, so a test can drive that function
+    by hand with :class:`_FakeState`."""
+
+    def __init__(self):
+        self.cols, self.drop_null, self.call = None, False, None
+
+    def select(self, *cols):
+        self.cols = list(cols)
+        return self
+
+    def filter(self, cond):
+        from pyspark.sql import functions as F
+
+        assert str(cond) == str(F.col("value").isNotNull())
+        self.drop_null = True
+        return self
+
+    def groupBy(self, *keys):
+        assert keys == ("user_id",)
+        return self
+
+    def applyInPandasWithState(self, func, outputStructType,
+                               stateStructType, outputMode, timeoutConf):
+        self.call = (func, outputStructType, outputMode)
+        return self
+
+
+def _split_series(seed: int = 20261017, n_keys: int = 4,
+                  per_key: int = 30) -> pd.DataFrame:
+    """A seeded multi-key tick series with NULL values and runs of
+    equal ``ts`` (ties broken by event_id), rows in random order."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    n = n_keys * per_key
+    values = 100.0 + np.cumsum(rng.normal(0.0, 2.0, n))
+    values[rng.random(n) < 0.12] = np.nan
+    return pd.DataFrame({
+        "user_id": np.repeat(np.arange(1, n_keys + 1), per_key),
+        "event_id": rng.permutation(n).astype("int64"),
+        "ts": (pd.Timestamp(T0)
+               + pd.to_timedelta(rng.integers(0, per_key // 2, n), unit="s")
+               ).astype("datetime64[ns]"),
+        "value": values,
+        "event_type": rng.choice(["view", "click", "cart", "purchase"], n),
+    })
+
+
+def _norm_state(v):
+    """State tuples compared exactly, NaN included (float.hex)."""
+    if isinstance(v, (list, tuple)):
+        return tuple(_norm_state(x) for x in v)
+    if isinstance(v, float):
+        return ("f", v.hex())
+    if hasattr(v, "item"):  # numpy scalar
+        return _norm_state(v.item())
+    return v
+
+
+def _replay(func, mode, batches):
+    """Drive a captured state function over micro-batches the way
+    Spark does: once per key with rows, each key's rows split over
+    two input frames, state carried between batches."""
+    states: dict = {}
+    outs: dict = {}
+    for batch in batches:
+        for uid, rows in batch.groupby("user_id", sort=True):
+            half = len(rows) // 2
+            frames = [rows.iloc[:half], rows.iloc[half:]]
+            state = states.setdefault(uid, _FakeState())
+            emitted = list(func((int(uid),), iter(frames), state))
+            if mode == "update":  # the key's latest emission holds
+                outs[uid] = emitted
+            else:
+                outs.setdefault(uid, []).extend(emitted)
+    frames = [f for uid in sorted(outs) for f in outs[uid]]
+    out = pd.concat(frames, ignore_index=True)
+    return out, {uid: _norm_state(s.get) for uid, s in states.items()}
+
+
+_STATE_MACHINES = [
+    ("last_n_per_key", {"n": 5}), ("ema_per_key", {}),
+    ("atr_per_key", {}), ("supertrend_per_key", {}),
+    ("transitions_per_key", {}), ("holt_per_key", {}),
+    ("kalman_per_key", {}), ("drawdown_per_key", {}),
+    ("cusum_per_key", {}),
+]
+
+
+@pytest.mark.usefixtures("spark")
+@pytest.mark.parametrize("name,kwargs", _STATE_MACHINES,
+                         ids=[m for m, _ in _STATE_MACHINES])
+def test_state_machine_output_independent_of_batch_split(name, kwargs):
+    """Every NoTimeout keyed state machine must emit the same rows and
+    leave the same state whether the series arrives as one micro-batch
+    or as three that carry state between them. The oracle replays read
+    one fixture file, so they only ever see a single micro-batch."""
+    import numpy as np
+
+    from big_data_share_market_spark.streaming import state as st
+
+    cap = _CaptureStream()
+    getattr(st, name)(cap, **kwargs)
+    func, output_ddl, mode = cap.call
+    series = _split_series()[cap.cols]
+    if cap.drop_null:
+        series = series[series["value"].notna()]
+    ordered = series.sort_values(["ts", "event_id"])
+    assert ordered["ts"].duplicated().any()
+    if "value" in cap.cols and not cap.drop_null:
+        assert ordered["value"].isna().any()
+
+    rng = np.random.default_rng(7)
+
+    def shuffled(df):
+        return df.iloc[rng.permutation(len(df))]
+
+    n = len(ordered)
+    cuts = [0, n // 3, 2 * n // 3, n]
+    split = [shuffled(ordered.iloc[a:b]) for a, b in zip(cuts, cuts[1:])]
+    whole_out, whole_state = _replay(func, mode, [shuffled(ordered)])
+    split_out, split_state = _replay(func, mode, split)
+
+    assert list(whole_out.columns) == [
+        c.split()[0] for c in output_ddl.split(",")]
+    assert len(whole_out) > 0
+    pd.testing.assert_frame_equal(split_out, whole_out, check_exact=True)
+    assert split_state == whole_state
+
+
+def test_state_machines_share_one_adapter():
+    """The keyed state machines run on `_keyed_state`: state.py holds
+    one applyInPandasWithState call for them plus sessionization's
+    own (EventTimeTimeout), and the v2 transformWithStateInPandas path
+    stays gone from the package."""
+    import pathlib
+
+    import big_data_share_market_spark as pkg
+    from big_data_share_market_spark.streaming import state as st
+
+    src = pathlib.Path(st.__file__).read_text()
+    assert src.count(".applyInPandasWithState(") == 2
+    root = pathlib.Path(pkg.__file__).parent
+    assert not [p for p in root.rglob("*.py")
+                if "transformWithStateInPandas" in p.read_text()]
 
 
 @pytest.mark.usefixtures("spark")
