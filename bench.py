@@ -294,37 +294,24 @@ def _staging_probe(spark) -> dict:
     """Cold staged-relation build cost (r10 verdict item 8): the
     staged families are materialized HERE, before the untimed warmup,
     so the cost the warmup otherwise hides gets a recorded number.
-    Families are built in dependency order, so each row is that
-    family's INCREMENTAL cold cost. Timing only — the staged entries
-    are exactly the ones the warmup would have built; no timed-region
-    change."""
-    from big_data_share_market_spark.operators import (
-        bpe, dedup, finance, graph, similarity, sqlfeatures, stats,
-        text, transforms)
+    Timing only — the staged entries are exactly the ones the warmup
+    would have built; no timed-region change."""
+    from pyspark.sql import DataFrame
 
-    families = [
-        ("dedup.shingles", lambda: dedup._shingled(spark, SF_DIR).count()),
-        ("dedup.shingle_df", lambda: dedup._shingle_df(spark, SF_DIR).count()),
-        ("dedup.minhash_sigs", lambda: dedup._minhash_sigs(spark, SF_DIR).count()),
-        ("dedup.simhash_table", lambda: dedup._simhash_staged(spark, SF_DIR).count()),
-        ("dedup.cc_labels", lambda: dedup._cc_labels(spark, SF_DIR).count()),
-        ("text.tokens", lambda: text.staged_tokens(spark, SF_DIR).count()),
-        ("text.tfidf_index", lambda: text._tfidf_vectors(spark, SF_DIR).count()),
-        ("graph.adjacency", lambda: graph._co_adjacency(spark, SF_DIR)),
-        ("graph.oriented", lambda: graph._oriented_adjacency(spark, SF_DIR)[0].count()),
-        ("graph.repeat_edges", lambda: graph._repeat_edges(spark, SF_DIR).count()),
-        ("transforms.bars", lambda: transforms.ohlc_bars(spark, SF_DIR).count()),
-        ("finance.daily_rets", lambda: finance._daily_rets(spark, SF_DIR).count()),
-        ("stats.paired_values", lambda: stats._paired_values(spark, SF_DIR).count()),
-        ("sqlfeatures.rcte_ranked", lambda: sqlfeatures._rcte_ranked(spark, SF_DIR).count()),
-        ("bpe.merges", lambda: bpe._merges_for(spark, SF_DIR)),
-        ("similarity.pq_codebook", lambda: similarity._pq_codebook(spark, SF_DIR)),
-    ]
+    from big_data_share_market_spark.staging import _BUILDERS
+
     out: dict[str, float] = {}
-    for name, build in families:
+    # Registration order is dependency order (a module imports the
+    # modules whose families it reads; inside a module a builder is
+    # defined after the builders it calls), so each row is that
+    # family's INCREMENTAL cold cost.
+    for name, build in _BUILDERS.items():
         t0 = time.perf_counter()
         try:
-            build()
+            value = build(spark, SF_DIR)
+            for item in value if isinstance(value, tuple) else (value,):
+                if isinstance(item, DataFrame):
+                    item.count()
         except Exception as exc:  # record, never fail the bench
             out[name] = -1.0
             print(f"staging probe {name} failed: {exc}", file=sys.stderr)

@@ -40,16 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import load_table
 
 _BPE_ITERS = 8
 #: Trainer vocabulary cap — bounds the driver-side artifact the same
 #: way DSIR's 4096-row hashed model does, regardless of corpus size.
 _BPE_TRAIN_TOP = 4096
-
-#: Learned merges per (applicationId, sf_dir); training is
-#: deterministic so this is pure reuse.
-_MERGE_CACHE: dict[tuple[str, str], list[tuple[str, str]]] = {}
 
 
 def _train_merges(wordcounts: list[tuple[str, int]]) -> list[tuple[str, str]]:
@@ -74,11 +71,10 @@ def _train_merges(wordcounts: list[tuple[str, int]]) -> list[tuple[str, str]]:
     return merges
 
 
+# Learned merges per (applicationId, sf_dir); training is
+# deterministic so this is pure reuse.
+@staged("bpe.merges")
 def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MERGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode_outer(
@@ -87,10 +83,8 @@ def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("w")).limit(_BPE_TRAIN_TOP))
-    merges = _train_merges(
+    return _train_merges(
         [(r["w"], r["cnt"]) for r in words.collect()])
-    _MERGE_CACHE[key] = merges
-    return merges
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

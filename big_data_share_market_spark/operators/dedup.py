@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import fan_out, load_table
 
 # Spark-side word-3-gram shingles (0-based); DuckDB mirror is 1-based.
@@ -43,10 +44,7 @@ sh AS (
 """
 
 
-#: Staged shingle corpus per (SparkContext, sf_dir) — see _shingled.
-_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("dedup.shingles")
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id → distinct word-3-gram shingle array, ≥3-word docs only,
     STAGED: persisted MEMORY_AND_DISK and cached per
@@ -74,10 +72,6 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange runs it at full width."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents").filter(
         F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")) >= 3)
     sh = (
@@ -87,7 +81,6 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shingles")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SH_CACHE[key] = sh
     return sh
 
 
@@ -145,10 +138,7 @@ _PAIR_EXPAND = (
     "y -> struct(x AS a_id, y AS b_id))))")
 
 
-#: Staged shingle document-frequency index per (SparkContext, sf_dir).
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("dedup.shingle_df")
 def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(shingle, df) document-frequency index over the staged shingle
     corpus, STAGED itself: four operators (Jaccard dedup ×2,
@@ -161,16 +151,11 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     its index."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DF_CACHE.get(key)
-    if cached is not None:
-        return cached
     sh = _shingled(spark, sf_dir)
     dfc = (sh.select(F.explode_outer("shingles").alias("shingle"))
            .filter(F.col("shingle").isNotNull())
            .groupBy("shingle").agg(F.count("*").alias("df"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    _DF_CACHE[key] = dfc
     return dfc
 
 
@@ -482,10 +467,7 @@ _MH_A = (769, 1543, 3079, 6151, 12289, 24593, 49157, 98317)
 _MH_B = (12345, 20264, 28183, 36102, 44021, 51940, 59859, 67778)
 
 
-#: Staged MinHash signature store per (SparkContext, sf_dir).
-_MH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("dedup.minhash_sigs")
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh0..mh7) MinHash signatures, STAGED like `_shingled`:
     persisted MEMORY_AND_DISK once per (SparkContext, sf_dir).
@@ -503,10 +485,6 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is re-read only to verify candidates)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MH_CACHE.get(key)
-    if cached is not None:
-        return cached
     sh = _shingled(spark, sf_dir)
     h0s = F.expr(
         "transform(shingles, s -> CAST(conv(substring(md5(s), 1, 15), 16, 10) "
@@ -519,7 +497,6 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, (a, b) in enumerate(zip(_MH_A, _MH_B))])
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _MH_CACHE[key] = sigs
     return sigs
 
 
@@ -724,10 +701,7 @@ def _simhash_kernel(batches):
                             "simhash": np.array(hashes, dtype=np.int64)})
 
 
-#: Staged SimHash table per (SparkContext, sf_dir).
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("dedup.simhash_table")
 def _simhash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) — the numpy Arrow kernel's output, STAGED
     like the shingle corpus and the MinHash signature store: the
@@ -741,15 +715,10 @@ def _simhash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is a narrow map pass over the corpus scan)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SIMHASH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
     simhash = (docs.select("doc_id", "text")
                .mapInPandas(_simhash_kernel, "doc_id long, simhash long")
                .persist(StorageLevel.MEMORY_AND_DISK))
-    _SIMHASH_CACHE[key] = simhash
     return simhash
 
 
@@ -1079,21 +1048,15 @@ def cc_alternating_edges(
     return labels, rounds
 
 
-#: Staged component labels per (applicationId, sf_dir): the CC loop's
-#: output is consumed by q_cc_alternating AND q_dedup_survivorship —
-#: both in the driver window and bench — and the labels are
-#: localCheckpointed anyway, so re-running the multi-round loop per
-#: consumer would be pure waste.
-_CC_CACHE: dict = {}
-
-
+# Staged component labels per (applicationId, sf_dir): the CC loop's
+# output is consumed by q_cc_alternating AND q_dedup_survivorship —
+# both in the driver window and bench — and the labels are
+# localCheckpointed anyway, so re-running the multi-round loop per
+# consumer would be pure waste.
+@staged("dedup.cc_labels")
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = minhash_pairs(spark, sf_dir).select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     labels, _rounds = cc_alternating_edges(pairs)
@@ -1104,7 +1067,6 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and fall to the ContextCleaner once this returns).
     labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
     labels.count()
-    _CC_CACHE[key] = labels
     return labels
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import dsum, dsum_sql
+from ..staging import staged
 from .transforms import (BARS_CTE, DAILY_CLOSE_CTE, bar_window, daily_close,
                          ohlc_bars)
 
@@ -219,18 +220,16 @@ _CORR_MIN_N = 15
 _CORR_TOP = 20
 
 
-#: Staged daily-returns relation per (applicationId, sf_dir) — the
-#: staging.py lifecycle, same rationale as transforms.ohlc_bars: four
-#: queries (corr_pairs, dow_seasonality, rolling_covariance,
-#: cross_sectional_momentum) consume the identical day-close return
-#: series, and rolling_covariance alone references it three times
-#: (universe + both self-join legs) — unstaged, Spark re-plans the
-#: bars→day→lag lineage per reference (measured 7.3 s warm at sf0.1;
-#: staged ~2 s). A production pipeline materializes exactly this
-#: keys×days rollup once.
-_DRETS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Staged daily-returns relation per (applicationId, sf_dir) — the
+# staging.py lifecycle, same rationale as transforms.ohlc_bars: four
+# queries (corr_pairs, dow_seasonality, rolling_covariance,
+# cross_sectional_momentum) consume the identical day-close return
+# series, and rolling_covariance alone references it three times
+# (universe + both self-join legs) — unstaged, Spark re-plans the
+# bars→day→lag lineage per reference (measured 7.3 s warm at sf0.1;
+# staged ~2 s). A production pipeline materializes exactly this
+# keys×days rollup once.
+@staged("finance.daily_rets")
 def _daily_rets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key DAILY returns for cross-key correlation: hourly bars
     are too sparse for pairwise timestamp overlap at low data density
@@ -238,10 +237,6 @@ def _daily_rets(spark: SparkSession, sf_dir: str) -> DataFrame:
     key closes every day. Day-close semantics shared with the scale
     rollup via transforms.daily_close; same quantization contract as
     _rets. STAGED (computed once per session/fixture, persisted)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DRETS_CACHE.get(key)
-    if cached is not None:
-        return cached
     from pyspark import StorageLevel
 
     daily = daily_close(spark, sf_dir)
@@ -252,7 +247,6 @@ def _daily_rets(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("ret_i", F.floor(F.col("ret") * F.lit(float(_Q))))
            .select("user_id", "day_ts", "ret_i")
            .persist(StorageLevel.MEMORY_AND_DISK))
-    _DRETS_CACHE[key] = out
     return out
 
 

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import load_table
 
 #: Damping = _DAMP_NUM/_DAMP_DEN; fixed iteration count; total rank
@@ -59,10 +60,8 @@ _DAMP_DEN = 100
 _ITERS = 5
 _TOTAL = 10 ** 15
 
-#: Staged (edges, degrees, n_nodes) per (SparkContext, sf_dir).
-_EDGE_CACHE: dict = {}
 
-
+@staged("graph.adjacency")
 def _co_adjacency(spark: SparkSession, sf_dir: str):
     """Staged ADJACENCY-LIST form of the co-purchase graph:
     (src, dsts array, outdeg) — one row per node — plus node count.
@@ -81,10 +80,6 @@ def _co_adjacency(spark: SparkSession, sf_dir: str):
     chunks (same contract as the LSH bucket caps)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = (load_table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey").distinct())
     a = li.alias("a")
@@ -105,7 +100,6 @@ def _co_adjacency(spark: SparkSession, sf_dir: str):
     # relation in one tiny agg: q_part_pagerank sizes its per-round
     # frontier stage by the EDGE volume the stage explodes (r11).
     n_edges = adj.agg(F.sum("outdeg")).first()[0] or 0
-    _EDGE_CACHE[key] = (adj, n_nodes, n_edges)
     return adj, n_nodes, n_edges
 
 
@@ -210,9 +204,6 @@ SELECT node, units, CAST(units AS DOUBLE) / {float(_TOTAL)} AS rank
 FROM r{_ITERS}""")
 
 
-#: Staged (oriented edges, oriented adjacency) per (SparkContext, sf_dir).
-_TRI_CACHE: dict = {}
-
 #: Broadcast gate for the triangle query's V-sized adjacency sides:
 #: up to this many nodes the two adjacency joins broadcast (~10 MB at
 #: the sf0.1 graph's 20 k nodes — the fast single-stage plan); beyond
@@ -222,6 +213,7 @@ _TRI_CACHE: dict = {}
 _TRI_BCAST_MAX_NODES = 200_000
 
 
+@staged("graph.oriented")
 def _oriented_adjacency(spark: SparkSession, sf_dir: str):
     """Degree-ordered oriented edge set + its adjacency-list form,
     STAGED like _co_adjacency: the triangle query references the
@@ -230,10 +222,6 @@ def _oriented_adjacency(spark: SparkSession, sf_dir: str):
     reference — staging runs the orientation join once."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRI_CACHE.get(key)
-    if cached is not None:
-        return cached
     adj, _n, _e = _co_adjacency(spark, sf_dir)
     edges = adj.select("src", "outdeg", F.explode("dsts").alias("dst"))
     dd = adj.select(F.col("src").alias("dst"),
@@ -248,7 +236,6 @@ def _oriented_adjacency(spark: SparkSession, sf_dir: str):
                .agg(F.collect_list("dst").alias("outs"))
                .persist(StorageLevel.MEMORY_AND_DISK))
     out_adj.count()
-    _TRI_CACHE[key] = (oriented, out_adj)
     return oriented, out_adj
 
 
@@ -407,10 +394,8 @@ _KCORE_K = 2
 _KCORE_M = 2
 _KCORE_ROUNDS = 8
 
-#: Staged repeat-co-purchase edge relation per (appId, sf_dir).
-_KCORE_CACHE: dict = {}
 
-
+@staged("graph.repeat_edges")
 def _repeat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric co-purchase edges kept only when the pair co-occurs
     in ≥ _KCORE_M distinct orders — the REPEAT-signal graph (one
@@ -420,10 +405,6 @@ def _repeat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Staged: the peel loop references it _KCORE_ROUNDS + 2 times."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KCORE_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = (load_table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey").distinct())
     a, b = li.alias("a"), li.alias("b")
@@ -437,7 +418,6 @@ def _repeat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK))
     edges.count()
-    _KCORE_CACHE[key] = edges
     return edges
 
 

@@ -23,6 +23,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import fan_out, load_table
 from .dedup import _BUCKET_CAP
 
@@ -1261,22 +1262,20 @@ def _pq_d2_sql(vec: str, cent: str, s: int) -> str:
         f" * (CAST({vec}[i] AS DOUBLE) - {cent}[i]))), (acc, v) -> acc + v)")
 
 
-#: Collected codebook rows keyed by (applicationId, sf_dir). The
-#: codebook is a static OFFLINE artifact in any real PQ deployment
-#: (trained once, stored next to the index); recomputing the 2 s
-#: label-means aggregate on every probe would be the anti-pattern.
-#: Values are the exact doubles of the one computation, so parity
-#: with the oracle (which derives the same codebook in SQL) holds.
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str], list] = {}
+# Collected codebook rows keyed by (applicationId, sf_dir). The
+# codebook is a static OFFLINE artifact in any real PQ deployment
+# (trained once, stored next to the index); recomputing the 2 s
+# label-means aggregate on every probe would be the anti-pattern.
+# Values are the exact doubles of the one computation, so parity
+# with the oracle (which derives the same codebook in SQL) holds.
+@staged("similarity.pq_codebook")
+def _pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
+    return _centroids(spark, sf_dir).collect()
 
 
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CODEBOOK_CACHE:
-        _PQ_CODEBOOK_CACHE[key] = _centroids(spark, sf_dir).collect()
-    return spark.createDataFrame(
-        _PQ_CODEBOOK_CACHE[key],
-        "clabel int, centroid array<double>")
+    return spark.createDataFrame(_pq_codebook_rows(spark, sf_dir),
+                                 "clabel int, centroid array<double>")
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

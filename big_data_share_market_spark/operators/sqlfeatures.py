@@ -41,15 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import DEC, dsum_over_sql
+from ..staging import staged
 from ..tables import load_table
 
-
-#: Staged ranked input for the recursive Kalman (compute-once-per-
-#: (SparkContext, sf_dir), the staging.py lifecycle) — without it the
-#: recursion re-scans AND re-windows the base CTE at EVERY level
-#: (measured 44 s at sf0.1; Spark does not materialize non-recursive
-#: CTE terms the way DuckDB's MATERIALIZED does).
-_RCTE_CACHE: dict[tuple, DataFrame] = {}
 
 #: Last checkpointed recursion result per (app, fixture). The
 #: localCheckpoint blocks have TRUNCATED lineage and no auto-eviction,
@@ -64,11 +58,13 @@ _RCTE_CACHE: dict[tuple, DataFrame] = {}
 _RCTE_RESULT: dict[tuple, DataFrame] = {}
 
 
+# Staged ranked input for the recursive Kalman (compute-once-per-
+# (SparkContext, sf_dir), the staging.py lifecycle) — without it the
+# recursion re-scans AND re-windows the base CTE at EVERY level
+# (measured 44 s at sf0.1; Spark does not materialize non-recursive
+# CTE terms the way DuckDB's MATERIALIZED does).
+@staged("sqlfeatures.rcte_ranked")
 def _rcte_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RCTE_CACHE.get(key)
-    if cached is not None:
-        return cached
     from pyspark import StorageLevel
 
     load_table(spark, sf_dir, "events").createOrReplaceTempView(
@@ -80,7 +76,6 @@ def _rcte_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY ts, event_id) AS rn
         FROM rcte_events WHERE value IS NOT NULL
     """).persist(StorageLevel.MEMORY_AND_DISK)
-    _RCTE_CACHE[key] = ranked
     return ranked
 
 

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import DEC
+from ..staging import staged
 from ..tables import load_table
 
 
@@ -355,14 +356,6 @@ ORDER BY user_id
 """
 
 
-#: Staged paired-cohort relation per (applicationId, sf_dir) — the
-#: staging.py "compute once, sweep many" pattern: `spearman_corr`
-#: alone references the pairing 3× (the pair stream + both rank-map
-#: builds) and Spark re-executes unpersisted common subtrees per
-#: reference (18 exchanges → 8 once staged).
-_PAIRED_CACHE: dict = {}
-
-
 def q_seasonal_strength_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOW seasonal is each key? One-way-ANOVA eta² of day-of-week
     over the daily value totals — the scalar score next to
@@ -583,6 +576,12 @@ ORDER BY user_id, level_seg
 """
 
 
+# Staged paired-cohort relation per (applicationId, sf_dir) — the
+# staging.py "compute once, sweep many" pattern: `spearman_corr`
+# alone references the pairing 3× (the pair stream + both rank-map
+# builds) and Spark re-executes unpersisted common subtrees per
+# reference (18 exchanges → 8 once staged).
+@staged("stats.paired_values")
 def _paired_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic subject pairing shared by the paired statistics
     (`wilcoxon_signed_rank`, `spearman_corr`, `kendall_tau_pairs`):
@@ -590,11 +589,7 @@ def _paired_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('purchase') event per user, both ranked by (ts, event_id) — one
     row_number window + one equi-join on (user_id, rn), unmatched
     tails dropped. Returns (user_id, rn, va, vb), STAGED (persisted
-    once per session/fixture; see `_PAIRED_CACHE`)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIRED_CACHE.get(key)
-    if cached is not None:
-        return cached
+    once per session/fixture)."""
     e = (load_table(spark, sf_dir, "events")
          .where(F.col("event_type").isin(_KS_A, _KS_B))
          .select("user_id", "event_id", "ts",
@@ -608,7 +603,6 @@ def _paired_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        F.col("v").alias("vb"))
     from pyspark import StorageLevel
     p = a.join(b, ["user_id", "rn"]).persist(StorageLevel.MEMORY_AND_DISK)
-    _PAIRED_CACHE[key] = p
     return p
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import load_table
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -22,10 +23,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-#: Staged tokenized corpus per (SparkContext, sf_dir) — see staged_tokens.
-_TOK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("text.tokens")
 def staged_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, toks, n_chars) — the normalized token array for
     every document, STAGED: persisted MEMORY_AND_DISK once per
@@ -49,19 +47,14 @@ def staged_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..tables import fan_out
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TOK_CACHE.get(key)
-    if cached is not None:
-        return cached
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    staged = (
+    corpus = (
         fan_out(spark, _docs(spark, sf_dir))
         .select("doc_id", "lang", toks.alias("toks"),
                 F.length("text").alias("n_chars"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _TOK_CACHE[key] = staged
-    return staged
+    return corpus
 
 
 # ---------------------------------------------------------------------------
@@ -746,10 +739,7 @@ _W_SCALE = 10_000
 _TFIDF_TOP_PAIRS = 20
 
 
-#: Staged quantized TF-IDF index per (SparkContext, sf_dir).
-_TFIDF_VEC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged("text.tfidf_index")
 def _tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, term, df, wq) — the df-capped quantized TF-IDF
     inverted index, STAGED: the similarity join references it three
@@ -759,10 +749,6 @@ def _tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per corpus, swept by every query."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TFIDF_VEC_CACHE.get(key)
-    if cached is not None:
-        return cached
     tok = staged_tokens(spark, sf_dir)
     n_docs = tok.count()  # scalar off the staged relation, no rescan
     tf = (tok.select("doc_id", F.explode_outer("toks").alias("term"))
@@ -777,7 +763,6 @@ def _tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "term")
            .select("doc_id", "term", "df", wq.alias("wq"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    _TFIDF_VEC_CACHE[key] = vec
     return vec
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import load_table
 
 #: DuckDB oracle CTE mirroring :func:`ohlc_bars` — reused by every
@@ -38,14 +39,12 @@ bars AS (
 """
 
 
-#: Staged hourly-bar relation per (applicationId, sf_dir) — see
-#: staging.py for the lifecycle. ~20 indicator/pattern/finance
-#: queries consume the same bar aggregation; a production deployment
-#: materializes exactly this rollup once (it is 1/3600th of the event
-#: rows), and local persist() is its stand-in.
-_BARS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Staged hourly-bar relation per (applicationId, sf_dir) — see
+# staging.py for the lifecycle. ~20 indicator/pattern/finance
+# queries consume the same bar aggregation; a production deployment
+# materializes exactly this rollup once (it is 1/3600th of the event
+# rows), and local persist() is its stand-in.
+@staged("transforms.bars")
 def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour OHLCV bars per key from the raw event stream,
     STAGED (computed once per session/fixture, persisted).
@@ -55,10 +54,6 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BARS_CACHE.get(key)
-    if cached is not None:
-        return cached
     ev = load_table(spark, sf_dir, "events")
     order_key = F.struct(F.col("ts"), F.col("event_id"))
     bars = (
@@ -72,7 +67,6 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BARS_CACHE[key] = bars
     return bars
 
 

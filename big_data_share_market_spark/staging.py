@@ -1,72 +1,82 @@
 """Staged-relation lifecycle management.
 
-Six operator families stage a persisted relation per
-(SparkContext, sf_dir) — the "compute once, sweep many" pattern a
-production pipeline materializes to a staging store:
+A staged family is a shared relation that many queries read: it is
+built once per (SparkContext, fixture) and then reused — the
+"compute once, sweep many" pattern a production pipeline
+materializes to a staging store (the hourly bar rollup, the shingled
+and tokenized corpora, the graph adjacency lists, ...).
 
-  * dedup._shingled           — shingled corpus
-  * dedup._shingle_df         — shingle document-frequency index
-  * dedup (MinHash/SimHash)   — signature stores
-  * text.staged_tokens        — tokenized corpus
-  * graph._co_adjacency       — co-purchase adjacency lists
-  * transforms.ohlc_bars      — hourly OHLCV bar rollup
+A family is declared once, with `@staged("<module>.<family>")` on a
+builder `(spark, sf_dir) -> value`:
 
-persist() is local-mode's equivalent of that store, but a long-lived
-session (a notebook, a query service) eventually wants the memory
-back. `unpersist_staged` releases every staged relation and clears
-the cache registries, so the next query transparently re-stages;
-`staged_relations` reports what is currently held (the operational
-"what is pinned in my cluster's storage memory" question).
+  * the memo key is `(spark.sparkContext.applicationId, sf_dir)`, so
+    a new SparkContext never sees a stale handle;
+  * the first call per key runs the builder and memoizes its value;
+    later calls return that value without running the builder;
+  * families register in decoration (import) order — a module imports
+    the modules whose families it reads, and inside a module a
+    builder is defined after the builders it calls, so registration
+    order is dependency order;
+  * builders own their persist: each calls
+    `.persist(StorageLevel.MEMORY_AND_DISK)` itself (some must persist
+    before their own eager `count()`). A value is a DataFrame, a tuple
+    holding DataFrames, or a driver-side Python value (BPE merge
+    table, PQ codebook rows) that needs no release.
 
-Driver-side artifact caches that hold plain Python values (BPE merge
-tables, PQ codebooks) are cleared too — they are rebuilt from the
-staged relations' sources on demand.
+persist() is local-mode's equivalent of the staging store, but a
+long-lived session (a notebook, a query service) eventually wants the
+memory back. `unpersist_staged` unpersists every DataFrame held in the
+registry (tuple members included) and empties every family's memo, so
+the next query transparently re-stages; `staged_relations` reports
+what is currently held (the operational "what is pinned in my
+cluster's storage memory" question).
 """
 
 from __future__ import annotations
 
-from typing import Any
+import functools
+from typing import Any, Callable
+
+#: family -> {(applicationId, sf_dir): staged value}, in registration order.
+_REGISTRY: dict[str, dict[tuple[str, str], Any]] = {}
+#: family -> its memoizing builder, in registration order.
+_BUILDERS: dict[str, Callable[[Any, str], Any]] = {}
 
 
-def _cache_registries() -> list[tuple[str, dict]]:
-    from .operators import (bpe, dedup, finance, graph, similarity,
-                            sqlfeatures, stats, text, transforms)
+def staged(family: str) -> Callable[[Callable], Callable]:
+    """Register `family` and memoize its builder per
+    (applicationId, sf_dir) in the module registry."""
+    def register(build: Callable[[Any, str], Any]) -> Callable[[Any, str], Any]:
+        if family in _REGISTRY:
+            raise ValueError(f"staged family {family!r} registered twice")
+        memo = _REGISTRY[family] = {}
 
-    return [
-        ("stats.paired_values", stats._PAIRED_CACHE),
-        ("transforms.bars", transforms._BARS_CACHE),
-        ("finance.daily_rets", finance._DRETS_CACHE),
-        ("dedup.shingles", dedup._SH_CACHE),
-        ("dedup.shingle_df", dedup._DF_CACHE),
-        ("dedup.minhash_sigs", dedup._MH_CACHE),
-        ("dedup.simhash_table", dedup._SIMHASH_CACHE),
-        ("text.tokens", text._TOK_CACHE),
-        ("sqlfeatures.rcte_ranked", sqlfeatures._RCTE_CACHE),
-        ("text.tfidf_index", text._TFIDF_VEC_CACHE),
-        ("graph.adjacency", graph._EDGE_CACHE),
-        ("graph.oriented", graph._TRI_CACHE),
-        ("graph.repeat_edges", graph._KCORE_CACHE),
-        ("dedup.cc_labels", dedup._CC_CACHE),
-        ("bpe.merges", bpe._MERGE_CACHE),
-        ("similarity.pq_codebook", similarity._PQ_CODEBOOK_CACHE),
-    ]
+        @functools.wraps(build)
+        def builder(spark, sf_dir: str):
+            key = (spark.sparkContext.applicationId, sf_dir)
+            if key not in memo:
+                memo[key] = build(spark, sf_dir)
+            return memo[key]
+
+        _BUILDERS[family] = builder
+        return builder
+    return register
 
 
 def staged_relations() -> dict[str, list[tuple[Any, ...]]]:
     """Registry name → list of (applicationId, sf_dir) keys currently
     staged. Purely informational; touches no Spark state."""
-    return {name: sorted(reg.keys())
-            for name, reg in _cache_registries() if reg}
+    return {name: sorted(memo) for name, memo in _REGISTRY.items() if memo}
 
 
 def unpersist_staged(blocking: bool = False) -> int:
-    """Unpersist every staged DataFrame and clear all cache
-    registries. Returns the number of entries released. Safe to call
-    with no active SparkContext (driver-side caches still clear);
-    subsequent queries re-stage on first use."""
+    """Unpersist every staged DataFrame and empty every family's memo.
+    Returns the number of entries released. Safe to call with no
+    active SparkContext (driver-side values still clear); subsequent
+    queries re-stage on first use."""
     released = 0
-    for _, reg in _cache_registries():
-        for val in reg.values():
+    for memo in _REGISTRY.values():
+        for val in memo.values():
             entry = val if isinstance(val, tuple) else (val,)
             for item in entry:
                 if hasattr(item, "unpersist"):
@@ -77,5 +87,5 @@ def unpersist_staged(blocking: bool = False) -> int:
                         # the JVM-side memory is already gone.
                         pass
             released += 1
-        reg.clear()
+        memo.clear()
     return released

@@ -12,7 +12,6 @@ prunes partitions.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -25,19 +24,7 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
-        # reader rejects. Read nanos as int64 and truncate to micros —
-        # exactly what DuckDB does (verified: ...778549829 ns → ...778549 µs),
-        # so the oracle sees identical values. `div` is integral division
-        # (a double divide would lose precision above 2^53).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(path)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:

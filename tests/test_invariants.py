@@ -456,6 +456,95 @@ def test_unpersist_staged_releases_and_restages(spark):
     assert staging.staged_relations().get("text.tokens")
 
 
+def test_every_staged_family_releases(spark):
+    """Every registered family persists what it stages, and
+    unpersist_staged releases every DataFrame it holds (tuple members
+    included) — not just the families a spot check happens to build."""
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
+
+    from big_data_share_market_spark import staging
+
+    key = (spark.sparkContext.applicationId, SF_DIR)
+    handles = {}
+    for family, build in staging._BUILDERS.items():
+        build(spark, SF_DIR)
+        value = staging._REGISTRY[family][key]
+        members = value if isinstance(value, tuple) else (value,)
+        for i, item in enumerate(members):
+            if isinstance(item, DataFrame):
+                handles[f"{family}[{i}]"] = item
+    assert len(handles) >= 14, sorted(handles)
+    held = {name for name, df in handles.items()
+            if df.storageLevel != StorageLevel.NONE}
+    assert held == set(handles)
+
+    staging.unpersist_staged()
+    still = {name for name, df in handles.items()
+             if df.storageLevel != StorageLevel.NONE}
+    assert not still
+    assert staging.staged_relations() == {}
+
+
+def test_staged_families_are_declared_once():
+    """Every staged family is declared by its `@staged` decorator alone:
+    no module keeps a hand-rolled `_*_CACHE` dict beside the registry,
+    and each of the 16 family names is registered exactly once."""
+    import ast
+    import collections
+    import pathlib
+    import re
+
+    from big_data_share_market_spark import staging
+
+    all_queries()  # imports every operator module
+    pkg = pathlib.Path(staging.__file__).parent
+    caches, declared = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(node, ast.AnnAssign)
+                       else [])
+            caches += [f"{path.name}:{t.id}" for t in targets
+                       if isinstance(t, ast.Name)
+                       and re.fullmatch(r"_\w*_CACHE", t.id)]
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "staged"):
+                declared.append(node.args[0].value)
+    assert caches == []
+    dupes = [n for n, c in collections.Counter(declared).items() if c > 1]
+    assert dupes == []
+    assert set(declared) == set(staging._REGISTRY) == {
+        "transforms.bars", "finance.daily_rets", "stats.paired_values",
+        "dedup.shingles", "dedup.shingle_df", "dedup.minhash_sigs",
+        "dedup.simhash_table", "dedup.cc_labels", "text.tokens",
+        "text.tfidf_index", "graph.adjacency", "graph.oriented",
+        "graph.repeat_edges", "sqlfeatures.rcte_ranked", "bpe.merges",
+        "similarity.pq_codebook"}
+    assert list(staging._BUILDERS) == list(staging._REGISTRY)
+
+
+def test_load_table_leaves_session_conf_alone(spark):
+    """Loading `events` reads the fixture's timestamp[us] `ts` as a
+    Spark timestamp (TIMESTAMP_NTZ: the files are not UTC-adjusted)
+    and leaves the caller's session conf untouched — no legacy
+    nanos-as-long switch flipped on the way."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from big_data_share_market_spark.tables import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    ev = load_table(spark, SF_DIR, "events")
+    assert ev.count() > 0
+    assert spark.conf.get(key, "false") == "false"
+    assert isinstance(ev.schema["ts"].dataType,
+                      (TimestampType, TimestampNTZType))
+
+
 def test_mmr_picks_distinct_and_complete(spark):
     """MMR must select exactly K distinct candidates per query, pick 1
     must be the pure-relevance argmax (mmr_score = 0.7*rel), and later

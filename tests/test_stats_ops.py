@@ -162,8 +162,7 @@ def test_wilcoxon_matches_brute_force(spark, monkeypatch):
         "event_type",
         F.when(F.col("event_id") < 100, "click").otherwise("purchase"))
     monkeypatch.setattr(stats, "load_table", lambda *_: df)
-    monkeypatch.setattr(stats, "_PAIRED_CACHE", {})  # fresh pairing
-    (row,) = stats.q_wilcoxon_signed_rank(spark, "unused").collect()
+    (row,) = stats.q_wilcoxon_signed_rank(spark, "wilcoxon-pairs").collect()
     n, w_plus, var, z = _wilcoxon_brute(
         [x - y for x, y in zip(xs, ys)])
     assert row.n_nonzero == n
@@ -254,8 +253,7 @@ def test_spearman_matches_brute_force(spark, monkeypatch):
         "event_type",
         F.when(F.col("event_id") < 100, "click").otherwise("purchase"))
     monkeypatch.setattr(stats, "load_table", lambda *_: df)
-    monkeypatch.setattr(stats, "_PAIRED_CACHE", {})  # fresh pairing
-    (row,) = stats.q_spearman_corr(spark, "unused").collect()
+    (row,) = stats.q_spearman_corr(spark, "spearman-pairs").collect()
     ra, rb = np.array(_avg_ranks(xs)), np.array(_avg_ranks(ys))
     want = float(np.corrcoef(ra, rb)[0, 1])
     assert row.n_pairs == len(xs)
@@ -277,9 +275,8 @@ def test_kendall_tau_matches_brute_force(spark, monkeypatch):
         F.when(F.col("event_id") % 200 < 100, "click")
         .otherwise("purchase"))
     monkeypatch.setattr(stats, "load_table", lambda *_: df)
-    monkeypatch.setattr(stats, "_PAIRED_CACHE", {})  # fresh pairing
     got = {r.user_id: r for r in
-           stats.q_kendall_tau_pairs(spark, "unused").collect()}
+           stats.q_kendall_tau_pairs(spark, "kendall-pairs").collect()}
 
     # Direct double loop (sign product over i < j).
     cd = 0
