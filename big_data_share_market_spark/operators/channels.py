@@ -11,9 +11,16 @@ ewm.py:
 
 * rolling means go through the decimal-exact sum so the DuckDB oracle
   matches bit-for-bit, with NULL until the window holds n rows;
-* the one genuinely recursive smoothing (Wilder ATR) rides the shared
-  `_apply_ewm` partition-wide Arrow kernel (alpha = 1/n), oracle'd by
-  the same NULL-skipping `list_reduce`;
+* the recursive indicators run in one partition-wide Arrow pass each.
+  Wilder ATR (and every plain EMA here: chandelier exit, force index,
+  Elder ray, Chaikin oscillator) rides the shared `_apply_ewm` kernel
+  (alpha = 1/n), oracle'd by the same NULL-skipping `list_reduce`.
+  Parabolic SAR, supertrend, KAMA, TRIX and mass index are per-key
+  steps (`_sar_step`, `_supertrend_step`, `_kama_step`, `_trix_step`,
+  `_mass_step`; TRIX and mass index chain the shared `ewm._ewm_step`)
+  run by `ewm.keyed_scan`, oracle'd by recursive CTEs or list folds in
+  the same IEEE op order. The stream's supertrend_per_key runs the
+  same supertrend step on ticks;
 * CCI's mean absolute deviation — a window-of-window that neither
   engine can express as a plain frame aggregate — is folded over the
   frame's value list with the deviations QUANTIZED to integer 1e-9
@@ -21,20 +28,26 @@ ewm.py:
   across engines;
 * zero denominators yield NULL on both engines (nullif).
 
-Plan shape: everything is ONE hash exchange on user_id (the bar
-aggregation's own shuffle) followed by Window stages and, for ATR,
-one mapInPandas pass over the already-sorted layout — no extra
-exchanges, no joins. At 100 TB the cost is the bar groupBy; the
+Plan shape: the bar aggregation's hash exchange on user_id followed by
+Window stages and, for the recursive indicators, one mapInPandas pass
+over a key-sorted layout (the `_apply_ewm` riders reuse the Window
+layout; the `keyed_scan` callers stage their own key repartition) —
+no joins. At 100 TB the cost is the bar groupBy; the
 indicator math is map-side over ~1/3600th of the event rows.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import DEC
-from .ewm import _apply_ewm, _ewm_sql, _ORACLE_BAR_WINDOW
+from .ewm import (_apply_ewm, _ddl, _ewm_init, _ewm_sql, _ewm_step,
+                  _ORACLE_BAR_WINDOW, keyed_scan)
 from .indicators import _rolling_mean, _rolling_mean_sql
 from .transforms import BARS_CTE, bar_window, ohlc_bars
 
@@ -434,73 +447,56 @@ def q_parabolic_sar(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (bars.select("user_id", "bar_ts", "high", "low", "close")
               .repartition("user_id")
               .sortWithinPartitions("user_id", "bar_ts"))
-    schema = ("user_id bigint, bar_ts timestamp, close double, "
-              "sar double, trend int")
+    return keyed_scan(staged, _sar_step, init=None,
+                      cols=["high", "low", "close"],
+                      schema="user_id bigint, bar_ts timestamp, "
+                             "close double, sar double, trend int")
 
-    def kernel(batches):
-        import pandas as pd
 
-        key = None
-        st = None  # (i, trend, sar, ep, af, p1_low, p2_low, p1_high, p2_high, p1_close)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            highs = pdf["high"].to_numpy(dtype="float64")
-            lows = pdf["low"].to_numpy(dtype="float64")
-            closes = pdf["close"].to_numpy(dtype="float64")
-            out_sar: list[float | None] = []
-            out_trend: list[int | None] = []
-            for r in range(len(pdf)):
-                if keys[r] != key:
-                    key = keys[r]
-                    st = None
-                hi, lo, cl = highs[r], lows[r], closes[r]
-                if st is None:
-                    st = (1, None, None, None, None,
-                          lo, None, hi, None, cl)
-                    out_sar.append(None)
-                    out_trend.append(None)
-                    continue
-                (i, trend, sar, ep, af,
-                 p1_low, p2_low, p1_high, p2_high, p1_close) = st
-                if i == 1:
-                    trend = 1 if cl >= p1_close else -1
-                    sar = p1_low if trend == 1 else p1_high
-                    ep = hi if trend == 1 else lo
-                    af = 0.02
-                else:
-                    sar0 = sar + af * (ep - sar)
-                    if trend == 1:
-                        sar1 = min(sar0, p1_low, p2_low)
-                        rev = lo < sar1
-                    else:
-                        sar1 = max(sar0, p1_high, p2_high)
-                        rev = hi > sar1
-                    if rev:
-                        sar = ep
-                        ep = lo if trend == 1 else hi
-                        trend = -trend
-                        af = 0.02
-                    else:
-                        sar = sar1
-                        if trend == 1 and hi > ep:
-                            ep, af = hi, min(af + 0.02, 0.2)
-                        elif trend == -1 and lo < ep:
-                            ep, af = lo, min(af + 0.02, 0.2)
-                out_sar.append(sar)
-                out_trend.append(trend)
-                st = (i + 1, trend, sar, ep, af,
-                      lo, p1_low, hi, p1_high, cl)
-            yield pd.DataFrame({
-                "user_id": pdf["user_id"].astype("int64"),
-                "bar_ts": pdf["bar_ts"],
-                "close": closes,
-                "sar": pd.Series(out_sar, dtype="float64"),
-                "trend": pd.Series(out_trend, dtype="Int32"),
-            })
-
-    return staged.mapInPandas(kernel, schema=schema)
+def _sar_step(st, cols):
+    """Parabolic SAR step over one key's bars. State: None before the
+    key's first bar, else (i, trend, sar, ep, af, p1_low, p2_low,
+    p1_high, p2_high, p1_close). The first bar emits NaN sar and trend
+    (NULL after Arrow)."""
+    n = len(cols["close"])
+    out_sar = np.full(n, np.nan)
+    out_trend = np.full(n, np.nan)
+    bars = zip(cols["high"].tolist(), cols["low"].tolist(),
+               cols["close"].tolist())
+    for r, (hi, lo, cl) in enumerate(bars):
+        if st is None:
+            st = (1, None, None, None, None, lo, None, hi, None, cl)
+            continue
+        (i, trend, sar, ep, af,
+         p1_low, p2_low, p1_high, p2_high, p1_close) = st
+        if i == 1:
+            trend = 1 if cl >= p1_close else -1
+            sar = p1_low if trend == 1 else p1_high
+            ep = hi if trend == 1 else lo
+            af = 0.02
+        else:
+            sar0 = sar + af * (ep - sar)
+            if trend == 1:
+                sar1 = min(sar0, p1_low, p2_low)
+                rev = lo < sar1
+            else:
+                sar1 = max(sar0, p1_high, p2_high)
+                rev = hi > sar1
+            if rev:
+                sar = ep
+                ep = lo if trend == 1 else hi
+                trend = -trend
+                af = 0.02
+            else:
+                sar = sar1
+                if trend == 1 and hi > ep:
+                    ep, af = hi, min(af + 0.02, 0.2)
+                elif trend == -1 and lo < ep:
+                    ep, af = lo, min(af + 0.02, 0.2)
+        out_sar[r] = sar
+        out_trend[r] = trend
+        st = (i + 1, trend, sar, ep, af, lo, p1_low, hi, p1_high, cl)
+    return st, {"sar": out_sar, "trend": out_trend}
 
 
 _SAR_SQL = f"""
@@ -574,60 +570,58 @@ def q_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (bars.select("user_id", "bar_ts", "high", "low", "close")
               .repartition("user_id")
               .sortWithinPartitions("user_id", "bar_ts"))
-    schema = ("user_id bigint, bar_ts timestamp, close double, "
-              "supertrend double, trend int")
-    alpha, mult = 1.0 / 10.0, 3.0
+    return keyed_scan(staged, _supertrend_step(1.0 / 10.0, 3.0),
+                      init=_SUPERTREND_INIT, cols=["high", "low", "close"],
+                      schema="user_id bigint, bar_ts timestamp, "
+                             "close double, supertrend double, trend int")
 
-    def kernel(batches):
-        import pandas as pd
 
-        key = None
-        st = None  # (atr, fub, flb, trend, prev_close)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            highs = pdf["high"].to_numpy(dtype="float64")
-            lows = pdf["low"].to_numpy(dtype="float64")
-            closes = pdf["close"].to_numpy(dtype="float64")
-            out_st: list[float] = []
-            out_tr: list[int] = []
-            for r in range(len(pdf)):
-                if keys[r] != key:
-                    key = keys[r]
-                    st = None
-                hi, lo, cl = highs[r], lows[r], closes[r]
-                if st is None:
-                    atr = hi - lo
-                    fub = (hi + lo) / 2.0 + mult * atr
-                    flb = (hi + lo) / 2.0 - mult * atr
-                    trend = 1 if cl > fub else -1
-                else:
-                    atr_p, fub_p, flb_p, trend_p, pc = st
-                    tr = max(hi - lo, abs(hi - pc), abs(lo - pc))
-                    atr = atr_p + alpha * (tr - atr_p)
-                    bub = (hi + lo) / 2.0 + mult * atr
-                    blb = (hi + lo) / 2.0 - mult * atr
-                    fub = bub if (bub < fub_p or pc > fub_p) else fub_p
-                    flb = blb if (blb > flb_p or pc < flb_p) else flb_p
-                    if trend_p == -1 and cl > fub:
-                        trend = 1
-                    elif trend_p == 1 and cl < flb:
-                        trend = -1
-                    else:
-                        trend = trend_p
-                out_st.append(flb if trend == 1 else fub)
-                out_tr.append(trend)
-                st = (atr, fub, flb, trend, cl)
-            yield pd.DataFrame({
-                "user_id": pdf["user_id"].astype("int64"),
-                "bar_ts": pdf["bar_ts"],
-                "close": closes,
-                "supertrend": pd.Series(out_st, dtype="float64"),
-                "trend": pd.Series(out_tr, dtype="int32"),
-            })
+#: Supertrend step state (atr, final upper band, final lower band,
+#: trend, previous close, started) before a key's first bar.
+_SUPERTREND_INIT = (math.nan, math.nan, math.nan, 0, math.nan, False)
 
-    return staged.mapInPandas(kernel, schema=schema)
+
+def _supertrend_step(alpha: float, mult: float):
+    """Supertrend step over one key's (high, low, close) bars: the first
+    bar seeds atr = high − low, the bands from it and trend = +1 iff
+    close > final_ub; later bars smooth the true range into atr (Wilder,
+    `alpha`), ratchet the bands and flip the trend when close crosses
+    the active band. Emits supertrend (the active band) and trend. The
+    stream's supertrend_per_key feeds ticks as bars with
+    high = low = close."""
+
+    def step(state, cols):
+        atr, fub, flb, trend, pc, started = state
+        n = len(cols["close"])
+        out_st = np.empty(n, dtype=np.float64)
+        out_tr = np.empty(n, dtype=np.int32)
+        bars = zip(cols["high"].tolist(), cols["low"].tolist(),
+                   cols["close"].tolist())
+        for i, (hi, lo, cl) in enumerate(bars):
+            if started:
+                tr = max(hi - lo, abs(hi - pc), abs(lo - pc))
+                atr = atr + alpha * (tr - atr)
+                bub = (hi + lo) / 2.0 + mult * atr
+                blb = (hi + lo) / 2.0 - mult * atr
+                fub = bub if (bub < fub or pc > fub) else fub
+                flb = blb if (blb > flb or pc < flb) else flb
+                if trend == -1 and cl > fub:
+                    trend = 1
+                elif trend == 1 and cl < flb:
+                    trend = -1
+            else:
+                atr = hi - lo
+                fub = (hi + lo) / 2.0 + mult * atr
+                flb = (hi + lo) / 2.0 - mult * atr
+                trend = 1 if cl > fub else -1
+                started = True
+            pc = cl
+            out_st[i] = flb if trend == 1 else fub
+            out_tr[i] = trend
+        return (atr, fub, flb, trend, pc, started), {"supertrend": out_st,
+                                                     "trend": out_tr}
+
+    return step
 
 
 _SUPERTREND_SQL = f"""
@@ -757,7 +751,7 @@ def q_kama(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant sc = (ER·(2/3 − 2/31) + 2/31)², then
     kama := kama + sc·(close − kama), seeded with close at each key's
     first full window. The fixed-alpha ewm kernel can't express this;
-    a dedicated partition-wide kernel carries (kama, started) while
+    a dedicated step (`_kama_step`) carries (kama, started) while
     sc arrives as a PRECOMPUTED column from the same decimal-exact
     window stage the oracle uses (Σ|Δ| is floor-quantized to integer
     1e-9 ticks so the denominator is an exact BIGINT on both
@@ -782,44 +776,30 @@ def q_kama(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (bars.select("user_id", "bar_ts", "close", "sc")
               .repartition("user_id")
               .sortWithinPartitions("user_id", "bar_ts"))
-    schema = "user_id bigint, bar_ts timestamp, close double, kama double"
-
-    def kernel(batches):
-        import math
-
-        import pandas as pd
-
-        key = None
-        acc, started = math.nan, False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            closes = pdf["close"].to_numpy(dtype="float64")
-            scs = pdf["sc"].to_numpy(dtype="float64", na_value=math.nan)
-            out = []
-            for r in range(len(pdf)):
-                if keys[r] != key:
-                    key = keys[r]
-                    acc, started = math.nan, False
-                sc = scs[r]
-                if math.isnan(sc):
-                    out.append(acc if started else math.nan)
-                elif not started:
-                    acc, started = closes[r], True
-                    out.append(acc)
-                else:
-                    acc = acc + sc * (closes[r] - acc)
-                    out.append(acc)
-            yield pd.DataFrame({
-                "user_id": pdf["user_id"].astype("int64"),
-                "bar_ts": pdf["bar_ts"],
-                "close": closes,
-                "kama": pd.Series(out, dtype="float64"),
-            })
-
-    res = staged.mapInPandas(kernel, schema=schema)
+    res = keyed_scan(staged, _kama_step, init=(math.nan, False),
+                     cols=["close", "sc"],
+                     schema="user_id bigint, bar_ts timestamp, "
+                            "close double, kama double")
     return res.withColumn("kama", F.nanvl("kama", F.lit(None)))
+
+
+def _kama_step(state, cols):
+    """KAMA step: ``kama := kama + sc·(close − kama)``, seeded with
+    close at the first row whose sc is defined; rows with NaN sc carry
+    kama (NaN before the seed). State: (kama, started)."""
+    acc, started = state
+    out = np.empty(len(cols["close"]), dtype=np.float64)
+    rows = zip(cols["close"].tolist(), cols["sc"].tolist())
+    for r, (cl, sc) in enumerate(rows):
+        if math.isnan(sc):
+            out[r] = acc if started else math.nan
+            continue
+        if started:
+            acc = acc + sc * (cl - acc)
+        else:
+            acc, started = cl, True
+        out[r] = acc
+    return (acc, started), {"kama": out}
 
 
 _KAMA_SQL = f"""
@@ -860,77 +840,46 @@ FROM c b LEFT JOIN r ON r.user_id = b.user_id AND r.rn = b.rn
 
 
 # ---------------------------------------------------------------------------
-# Shared chained-EMA partition-wide kernel (TRIX / mass index / any
-# future EMA-of-EMA indicator)
+# Chained EMAs (TRIX / mass index): the shared ewm step, one level per spec
 # ---------------------------------------------------------------------------
 
-def _chained_ema_kernel(staged: DataFrame, value_col: str, alpha: float,
-                        depth: int, out_names: list[str],
-                        row_fn) -> DataFrame:
-    """ONE sequential mapInPandas pass carrying `depth` stacked EMA
-    accumulators per key (seed-on-first-value, reset on key change,
-    state carried across Arrow batches): level i smooths level i-1,
-    level 0 smooths `value_col`. Per row, ``row_fn(acc, prev)`` maps
-    the current and previous accumulator stacks to the output tuple
-    (NaN for "undefined"; callers nanvl to NULL). Extracted from the
-    TRIX kernel so every chained-EMA indicator shares the one
-    reviewed implementation of the key-reset/seeding/carry
-    subtleties."""
-    import math
-
-    import pandas as pd
-
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                          for f in staged.schema.fields)
-    schema = in_schema + ", " + ", ".join(
-        f"{n} double" for n in out_names)
-
-    def kernel(batches):
-        key = None
-        acc = [math.nan] * depth
-        prev = [math.nan] * depth
-        started = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            outs: list[list[float]] = [[] for _ in out_names]
-            for r in range(len(pdf)):
-                if keys[r] != key:
-                    key = keys[r]
-                    acc = [math.nan] * depth
-                    prev = [math.nan] * depth
-                    started = False
-                x = vals[r]
-                if not started:
-                    acc = [x] * depth
-                    started = True
-                else:
-                    up = x
-                    for i in range(depth):
-                        acc[i] = acc[i] + alpha * (up - acc[i])
-                        up = acc[i]
-                row = row_fn(acc, prev)
-                for i, v in enumerate(row):
-                    outs[i].append(v)
-                prev = list(acc)
-            yield pdf.assign(**{n: pd.Series(outs[i], dtype="float64")
-                                for i, n in enumerate(out_names)})
-
-    return staged.mapInPandas(kernel, schema=schema)
+def _chained_emas(src: str, alpha: float, depth: int):
+    """`depth` stacked EMAs of `src` as one :func:`ewm._ewm_step`:
+    level i smooths level i-1 (outputs ``_e0`` … ``_e{depth-1}``)."""
+    return _ewm_step([(f"_e{i}", f"_e{i - 1}" if i else src, alpha)
+                      for i in range(depth)])
 
 
-def _mass_row(acc, prev):
-    import math
-    return (acc[0] / acc[1] if acc[1] != 0.0 else math.nan,)
+def _trix_step(alpha: float):
+    """Triple EMA plus its 1-row percent change, lag taken in-step
+    from the carried third level (NaN on a key's first row)."""
+    emas = _chained_emas("close", alpha, 3)
+
+    def step(state, cols):
+        prev3 = state[0][2]
+        state, out = emas(state, cols)
+        e3 = out["_e2"]
+        p3 = np.r_[prev3, e3[:-1]]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            trix = np.where(~np.isnan(p3) & (p3 != 0.0),
+                            100.0 * (e3 / p3 - 1.0), np.nan)
+        return state, {"ema3": e3, "trix": trix}
+
+    return step
 
 
-def _trix_row(acc, prev):
-    import math
-    a3, p3 = acc[2], prev[2]
-    return (a3, 100.0 * (a3 / p3 - 1.0)
-            if not math.isnan(p3) and p3 != 0.0 else math.nan)
+def _mass_step(alpha: float):
+    """EMA(range) over EMA(EMA(range)); NaN where the denominator is 0."""
+    emas = _chained_emas("rng", alpha, 2)
+
+    def step(state, cols):
+        state, out = emas(state, cols)
+        e1, e2 = out["_e0"], out["_e1"]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ratio = np.where(e2 != 0.0, e1 / e2, np.nan)
+        return state, {"ratio": ratio}
+
+    return step
 
 
 # ---------------------------------------------------------------------------
@@ -940,7 +889,7 @@ def _trix_row(acc, prev):
 def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRIX(15): 1-bar percent change of the TRIPLE ema(span 15) of
     close. All three chained recurrences AND the lag ride ONE kernel
-    pass (the lag is emitted from the same sequential loop — taking
+    pass (the lag is emitted from the same step — taking
     it as a Window after the kernel would force a second exchange,
     the dashboard_snapshot lesson). Oracle = three chained
     NULL-skipping list-fold CTEs + lag."""
@@ -948,9 +897,9 @@ def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (bars.select("user_id", "bar_ts", "close")
               .repartition("user_id")
               .sortWithinPartitions("user_id", "bar_ts"))
-    res = _chained_ema_kernel(staged, "close", 2.0 / (15.0 + 1.0),
-                              depth=3, out_names=["ema3", "trix"],
-                              row_fn=_trix_row)
+    res = keyed_scan(staged, _trix_step(2.0 / (15.0 + 1.0)),
+                     init=_ewm_init(3), cols=["close"],
+                     schema=f"{_ddl(staged)}, ema3 double, trix double")
     return (res.withColumn("ema3", F.nanvl("ema3", F.lit(None)))
             .withColumn("trix", F.nanvl("trix", F.lit(None))))
 
@@ -1377,7 +1326,7 @@ def q_mass_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mass Index(9, 25) — Dorsey's range-expansion signal (public):
     ratio = EMA₉(high−low) / EMA₉(EMA₉(high−low)), MI = Σ₂₅ ratio.
     Both chained EMA recurrences ride ONE kernel pass (the TRIX
-    discipline — chained accumulators in a single sequential loop);
+    discipline — chained ewm steps in a single pass);
     the 25-term sum is a decimal-exact window AFTER the kernel, which
     costs the one extra exchange mapInPandas forces (output
     partitioning is erased — the dashboard_snapshot lesson applies,
@@ -1389,9 +1338,9 @@ def q_mass_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (bars.select("user_id", "bar_ts", "close", rng)
               .repartition("user_id")
               .sortWithinPartitions("user_id", "bar_ts"))
-    fitted = _chained_ema_kernel(staged, "rng", 2.0 / (9.0 + 1.0),
-                                 depth=2, out_names=["ratio"],
-                                 row_fn=_mass_row)
+    fitted = keyed_scan(staged, _mass_step(2.0 / (9.0 + 1.0)),
+                        init=_ewm_init(2), cols=["rng"],
+                        schema=f"{_ddl(staged)}, ratio double")
     f25 = bar_window().rowsBetween(-24, 0)
     mi = F.when(
         F.count("ratio").over(f25) == 25,

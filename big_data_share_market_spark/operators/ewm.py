@@ -27,6 +27,26 @@ Exactness contract (what the DuckDB oracle replays):
 
 alpha literals are written as the same division expression on both
 sides (`2.0/(span+1.0)`, `1.0/window`) so the doubles agree.
+
+Per-key recurrences are written once, as a step
+
+    step(state, cols) -> (state, out)
+
+where ``cols`` maps input names to one key's rows in order (numpy
+arrays) and ``out`` holds only the computed columns. Two runners drive
+the same step: :func:`keyed_scan` (batch, one `mapInPandas` pass over a
+key-partitioned, key-sorted frame, state carried across Arrow batches)
+and ``streaming.state._keyed_state`` (stream, state checkpointed per
+key). Steps defined here: :func:`_ewm_step` (EMA: `_apply_ewm`, the
+stream EMA and ATR smoothing, channels' TRIX / mass index),
+:func:`_holt_step` (holt_forecast, forecast_anomalies /
+forecast_backtest via :func:`_anomaly_step`, stream Holt) and
+:func:`_kalman_step` (kalman_level, stream Kalman). ``keyed_scan`` runs
+holt_forecast, forecast_anomalies, forecast_backtest and, in
+channels.py, parabolic_sar, supertrend, kama, trix and mass_index. The
+EMA and Kalman kernels keep their own across-key dense paths and run
+the shared step per key only on skewed batches
+(:func:`_dense_layout_ok`).
 """
 
 from __future__ import annotations
@@ -39,6 +59,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import DEC
 from ..tables import keyed_repartition, load_table
@@ -83,6 +104,17 @@ def _ewm_sql(expr: str, alpha_expr: str, over: str) -> str:
         f"(acc, v) -> acc + ({alpha_expr}) * (v - acc)) END")
 
 
+def _ddl(df: DataFrame) -> str:
+    """`df`'s schema as a DDL field list, for kernel output schemas."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                     for f in df.schema.fields)
+
+
+def _ewm_init(n: int) -> tuple[list[float], list[bool]]:
+    """:func:`_ewm_step` state for `n` specs before a key's first row."""
+    return [math.nan] * n, [False] * n
+
+
 def _apply_ewm(df: DataFrame, order_cols: list[str], value_cols: dict[str, tuple[str, float]],
                key_col: str = "user_id", assume_sorted: bool = False) -> DataFrame:
     """Streaming-partition kernel: add one ewm column per entry of
@@ -120,8 +152,7 @@ def _apply_ewm(df: DataFrame, order_cols: list[str], value_cols: dict[str, tuple
     (r6 verdict item 4) drops to ~1/10th the Python-interpreter work.
     """
     out_fields = ", ".join(f"{name} double" for name in value_cols)
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{in_schema}, {out_fields}"
+    schema = f"{_ddl(df)}, {out_fields}"
 
     if assume_sorted:
         staged = df
@@ -137,14 +168,59 @@ def _apply_ewm(df: DataFrame, order_cols: list[str], value_cols: dict[str, tuple
     return res
 
 
-#: Driver-side A/B switch (tools/ab_ewm_kernel.py): when True, kernel
-#: FACTORIES capture a force-scalar flag into the closure they ship to
-#: the workers, routing every batch through the scalar reference loop.
-#: A closure-captured value is the only reliable transport — workers
-#: re-import this module, so a driver-side monkeypatch never reaches
-#: them. Bit-identical output either way (the property tests pin it);
-#: this only selects which CPU path computes it.
-FORCE_SCALAR_KERNEL = False
+def keyed_scan(staged: DataFrame, step, *, init, cols: list[str],
+               schema: str) -> DataFrame:
+    """Run the per-key `step` (module docstring) over `staged` in ONE
+    `mapInPandas` pass — the batch twin of
+    ``streaming.state._keyed_state``.
+
+    `staged` must already be hash-partitioned on ``user_id`` and sorted
+    by (user_id, order) within partitions; the caller stages it, so the
+    plan is exactly the caller's. Per Arrow batch the runner finds the
+    contiguous key segments and hands each one to `step` as ``cols``
+    (float64 arrays, NULL as NaN). A segment continues the state carried
+    from the previous batch when it continues that batch's last key, and
+    starts from `init` otherwise. The step's columns are added to the
+    batch, which is then projected onto `schema`'s fields, so
+    passthrough columns (key, order, price) come from the input."""
+    names = StructType.fromDDL(schema).fieldNames()
+
+    def kernel(batches):
+        carry_key, carry = None, init
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            keys = pdf["user_id"].to_numpy()
+            arrays = {c: pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
+                      for c in cols}
+            outs, carry = _scan_segments(
+                step, init, carry if keys[0] == carry_key else init,
+                _segment_bounds(keys), arrays)
+            carry_key = keys[-1]
+            yield pdf.assign(**outs)[names]
+
+    return staged.mapInPandas(kernel, schema=schema)
+
+
+def _segment_bounds(keys: np.ndarray) -> np.ndarray:
+    """[0, start of each later key run, len(keys)] for a key-sorted
+    batch: segment i is rows bounds[i]:bounds[i+1]."""
+    return np.concatenate(
+        ([0], np.nonzero(keys[1:] != keys[:-1])[0] + 1, [len(keys)]))
+
+
+def _scan_segments(step, init, state, bounds: np.ndarray,
+                   cols: dict[str, np.ndarray]):
+    """Run `step` once per key segment of one batch: the first segment
+    starts from `state`, every later one from `init`. Returns the
+    concatenated output columns and the last segment's state."""
+    bounds = bounds.tolist()
+    parts = []
+    for i, (a, b) in enumerate(zip(bounds, bounds[1:])):
+        state, out = step(state if i == 0 else init,
+                          {c: v[a:b] for c, v in cols.items()})
+        parts.append(out)
+    return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}, state
 
 
 def _dense_layout_ok(n: int, n_segs: int, max_len: int) -> bool:
@@ -154,84 +230,85 @@ def _dense_layout_ok(n: int, n_segs: int, max_len: int) -> bool:
     keys) blows up quadratically where the scalar loop is O(n). Allow
     the dense path when padding waste is bounded (≤4× the real rows)
     or the matrix is small outright; otherwise the kernels fall back
-    to the exact same scalar recurrence (bit-identical either way —
-    the fallback IS the reference loop the property tests pin
-    against)."""
+    to the shared per-key step (bit-identical either way — the step IS
+    the reference loop the property tests pin against)."""
     cells = n_segs * max_len
     return cells <= max(4 * n, 1 << 16)
 
 
-def _ewm_scalar(keys, xs, alpha: float, carry_key, acc: float,
-                started: bool):
-    """Reference row loop (the pre-r7 kernel body): one EMA pass over
-    a batch with NaN-skip-carry semantics. Returns (out, acc,
-    started)."""
-    res = np.empty(len(xs), dtype=np.float64)
-    prev_key = carry_key
-    for i in range(len(xs)):
-        if keys[i] != prev_key:
-            acc, started = math.nan, False
-            prev_key = keys[i]
-        x = xs[i]
-        if math.isnan(x):
-            res[i] = acc if started else math.nan
-        elif not started:
-            acc, started = x, True
-            res[i] = acc
-        else:
-            acc = acc + alpha * (x - acc)
-            res[i] = acc
-    return res, acc, started
+def _ewm_step(specs: list[tuple[str, str, float]]):
+    """EMA step for specs [(out, src, alpha)]: the recurrence
+    ``acc := acc + alpha*(x - acc)``, seeded with the first valid
+    value; NaN inputs carry the accumulator, positions before the seed
+    are NaN (the op order of :func:`ewm_mean`). `src` may name an
+    earlier spec's output (chained EMAs). State: ([acc], [started]),
+    one entry per spec."""
+
+    def step(state, cols):
+        accs, started = list(state[0]), list(state[1])
+        out = {}
+        for j, (dst, src, alpha) in enumerate(specs):
+            acc, on = accs[j], started[j]
+            xs = (out[src] if src in out else cols[src]).tolist()
+            res = np.empty(len(xs), dtype=np.float64)
+            for i, x in enumerate(xs):
+                if math.isnan(x):
+                    res[i] = acc if on else math.nan
+                    continue
+                if on:
+                    acc = acc + alpha * (x - acc)
+                else:
+                    acc, on = x, True
+                res[i] = acc
+            accs[j], started[j] = acc, on
+            out[dst] = res
+        return (accs, started), out
+
+    return step
 
 
 def _ewm_kernel(specs: list[tuple[str, tuple[str, float]]], key_col: str):
     """Arrow kernel for :func:`_apply_ewm` (see its docstring for the
-    across-key vectorization argument; skewed-segment batches take
-    the scalar fallback, see :func:`_dense_layout_ok`). Module-level
-    factory so tests/test_pandas_parity.py can drive it directly with
-    synthetic batch splits and assert bit-equality against
-    :func:`ewm_mean`."""
-    force_scalar = FORCE_SCALAR_KERNEL  # captured at plan-build time
+    across-key vectorization argument; skewed-segment batches run the
+    shared :func:`_ewm_step` per key, see :func:`_dense_layout_ok`).
+    Module-level factory so tests/test_pandas_parity.py can drive it
+    directly with synthetic batch splits and assert bit-equality
+    against :func:`ewm_mean`."""
+    flat = [(dst, src, alpha) for dst, (src, alpha) in specs]
+    step = _ewm_step(flat)
+    init = _ewm_init(len(flat))
+    srcs = {src for _, src, _ in flat}
 
     def kernel(batches):
-        carry_key = None
-        carry: dict[str, tuple[float, bool]] = {}
+        carry_key, carry = None, init
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             keys = pdf[key_col].to_numpy()
             n = len(pdf)
-            starts = np.concatenate(
-                ([0], np.nonzero(keys[1:] != keys[:-1])[0] + 1))
-            seg_lens = np.concatenate((starts[1:], [n])) - starts
+            bounds = _segment_bounds(keys)
+            starts, seg_lens = bounds[:-1], np.diff(bounds)
             n_segs = len(starts)
             max_len = int(seg_lens.max())
-            continues = keys[0] == carry_key
-            outs = {}
-            if force_scalar or not _dense_layout_ok(n, n_segs, max_len):
-                for out_name, (in_name, alpha) in specs:
-                    xs = pdf[in_name].to_numpy(dtype=np.float64,
-                                               na_value=np.nan)
-                    acc, started = carry.get(out_name, (math.nan, False))
-                    res, acc, started = _ewm_scalar(
-                        keys, xs, alpha, carry_key, acc, started)
-                    carry[out_name] = (acc, started)
-                    outs[out_name] = res
-                carry_key = keys[-1]
+            state = carry if keys[0] == carry_key else init
+            cols = {c: pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
+                    for c in srcs}
+            carry_key = keys[-1]
+            if not _dense_layout_ok(n, n_segs, max_len):
+                outs, carry = _scan_segments(step, init, state, bounds, cols)
                 yield pdf.assign(**outs)
                 continue
             seg_of_row = np.repeat(np.arange(n_segs), seg_lens)
             pos_of_row = np.arange(n) - starts[seg_of_row]
-            for out_name, (in_name, alpha) in specs:
-                xs = pdf[in_name].to_numpy(dtype=np.float64, na_value=np.nan)
+            outs = {}
+            accs, started_last = [], []
+            for j, (out_name, in_name, alpha) in enumerate(flat):
                 xmat = np.full((n_segs, max_len), np.nan)
-                xmat[seg_of_row, pos_of_row] = xs
+                xmat[seg_of_row, pos_of_row] = cols[in_name]
                 rmat = np.empty_like(xmat)
                 acc = np.full(n_segs, np.nan)
                 started = np.zeros(n_segs, dtype=bool)
-                if continues:
-                    acc[0], started[0] = carry.get(out_name,
-                                                   (math.nan, False))
+                acc[0], started[0] = state[0][j], state[1][j]
                 for t in range(max_len):
                     x = xmat[:, t]
                     valid = ~np.isnan(x)
@@ -239,9 +316,10 @@ def _ewm_kernel(specs: list[tuple[str, tuple[str, float]]], key_col: str):
                     acc = np.where(valid, np.where(started, upd, x), acc)
                     started = started | valid
                     rmat[:, t] = acc
-                carry[out_name] = (float(acc[-1]), bool(started[-1]))
+                accs.append(float(acc[-1]))
+                started_last.append(bool(started[-1]))
                 outs[out_name] = rmat[seg_of_row, pos_of_row]
-            carry_key = keys[-1]
+            carry = (accs, started_last)
             yield pdf.assign(**outs)
 
     return kernel
@@ -505,6 +583,35 @@ FROM dxr
 _HOLT_A = 0.2
 _HOLT_B = 0.1
 _HOLT_H = (1, 2, 3)
+#: Holt step state (level, trend, started) before a key's first row.
+_HOLT_INIT = (math.nan, math.nan, False)
+
+
+def _holt_step(a: float, b_const: float):
+    """Holt step over ``cols["close"]``: the first row seeds
+    (level, trend) = (y, 0); every later row runs
+    ``l2 = a*y + (1-a)*(l+b); b = b_const*(l2-l) + (1-b_const)*b``
+    in that op order (the recursive-CTE oracle's). Emits holt_level,
+    holt_trend per row."""
+
+    def step(state, cols):
+        lvl, trend, started = state
+        ys = cols["close"].tolist()
+        out_l = np.empty(len(ys), dtype=np.float64)
+        out_b = np.empty(len(ys), dtype=np.float64)
+        for i, y in enumerate(ys):
+            if started:
+                l2 = a * y + (1.0 - a) * (lvl + trend)
+                trend = b_const * (l2 - lvl) + (1.0 - b_const) * trend
+                lvl = l2
+            else:
+                lvl, trend, started = y, 0.0, True
+            out_l[i] = lvl
+            out_b[i] = trend
+        return (lvl, trend, started), {"holt_level": out_l,
+                                       "holt_trend": out_b}
+
+    return step
 
 
 def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,8 +620,9 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``l_t = α·y_t + (1−α)(l_{t−1}+b_{t−1});
     b_t = β(l_t − l_{t−1}) + (1−β)b_{t−1}``, init l₁=y₁, b₁=0;
     ``ŷ_{T+h} = l_T + h·b_T``. The coupled two-state recurrence the
-    single-accumulator ewm kernel cannot express — so it gets its own
-    partition-wide Arrow kernel with (level, trend) carried jointly
+    single-accumulator ewm kernel cannot express — so it is its own
+    step (:func:`_holt_step`, shared with the stream's holt_per_key),
+    run by :func:`keyed_scan` with (level, trend) carried jointly
     across batches.
 
     Cross-engine exactness: the kernel executes the recurrence with
@@ -543,38 +651,10 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (s.withColumn("rn", F.row_number().over(wo))
               .withColumn("n_obs", F.count("*").over(
                   Window.partitionBy("user_id"))))
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                          for f in staged.schema.fields)
-    schema = f"{in_schema}, holt_level double, holt_trend double"
-    a, b_const = _HOLT_A, _HOLT_B
-
-    def kernel(batches):
-        carry_key = None
-        lvl = trend = math.nan
-        started = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            ys = pdf["close"].to_numpy(dtype=np.float64)
-            out_l = np.empty(len(pdf), dtype=np.float64)
-            out_b = np.empty(len(pdf), dtype=np.float64)
-            for i in range(len(pdf)):
-                if keys[i] != carry_key:
-                    started = False
-                    carry_key = keys[i]
-                y = ys[i]
-                if not started:
-                    lvl, trend, started = y, 0.0, True
-                else:
-                    l2 = a * y + (1.0 - a) * (lvl + trend)
-                    trend = b_const * (l2 - lvl) + (1.0 - b_const) * trend
-                    lvl = l2
-                out_l[i] = lvl
-                out_b[i] = trend
-            yield pdf.assign(holt_level=out_l, holt_trend=out_b)
-
-    fitted = staged.mapInPandas(kernel, schema=schema)
+    fitted = keyed_scan(
+        staged, _holt_step(_HOLT_A, _HOLT_B), init=_HOLT_INIT,
+        cols=["close"],
+        schema=f"{_ddl(staged)}, holt_level double, holt_trend double")
     last = (fitted
             .filter(F.col("rn") == F.col("n_obs"))
             .select("user_id", "n_obs",
@@ -765,6 +845,36 @@ _ANOM_RHO = 0.1
 _ANOM_Z = 3.0
 
 
+def _anomaly_step(holt, rho: float, zcut: float):
+    """Residual-scoring step over the Holt step `holt`: each row's
+    one-step-ahead residual ``y - (l + b)`` uses the (level, trend)
+    BEFORE the row; the EW residual variance v (seeded with the first
+    residual's square) scores it as ``z = resid / sqrt(v_prev)``, then
+    updates. A key's first row has no forecast: resid and z are NaN.
+    State: (Holt state, v)."""
+
+    def step(state, cols):
+        holt_state, var = state
+        lvl, trend, started = holt_state
+        holt_state, fit = holt(holt_state, cols)
+        prev_l = np.r_[lvl, fit["holt_level"][:-1]]
+        prev_b = np.r_[trend, fit["holt_trend"][:-1]]
+        resid = cols["close"] - (prev_l + prev_b)
+        z = np.full(len(resid), np.nan)
+        if not started:
+            resid[0] = np.nan
+        for i in range(0 if started else 1, len(resid)):
+            r = float(resid[i])
+            z[i] = r / math.sqrt(var) if not math.isnan(var) else math.nan
+            var = (r * r if math.isnan(var)
+                   else (1.0 - rho) * var + rho * (r * r))
+        flag = ~np.isnan(z) & (np.abs(z) > zcut)
+        return (holt_state, var), {"resid": resid, "z": z,
+                                   "is_anomaly": flag}
+
+    return step
+
+
 def _anomaly_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared residual-scoring pass for forecast_anomalies and
     forecast_backtest: the per-key rank (rn) and count (n_rows) are
@@ -782,49 +892,11 @@ def _anomaly_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (s.withColumn("rn", F.row_number().over(wo))
               .withColumn("n_rows", F.count("*").over(
                   Window.partitionBy("user_id"))))
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                          for f in staged.schema.fields)
-    schema = (f"{in_schema}, resid double, z double, "
-              f"is_anomaly boolean")
-    a, bc, rho, zcut = _HOLT_A, _HOLT_B, _ANOM_RHO, _ANOM_Z
-
-    def kernel(batches):
-        cur_key = None
-        lvl = trend = var = math.nan
-        started = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            ys = pdf["close"].to_numpy(dtype=np.float64)
-            out_r = np.empty(len(pdf), dtype=np.float64)
-            out_z = np.empty(len(pdf), dtype=np.float64)
-            out_f = np.zeros(len(pdf), dtype=bool)
-            for i in range(len(pdf)):
-                if keys[i] != cur_key:
-                    cur_key = keys[i]
-                    lvl = trend = var = math.nan
-                    started = False
-                y = float(ys[i])
-                if not started:
-                    lvl, trend, started = y, 0.0, True
-                    out_r[i] = math.nan
-                    out_z[i] = math.nan
-                    continue
-                resid = y - (lvl + trend)
-                z = resid / math.sqrt(var) if not math.isnan(var) \
-                    else math.nan
-                var = (resid * resid if math.isnan(var)
-                       else (1.0 - rho) * var + rho * (resid * resid))
-                l2 = a * y + (1.0 - a) * (lvl + trend)
-                trend = bc * (l2 - lvl) + (1.0 - bc) * trend
-                lvl = l2
-                out_r[i] = resid
-                out_z[i] = z
-                out_f[i] = (not math.isnan(z)) and abs(z) > zcut
-            yield pdf.assign(resid=out_r, z=out_z, is_anomaly=out_f)
-
-    return staged.mapInPandas(kernel, schema=schema)
+    return keyed_scan(
+        staged, _anomaly_step(_holt_step(_HOLT_A, _HOLT_B), _ANOM_RHO,
+                              _ANOM_Z),
+        init=(_HOLT_INIT, math.nan), cols=["close"],
+        schema=f"{_ddl(staged)}, resid double, z double, is_anomaly boolean")
 
 
 def q_forecast_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1105,9 +1177,7 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (s.withColumn("rn", F.row_number().over(wo))
               .withColumn("n_obs", F.count("*").over(
                   Window.partitionBy("user_id"))))
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                          for f in staged.schema.fields)
-    schema = f"{in_schema}, kal_level double, kal_p double, kal_gain double"
+    schema = f"{_ddl(staged)}, kal_level double, kal_p double, kal_gain double"
     fitted = staged.mapInPandas(_kalman_kernel(), schema=schema)
     # Single-observation keys never compute a gain: the kernel carries
     # NaN, the oracle NULL — normalize to NULL (the dtype-honest
@@ -1122,18 +1192,54 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id"))
 
 
+#: Kalman step state (level, variance, started) before a key's first row.
+_KALMAN_INIT = (math.nan, math.nan, False)
+
+
+def _kalman_step(q_noise: float, r_noise: float):
+    """Local-level Kalman step over ``cols["close"]``: the first row
+    seeds (level, P) = (y, 1) with no gain (NaN); every later row runs
+    ``P⁻ = P + Q; K = P⁻/(P⁻ + R); l = l + K(y − l); P = (1−K)P⁻`` in
+    that op order (the recursive-CTE oracle's). Emits kal_level,
+    kal_p, kal_gain per row."""
+
+    def step(state, cols):
+        lvl, p, started = state
+        ys = cols["close"].tolist()
+        out_l = np.empty(len(ys), dtype=np.float64)
+        out_p = np.empty(len(ys), dtype=np.float64)
+        out_k = np.empty(len(ys), dtype=np.float64)
+        for i, y in enumerate(ys):
+            if started:
+                pp = p + q_noise
+                gain = pp / (pp + r_noise)
+                lvl = lvl + gain * (y - lvl)
+                p = (1.0 - gain) * pp
+            else:
+                lvl, p, gain, started = y, 1.0, math.nan, True
+            out_l[i] = lvl
+            out_p[i] = p
+            out_k[i] = gain
+        return (lvl, p, started), {"kal_level": out_l, "kal_p": out_p,
+                                   "kal_gain": out_k}
+
+    return step
+
+
 def _kalman_kernel():
     """Arrow kernel for the local-level filter (see q_kalman_level's
-    docstring for the vectorization argument). Module-level factory so
-    tests/test_pandas_parity.py can drive it directly with synthetic
-    batch splits and assert bit-equality against the scalar loop."""
-    force_scalar = FORCE_SCALAR_KERNEL  # captured at plan-build time
+    docstring for the vectorization argument; skewed-segment batches
+    run the shared :func:`_kalman_step` per key). Module-level factory
+    so tests/test_pandas_parity.py can drive it directly with
+    synthetic batch splits and assert bit-equality against the scalar
+    loop."""
+    step = _kalman_step(_KAL_Q, _KAL_R)
 
     def kernel(batches):
         q_noise, r_noise = _KAL_Q, _KAL_R
         # Rank-indexed gain/variance tables (index 0 unused; rank 1 =
         # first observation: P=1, gain undefined). Grown on demand by
-        # the same scalar recurrence the row loop ran.
+        # the same scalar recurrence as the step.
         k_tab = np.array([np.nan, np.nan])
         p_tab = np.array([np.nan, 1.0])
 
@@ -1155,8 +1261,7 @@ def _kalman_kernel():
                 p2[rn] = p
             k_tab, p_tab = k2, p2
 
-        carry_key = None
-        carry_lvl = math.nan
+        carry_key, carry = None, _KALMAN_INIT
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1166,56 +1271,40 @@ def _kalman_kernel():
             n = len(pdf)
             # Contiguous per-key segments (partition is sorted by
             # (user_id, ts, event_id) — the window stage's layout).
-            starts = np.concatenate(
-                ([0], np.nonzero(keys[1:] != keys[:-1])[0] + 1))
-            ends = np.concatenate((starts[1:], [n]))
-            seg_lens = ends - starts
-            offsets = rns[starts] - 1  # 0-based rank before each seg
-            extend(int((offsets + seg_lens).max()))
+            bounds = _segment_bounds(keys)
+            starts, seg_lens = bounds[:-1], np.diff(bounds)
             n_segs = len(starts)
             max_len = int(seg_lens.max())
-            if force_scalar or not _dense_layout_ok(n, n_segs, max_len):
-                # Skewed segment lengths: the padded matrix would be
-                # far larger than the batch — run the level recurrence
-                # as the reference row loop (gains/variances stay
-                # table lookups; identical arithmetic either way).
-                # rn == 1 IS the key-reset marker (row_number per
-                # key), so no key tracking is needed here.
-                out_l = np.empty(n, dtype=np.float64)
-                lvl = carry_lvl
-                for i in range(n):
-                    rn = rns[i]
-                    y = ys[i]
-                    if rn == 1:
-                        lvl = y
-                    else:
-                        k = k_tab[rn]
-                        lvl = lvl + k * (y - lvl)
-                    out_l[i] = lvl
-            else:
-                seg_of_row = np.repeat(np.arange(n_segs), seg_lens)
-                pos_of_row = np.arange(n) - starts[seg_of_row]
-                ymat = np.full((n_segs, max_len), np.nan)
-                ymat[seg_of_row, pos_of_row] = ys
-                lmat = np.empty_like(ymat)
-                lprev = np.zeros(n_segs)
-                if keys[0] == carry_key:  # seg 0 continues last batch
-                    lprev[0] = carry_lvl
-                for t in range(max_len):
-                    y = ymat[:, t]
-                    rn_t = offsets + t + 1
-                    k = k_tab[np.minimum(rn_t, len(k_tab) - 1)]
-                    lvl = np.where(rn_t == 1, y, lprev + k * (y - lprev))
-                    lvl = np.where(t < seg_lens, lvl, lprev)
-                    lmat[:, t] = lvl
-                    lprev = lvl
-                out_l = lmat[seg_of_row, pos_of_row]
-            out_p = p_tab[rns]
-            out_k = k_tab[rns]
+            state = carry if keys[0] == carry_key else _KALMAN_INIT
             carry_key = keys[-1]
-            carry_lvl = out_l[-1]
+            if not _dense_layout_ok(n, n_segs, max_len):
+                outs, carry = _scan_segments(step, _KALMAN_INIT, state,
+                                             bounds, {"close": ys})
+                yield pdf.assign(**outs)
+                continue
+            offsets = rns[starts] - 1  # 0-based rank before each seg
+            extend(int((offsets + seg_lens).max()))
+            seg_of_row = np.repeat(np.arange(n_segs), seg_lens)
+            pos_of_row = np.arange(n) - starts[seg_of_row]
+            ymat = np.full((n_segs, max_len), np.nan)
+            ymat[seg_of_row, pos_of_row] = ys
+            lmat = np.empty_like(ymat)
+            lprev = np.zeros(n_segs)
+            if state[2]:  # seg 0 continues the last batch's key
+                lprev[0] = state[0]
+            for t in range(max_len):
+                y = ymat[:, t]
+                rn_t = offsets + t + 1
+                k = k_tab[np.minimum(rn_t, len(k_tab) - 1)]
+                lvl = np.where(rn_t == 1, y, lprev + k * (y - lprev))
+                lvl = np.where(t < seg_lens, lvl, lprev)
+                lmat[:, t] = lvl
+                lprev = lvl
+            out_l = lmat[seg_of_row, pos_of_row]
+            out_p = p_tab[rns]
+            carry = (float(out_l[-1]), float(out_p[-1]), True)
             yield pdf.assign(kal_level=out_l, kal_p=out_p,
-                             kal_gain=out_k)
+                             kal_gain=k_tab[rns])
 
     return kernel
 

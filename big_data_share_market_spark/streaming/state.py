@@ -6,28 +6,35 @@ checkpointed by Spark.
 
 Every NoTimeout machine runs on one adapter, :func:`_keyed_state`,
 which owns the select, the optional NULL filter, the grouping, state
-load and update, and the output frame. A machine is a pure step
+load and update, and the output frame. A machine is a pure step with
+the contract the batch runner ``operators.ewm.keyed_scan`` shares:
 
-    step(state, pdf) -> (new_state, columns or None)
-
-with this contract:
+    step(state, cols) -> (new_state, out or None)
 
 - ``state`` is the key's tuple in its ``*_STATE_DDL`` layout (the
   machine's ``init`` tuple on the key's first micro-batch);
-- ``pdf`` holds the key's rows of ONE micro-batch, concatenated and
-  sorted ascending on ``(ts, event_id)`` — event_id breaks ``ts``
-  ties, the same order as the batch window forms;
+- ``cols`` maps the machine's input columns to numpy arrays of the
+  key's rows of ONE micro-batch, concatenated and sorted ascending on
+  ``(ts, event_id)`` — event_id breaks ``ts`` ties, the same order as
+  the batch window forms. A machine that names a ``price`` gets each
+  tick's ``value`` under that name (``close`` for the indicators, whose
+  steps are the batch kernels' own);
 - NULL ``value`` ticks arrive as NaN unless the machine asks for
   ``drop_null``, in which case they are filtered out before the
   shuffle (the machines whose recurrence a NaN would poison forever;
   their oracles filter ``value IS NOT NULL`` the same way);
-- the returned columns follow the ``*_OUTPUT_DDL`` order WITHOUT
-  ``user_id``; the adapter puts the key in front. ``None`` emits
-  nothing for this batch.
+- ``out`` holds only the computed columns, in ``*_OUTPUT_DDL`` order.
+  The adapter puts ``user_id`` in front and, for a machine with a
+  ``price``, the passthrough ``event_id, ts, <price>`` after it.
+  ``None`` emits nothing for this batch.
 
-Each recurrence keeps the IEEE operation order of its batch kernel or
-recursive-CTE oracle, so a replay is bit-identical to the batch
-result and does not depend on how the input splits into micro-batches.
+The EMA, ATR smoothing, Holt and Kalman steps come from
+``operators/ewm.py`` and the supertrend step from
+``operators/channels.py``: one recurrence per indicator, so a replay is
+bit-identical to the batch result and does not depend on how the input
+splits into micro-batches. The stream-only machines (last-N,
+transitions, drawdown, CUSUM) keep the IEEE op order of their
+recursive-CTE oracles.
 
 Scale notes: state is O(n_keys × a few scalars) (last-N: × N). The
 shuffle is one hash partitioning on the key, the same as any grouped
@@ -45,10 +52,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.channels import _SUPERTREND_INIT, _supertrend_step
+from ..operators.ewm import (_HOLT_INIT, _KALMAN_INIT, _ewm_init, _ewm_step,
+                             _holt_step, _kalman_step)
+
 
 def _keyed_state(sdf: DataFrame, cols: list[str], step, *, init: tuple,
                  state_ddl: str, output_ddl: str, mode: str = "append",
-                 drop_null: bool = False) -> DataFrame:
+                 drop_null: bool = False, price: str | None = None
+                 ) -> DataFrame:
     """Run the pure per-key `step` (module docstring) as a NoTimeout
     `applyInPandasWithState` operator over `user_id` + `cols`."""
 
@@ -59,10 +71,16 @@ def _keyed_state(sdf: DataFrame, cols: list[str], step, *, init: tuple,
             return
         pdf = (pd.concat(parts, ignore_index=True)
                .sort_values(["ts", "event_id"]).reset_index(drop=True))
-        new_state, out = step(state.get if state.exists else init, pdf)
+        arrays = {c: pdf[c].to_numpy() for c in cols}
+        keep = {}
+        if price is not None:
+            arrays[price] = pdf["value"].to_numpy(dtype="float64")
+            keep = {"event_id": pdf["event_id"].astype("int64"),
+                    "ts": pdf["ts"], price: arrays[price]}
+        new_state, out = step(state.get if state.exists else init, arrays)
         state.update(new_state)
         if out is not None:
-            yield pd.DataFrame({"user_id": user_id, **out})
+            yield pd.DataFrame({"user_id": user_id, **keep, **out})
 
     sdf = sdf.select("user_id", *cols)
     if drop_null:
@@ -89,15 +107,16 @@ _N_DEFAULT = 20
 
 
 def _last_n_step(n: int):
-    def step(state, pdf):
+    def step(state, cols):
         ts_us, event_id, value = state
-        pdf_us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
         buf = pd.DataFrame({
-            "ts_us": np.r_[np.asarray(ts_us, "int64"), pdf_us],
+            "ts_us": np.r_[np.asarray(ts_us, "int64"),
+                           cols["ts"].astype("datetime64[us]")
+                           .astype("int64")],
             "event_id": np.r_[np.asarray(event_id, "int64"),
-                              pdf["event_id"].to_numpy("int64")],
+                              cols["event_id"].astype("int64")],
             "value": np.r_[np.asarray(value, "float64"),
-                           pdf["value"].to_numpy("float64")],
+                           cols["value"].astype("float64")],
         })
         # Keep the N newest by (ts, event_id) — deterministic tiebreak,
         # same order as the batch window rank.
@@ -134,54 +153,20 @@ EMA_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 EMA_STATE_DDL = "acc ARRAY<DOUBLE>, started ARRAY<BOOLEAN>"
 
 
-def _ema_step(alphas: list[float]):
-    """Per-key seeded continuation of the adjust=False ewm recurrence
-    (`acc := acc + alpha*(x - acc)`, NULL inputs carry the
-    accumulator) — the same IEEE op order as the batch kernel
-    `operators/ewm.ewm_mean`, so stream output is bit-identical to the
-    batch result when events arrive in order. The reference computes
-    this eagerly per dashboard refresh (`streamlit_app/
-    streamlit_app.py:165-166,346-347`); here the state lives in the
-    checkpoint, updated once per event."""
-
-    def step(state, pdf):
-        accs, started = list(state[0]), list(state[1])
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out_cols = []
-        for j, alpha in enumerate(alphas):
-            acc, on = accs[j], started[j]
-            col = np.empty(len(vals), dtype="float64")
-            for i, x in enumerate(vals):
-                if math.isnan(x):
-                    col[i] = acc if on else math.nan
-                    continue
-                if not on:
-                    acc, on = float(x), True
-                else:
-                    acc = acc + alpha * (float(x) - acc)
-                col[i] = acc
-            accs[j], started[j] = acc, on
-            out_cols.append(col)
-        return (accs, started), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "close": vals,
-            "ema_5": out_cols[0],
-            "ema_15": out_cols[1],
-        }
-
-    return step
-
-
 def ema_per_key(sdf: DataFrame,
                 alphas: tuple[float, float] = (2.0 / 6.0, 2.0 / 16.0)) -> DataFrame:
     """Streaming EMA(5)/EMA(15) per user_id with checkpointed
-    accumulator state. One hash shuffle on the key per micro-batch;
-    state is O(n_keys x 2 doubles) — negligible at any key count."""
-    return _keyed_state(sdf, _TICK_COLS, _ema_step(list(alphas)),
-                        init=([math.nan] * len(alphas),
-                              [False] * len(alphas)),
-                        state_ddl=EMA_STATE_DDL, output_ddl=EMA_OUTPUT_DDL)
+    accumulator state — the batch EMA's step (operators/ewm._ewm_step),
+    so stream output is bit-identical to the batch result when events
+    arrive in order. The reference computes this eagerly per dashboard
+    refresh (`streamlit_app/streamlit_app.py:165-166,346-347`); here the
+    state lives in the checkpoint. One hash shuffle on the key per
+    micro-batch; state is O(n_keys x 2 doubles)."""
+    step = _ewm_step([(name, "close", alpha)
+                      for name, alpha in zip(("ema_5", "ema_15"), alphas)])
+    return _keyed_state(sdf, _TICK_COLS, step, init=_ewm_init(len(alphas)),
+                        state_ddl=EMA_STATE_DDL, output_ddl=EMA_OUTPUT_DDL,
+                        price="close")
 
 
 ATR_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
@@ -192,35 +177,17 @@ ATR_STATE_DDL = "prev DOUBLE, acc DOUBLE, started BOOLEAN"
 def _atr_step(alpha: float):
     """Checkpointed Wilder ATR over tick ranges: tr = |x - prev x|
     (NULL on each key's first tick, exactly `abs(value - lag(value))`),
-    smoothed by the shared NULL-skipping ewm recurrence — same op
-    order as operators/channels.q_atr_wilder's kernel, so the streamed
+    smoothed by the shared NULL-skipping EMA step — the batch
+    operators/channels.q_atr_wilder smoothing, so the streamed
     trajectory is bit-identical to the batch closed form."""
+    smooth = _ewm_step([("atr_14", "tr", alpha)])
 
-    def step(state, pdf):
+    def step(state, cols):
         prev, acc, started = state
-        prev = math.nan if prev is None else prev
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out_tr = np.empty(len(vals), dtype="float64")
-        out_atr = np.empty(len(vals), dtype="float64")
-        for i, x in enumerate(vals):
-            tr = abs(x - prev)  # nan if either side nan, like lag()
-            prev = x
-            out_tr[i] = tr
-            if math.isnan(tr):
-                out_atr[i] = acc if started else math.nan
-            elif not started:
-                acc, started = tr, True
-                out_atr[i] = acc
-            else:
-                acc = acc + alpha * (tr - acc)
-                out_atr[i] = acc
-        return (prev, acc, started), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "close": vals,
-            "tr": out_tr,
-            "atr_14": out_atr,
-        }
+        x = cols["close"]
+        tr = np.abs(x - np.r_[math.nan if prev is None else prev, x[:-1]])
+        (accs, ons), out = smooth(([acc], [started]), {"tr": tr})
+        return (float(x[-1]), accs[0], ons[0]), {"tr": tr, **out}
 
     return step
 
@@ -231,7 +198,8 @@ def atr_per_key(sdf: DataFrame, alpha: float = 1.0 / 14.0) -> DataFrame:
     key per micro-batch, like the EMA/Holt kernels."""
     return _keyed_state(sdf, _TICK_COLS, _atr_step(alpha),
                         init=(math.nan, math.nan, False),
-                        state_ddl=ATR_STATE_DDL, output_ddl=ATR_OUTPUT_DDL)
+                        state_ddl=ATR_STATE_DDL, output_ddl=ATR_OUTPUT_DDL,
+                        price="close")
 
 
 SUPERTREND_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
@@ -240,58 +208,26 @@ SUPERTREND_STATE_DDL = ("atr DOUBLE, fub DOUBLE, flb DOUBLE, trend INT, "
                         "prev_close DOUBLE, started BOOLEAN")
 
 
-def _supertrend_step(alpha: float, mult: float):
-    """Checkpointed tick-level supertrend: with high = low = close,
-    true range reduces to |close − prev close| and the first tick
-    seeds atr = 0 (bands collapse onto the price, trend −1) — the
-    same recurrence order as the batch bar kernel
-    (operators/channels.q_supertrend), so replay is bit-identical to
-    the recursive-CTE oracle."""
-
-    def step(state, pdf):
-        atr, fub, flb, trend, pc, started = state
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out_st = np.empty(len(vals), dtype="float64")
-        out_tr = np.empty(len(vals), dtype="int32")
-        for i, cl in enumerate(vals):
-            if not started:
-                atr, fub, flb, trend, started = 0.0, cl, cl, -1, True
-            else:
-                tr = abs(cl - pc)
-                atr = atr + alpha * (tr - atr)
-                bub = cl + mult * atr
-                blb = cl - mult * atr
-                fub = bub if (bub < fub or pc > fub) else fub
-                flb = blb if (blb > flb or pc < flb) else flb
-                if trend == -1 and cl > fub:
-                    trend = 1
-                elif trend == 1 and cl < flb:
-                    trend = -1
-            pc = cl
-            out_st[i] = flb if trend == 1 else fub
-            out_tr[i] = trend
-        return (atr, fub, flb, trend, pc, started), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "close": vals,
-            "supertrend": out_st,
-            "trend": out_tr,
-        }
-
-    return step
-
-
 def supertrend_per_key(sdf: DataFrame, alpha: float = 1.0 / 10.0,
                        mult: float = 3.0) -> DataFrame:
     """Streaming supertrend(10, 3) per user_id — the live band-ratchet
-    state machine; state is O(n_keys × 5 scalars). NULL ticks are
-    dropped: a NULL close would poison the (atr, bands) state, and the
-    recursive-CTE oracle (_stream_supertrend_sql) filters them too."""
-    return _keyed_state(sdf, _TICK_COLS, _supertrend_step(alpha, mult),
-                        init=(math.nan, math.nan, math.nan, 0, math.nan,
-                              False),
+    state machine; state is O(n_keys × 5 scalars). Each tick is a bar
+    with high = low = close for the batch supertrend step
+    (operators/channels._supertrend_step): true range reduces to
+    |close − prev close| and the first tick seeds atr = 0, so replay is
+    bit-identical to the recursive-CTE oracle. NULL ticks are dropped:
+    a NULL close would poison the (atr, bands) state, and the oracle
+    (_stream_supertrend_sql) filters them too."""
+    bar = _supertrend_step(alpha, mult)
+
+    def step(state, cols):
+        price = cols["close"]
+        return bar(state, {"high": price, "low": price, "close": price})
+
+    return _keyed_state(sdf, _TICK_COLS, step, init=_SUPERTREND_INIT,
                         state_ddl=SUPERTREND_STATE_DDL,
-                        output_ddl=SUPERTREND_OUTPUT_DDL, drop_null=True)
+                        output_ddl=SUPERTREND_OUTPUT_DDL, drop_null=True,
+                        price="close")
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +238,7 @@ TRANSITIONS_OUTPUT_DDL = "user_id BIGINT, from_type STRING, to_type STRING"
 TRANSITIONS_STATE_DDL = "last_type STRING"
 
 
-def _transition_step(state, pdf):
+def _transition_step(state, cols):
     """Per-key consecutive (event, next event) pair emitter: the only
     state is the key's LAST event type, carried across micro-batches
     so the pair straddling a batch boundary is emitted exactly once —
@@ -311,7 +247,7 @@ def _transition_step(state, pdf):
     (last,) = state
     frm: list = []
     to: list = []
-    for t in pdf["event_type"].tolist():
+    for t in cols["event_type"].tolist():
         if last is not None:
             frm.append(last)
             to.append(t)
@@ -329,42 +265,10 @@ def transitions_per_key(sdf: DataFrame) -> DataFrame:
 
 
 #: Output mirrors the batch Holt kernel's per-row trajectory
-#: (operators/ewm.q_holt_forecast computes the same recurrence).
+#: (operators/ewm.q_holt_forecast runs the same step).
 HOLT_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
                    "close DOUBLE, holt_level DOUBLE, holt_trend DOUBLE")
 HOLT_STATE_DDL = "lvl DOUBLE, trend DOUBLE, started BOOLEAN"
-
-
-def _holt_step(a: float, b_const: float):
-    """Checkpointed continuation of the coupled Holt recurrence —
-    the same operation order as the batch kernel
-    (operators/ewm.q_holt_forecast), so the streamed trajectory is
-    bit-identical to the batch fit when events arrive in order."""
-
-    def step(state, pdf):
-        lvl, trend, started = state
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out_l = np.empty(len(vals), dtype="float64")
-        out_b = np.empty(len(vals), dtype="float64")
-        for i, y in enumerate(vals):
-            if not started:
-                lvl, trend, started = float(y), 0.0, True
-            else:
-                l2 = a * float(y) + (1.0 - a) * (lvl + trend)
-                trend = b_const * (l2 - lvl) + (1.0 - b_const) * trend
-                lvl = l2
-            out_l[i] = lvl
-            out_b[i] = trend
-        return (lvl, trend, started), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "close": vals,
-            "holt_level": out_l,
-            "holt_trend": out_b,
-        }
-
-    return step
-
 
 #: Output mirrors the batch Kalman kernel's per-row trajectory
 #: (operators/ewm.q_kalman_level runs the same recurrence).
@@ -374,66 +278,34 @@ KALMAN_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 KALMAN_STATE_DDL = "lvl DOUBLE, p DOUBLE, started BOOLEAN"
 
 
-def _kalman_step(q_noise: float, r_noise: float):
-    """Checkpointed continuation of the coupled Kalman (level,
-    variance) recurrence — identical operation order to the batch
-    kernel (operators/ewm.q_kalman_level), so the streamed trajectory
-    is bit-identical to the batch fit when events arrive in order.
-    The first observation of a key has no gain (NaN here; the caller
-    normalizes to NULL to match the oracle's first recursive row)."""
-
-    def step(state, pdf):
-        lvl, p, started = state
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out_l = np.empty(len(vals), dtype="float64")
-        out_p = np.empty(len(vals), dtype="float64")
-        out_k = np.empty(len(vals), dtype="float64")
-        for i, y in enumerate(vals):
-            if not started:
-                lvl, p, gain, started = float(y), 1.0, math.nan, True
-            else:
-                pp = p + q_noise
-                gain = pp / (pp + r_noise)
-                lvl = lvl + gain * (float(y) - lvl)
-                p = (1.0 - gain) * pp
-            out_l[i] = lvl
-            out_p[i] = p
-            out_k[i] = gain
-        return (lvl, p, started), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "close": vals,
-            "kal_level": out_l,
-            "kal_p": out_p,
-            "kal_gain": out_k,
-        }
-
-    return step
-
-
 def kalman_per_key(sdf: DataFrame, q_noise: float = 0.01,
                    r_noise: float = 1.0) -> DataFrame:
     """Streaming Kalman local-level filter per user_id with
-    checkpointed (level, variance) state — O(n_keys × 2 doubles).
-    NULL ticks are dropped (they would poison the state; the oracle
-    filters them)."""
+    checkpointed (level, variance) state — O(n_keys × 2 doubles), the
+    batch kernel's step (operators/ewm._kalman_step), so the streamed
+    trajectory is bit-identical to the batch fit when events arrive in
+    order. A key's first observation has no gain (NaN here; the caller
+    normalizes to NULL). NULL ticks are dropped (they would poison the
+    state; the oracle filters them)."""
     return _keyed_state(sdf, _TICK_COLS, _kalman_step(q_noise, r_noise),
-                        init=(math.nan, math.nan, False),
-                        state_ddl=KALMAN_STATE_DDL,
-                        output_ddl=KALMAN_OUTPUT_DDL, drop_null=True)
+                        init=_KALMAN_INIT, state_ddl=KALMAN_STATE_DDL,
+                        output_ddl=KALMAN_OUTPUT_DDL, drop_null=True,
+                        price="close")
 
 
 def holt_per_key(sdf: DataFrame, a: float = 0.2,
                  b_const: float = 0.1) -> DataFrame:
     """Streaming Holt level+trend per user_id with checkpointed
-    coupled state (lvl, trend, started) — O(n_keys × 2 doubles).
+    coupled state (lvl, trend, started) — O(n_keys × 2 doubles), the
+    batch step (operators/ewm._holt_step), so the streamed trajectory
+    is bit-identical to the batch fit when events arrive in order.
     NULL ticks are dropped: a NaN would poison the (level, trend)
     pair, while the oracle (_stream_holt_sql) and the batch sibling
     q_holt_forecast both filter WHERE value IS NOT NULL."""
     return _keyed_state(sdf, _TICK_COLS, _holt_step(a, b_const),
-                        init=(math.nan, math.nan, False),
-                        state_ddl=HOLT_STATE_DDL,
-                        output_ddl=HOLT_OUTPUT_DDL, drop_null=True)
+                        init=_HOLT_INIT, state_ddl=HOLT_STATE_DDL,
+                        output_ddl=HOLT_OUTPUT_DDL, drop_null=True,
+                        price="close")
 
 
 # ---------------------------------------------------------------------------
@@ -445,17 +317,11 @@ DRAWDOWN_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
 DRAWDOWN_STATE_DDL = "peak DOUBLE"
 
 
-def _drawdown_step(state, pdf):
+def _drawdown_step(state, cols):
     """numpy cummax seeded with the key's prior peak."""
-    vals = pdf["value"].to_numpy(dtype="float64")
+    vals = cols["value"]
     peaks = np.maximum.accumulate(np.r_[state[0], vals])[1:]
-    return (float(peaks[-1]),), {
-        "event_id": pdf["event_id"].astype("int64"),
-        "ts": pdf["ts"],
-        "value": vals,
-        "peak": peaks,
-        "drawdown": peaks - vals,
-    }
+    return (float(peaks[-1]),), {"peak": peaks, "drawdown": peaks - vals}
 
 
 def drawdown_per_key(sdf: DataFrame) -> DataFrame:
@@ -465,7 +331,7 @@ def drawdown_per_key(sdf: DataFrame) -> DataFrame:
     return _keyed_state(sdf, _TICK_COLS, _drawdown_step,
                         init=(float("-inf"),),
                         state_ddl=DRAWDOWN_STATE_DDL,
-                        output_ddl=DRAWDOWN_OUTPUT_DDL)
+                        output_ddl=DRAWDOWN_OUTPUT_DDL, price="value")
 
 
 # ---------------------------------------------------------------------------
@@ -502,12 +368,13 @@ def _cusum_step(k_allow: float, h_thresh: float):
     clamps before the mean update), so trajectories — and therefore
     the drift booleans — are bit-identical."""
 
-    def step(state, pdf):
+    def step(state, cols):
         i, mean, s_pos, s_neg = state
-        vals = pdf["value"].to_numpy(dtype="float64")
-        out = {"run_mean": [], "s_pos": [], "s_neg": [], "drift": []}
-        for y in vals:
-            y = float(y)
+        ys = cols["value"].tolist()
+        run_mean = np.empty(len(ys), dtype=np.float64)
+        pos = np.empty(len(ys), dtype=np.float64)
+        neg = np.empty(len(ys), dtype=np.float64)
+        for r, y in enumerate(ys):
             if i == 0:
                 i, mean, s_pos, s_neg = 1, y, 0.0, 0.0
             else:
@@ -516,16 +383,10 @@ def _cusum_step(k_allow: float, h_thresh: float):
                 s_pos = max(0.0, s_pos + dev - k_allow)
                 s_neg = max(0.0, s_neg - dev - k_allow)
                 mean = mean + dev / float(i)
-            out["run_mean"].append(mean)
-            out["s_pos"].append(s_pos)
-            out["s_neg"].append(s_neg)
-            out["drift"].append(s_pos > h_thresh or s_neg > h_thresh)
+            run_mean[r], pos[r], neg[r] = mean, s_pos, s_neg
         return (i, mean, s_pos, s_neg), {
-            "event_id": pdf["event_id"].astype("int64"),
-            "ts": pdf["ts"],
-            "value": vals,
-            **out,
-        }
+            "run_mean": run_mean, "s_pos": pos, "s_neg": neg,
+            "drift": (pos > h_thresh) | (neg > h_thresh)}
 
     return step
 
@@ -539,7 +400,8 @@ def cusum_per_key(sdf: DataFrame, k_allow: float = CUSUM_K,
     return _keyed_state(sdf, _TICK_COLS, _cusum_step(k_allow, h_thresh),
                         init=(0, 0.0, 0.0, 0.0),
                         state_ddl=CUSUM_STATE_DDL,
-                        output_ddl=CUSUM_OUTPUT_DDL, drop_null=True)
+                        output_ddl=CUSUM_OUTPUT_DDL, drop_null=True,
+                        price="value")
 
 
 # ---------------------------------------------------------------------------

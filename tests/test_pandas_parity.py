@@ -422,31 +422,109 @@ def test_skewed_batch_takes_scalar_fallback_bit_equal():
                                   np.array(want_l))
 
 
-def test_force_scalar_flag_is_captured_and_bit_identical():
-    """The A/B switch (tools/ab_ewm_kernel.py): FORCE_SCALAR_KERNEL
-    must be captured at kernel-FACTORY time (so the pickled closure
-    carries it to workers) and the forced-scalar lane must stay
-    bit-identical to the vectorized one."""
-    import numpy as np
-    import pandas as pd
+#: Batch queries whose recurrence runs in a per-key kernel that carries
+#: state across Arrow batches (keyed_scan, plus the Kalman kernel).
+_SCAN_QUERIES = ["holt_forecast", "forecast_anomalies", "forecast_backtest",
+                 "kalman_level", "parabolic_sar", "supertrend", "kama",
+                 "trix", "mass_index"]
 
-    from big_data_share_market_spark.operators import ewm as ewm_mod
 
-    rng = np.random.default_rng(11)
-    pdf = pd.DataFrame({
-        "user_id": np.repeat(np.arange(6), 40),
-        "close": rng.normal(100, 5, 240),
-    })
-    vec_kern = ewm_mod._ewm_kernel([("e", ("close", 0.3))], "user_id")
-    ewm_mod.FORCE_SCALAR_KERNEL = True
-    try:
-        scal_kern = ewm_mod._ewm_kernel([("e", ("close", 0.3))],
-                                        "user_id")
-    finally:
-        ewm_mod.FORCE_SCALAR_KERNEL = False
-    # Built AFTER the reset: must still be scalar (captured, not read
-    # at execution time) — identical values prove only bit-identity,
-    # so assert capture via a fresh vectorized build equality too.
-    vec = pd.concat(list(vec_kern(iter([pdf]))), ignore_index=True)
-    scal = pd.concat(list(scal_kern(iter([pdf]))), ignore_index=True)
-    assert (vec["e"].to_numpy() == scal["e"].to_numpy()).all()
+def _scan_input(columns: list[str]) -> pd.DataFrame:
+    """Three keys of 25, 10 and 8 rows, sorted by key then order, with
+    a value for every column a staged kernel input can carry and NaN
+    in some double inputs (including a key's first row)."""
+    rng = np.random.default_rng(20261017)
+    lens = [25, 10, 8]
+    n = sum(lens)
+    close = 100.0 + rng.normal(0.0, 2.0, n).cumsum()
+    spread = np.abs(rng.normal(0.0, 1.0, n))
+    sc = rng.uniform(0.0, 1.0, n)
+    sc[[0, 1, 2, 25]] = np.nan  # undefined sc before the window fills
+    cols = {
+        "user_id": np.repeat(np.arange(1, 4), lens).astype("int64"),
+        "event_id": np.arange(n, dtype="int64"),
+        "ts": (pd.Timestamp("2024-01-02")
+               + pd.to_timedelta(np.arange(n), unit="h")).to_numpy(),
+        "high": close + spread, "low": close - spread, "close": close,
+        "rng": 2.0 * spread, "sc": sc,
+        "rn": np.concatenate([np.arange(1, k + 1) for k in lens]),
+        "n_obs": np.repeat(lens, lens),
+    }
+    cols["bar_ts"] = cols["ts"]
+    cols["n_rows"] = cols["n_obs"]
+    for c in ("close", "high", "low", "rng"):
+        cols[c][[12, 35]] = np.nan  # key 1 mid-series, key 3's first row
+    return pd.DataFrame({c: cols[c] for c in columns})
+
+
+@pytest.mark.parametrize("name", _SCAN_QUERIES)
+def test_keyed_scan_output_independent_of_batch_split(spark, monkeypatch,
+                                                      name):
+    """The batch twin of the stream split test: the function a
+    per-key batch query hands to mapInPandas must give the same rows
+    whether a partition arrives as one Arrow batch or as several —
+    one key spread over three batches, a key change exactly at a batch
+    boundary, an empty batch — and the same rows as running each key
+    alone (so state resets on every new key). Fixture scale never
+    splits a key across Arrow batches, so only this test covers the
+    carry."""
+    from big_data_share_market_spark.registry import all_queries
+
+    from .conftest import SF_DIR
+
+    captured = []
+    frame_cls = type(spark.range(1))
+    map_in_pandas = frame_cls.mapInPandas
+
+    def capture(self, func, schema, *args, **kwargs):
+        captured.append((func, self.columns))
+        return map_in_pandas(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", capture)
+    all_queries()[name][0](spark, SF_DIR)
+    [(func, columns)] = captured
+    pdf = _scan_input(columns)
+
+    def run(batches):
+        return pd.concat(list(func(iter(batches))), ignore_index=True)
+
+    whole = run([pdf])
+    cuts = [0, 8, 17, 17, 25, 40, len(pdf)]  # 25 = key 1 -> key 2
+    split = run([pdf.iloc[a:b].reset_index(drop=True)
+                 for a, b in zip(cuts, cuts[1:])])
+    per_key = pd.concat([run([g.reset_index(drop=True)])
+                         for _, g in pdf.groupby("user_id", sort=True)],
+                        ignore_index=True)
+    assert len(whole) == len(pdf)
+    pd.testing.assert_frame_equal(split, whole, check_exact=True)
+    pd.testing.assert_frame_equal(per_key, whole, check_exact=True)
+
+
+def test_chained_ema_steps_skip_nan_like_the_oracle():
+    """TRIX and mass index chain the shared EMA step, so a NaN input
+    carries every level the way the oracle's NULL-skipping list fold
+    does (the fixtures hold no NULL close, so parity cannot show it):
+    each level equals ewm_mean of the level below."""
+    import math
+
+    from big_data_share_market_spark.operators.channels import (
+        _mass_step, _trix_step)
+    from big_data_share_market_spark.operators.ewm import _ewm_init
+
+    rng = np.random.default_rng(5)
+    x = 100.0 + rng.normal(0.0, 2.0, 300).cumsum()
+    x[rng.random(300) < 0.1] = np.nan
+    x[0] = np.nan
+    a = 2.0 / 16.0
+    e3 = ewm_mean(ewm_mean(ewm_mean(x, a), a), a)
+    p3 = np.r_[np.nan, e3[:-1]]
+    _, out = _trix_step(a)(_ewm_init(3), {"close": x})
+    np.testing.assert_array_equal(out["ema3"], e3)
+    np.testing.assert_array_equal(out["trix"], [
+        100.0 * (v / p - 1.0) if not math.isnan(p) and p != 0.0 else np.nan
+        for v, p in zip(e3, p3)])
+    e1 = ewm_mean(x, 0.2)
+    e2 = ewm_mean(e1, 0.2)
+    _, out = _mass_step(0.2)(_ewm_init(2), {"rng": x})
+    np.testing.assert_array_equal(out["ratio"],
+                                  np.where(e2 != 0.0, e1 / e2, np.nan))

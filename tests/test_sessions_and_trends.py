@@ -407,6 +407,63 @@ def test_state_machines_share_one_adapter():
                 if "transformWithStateInPandas" in p.read_text()]
 
 
+def _reachable_functions(fn) -> list:
+    """`fn` and every function reachable through closure cells."""
+    seen, todo = [], [fn]
+    while todo:
+        f = todo.pop()
+        if f in seen:
+            continue
+        seen.append(f)
+        todo.extend(c.cell_contents for c in f.__closure__ or ()
+                    if hasattr(c.cell_contents, "__code__"))
+    return seen
+
+
+@pytest.mark.usefixtures("spark")
+def test_recurrences_have_one_step_and_one_runner_per_side():
+    """Per-key recurrences are written once as steps. In the batch
+    operators only `_apply_ewm`, `keyed_scan` and the two kernels with
+    their own shape (Holt-Winters' per-key summary, the Kalman dense
+    kernel) call mapInPandas; state.py defines no EMA, Holt, Kalman or
+    supertrend step of its own, and its builders run the operator
+    modules' steps."""
+    import ast
+    import pathlib
+
+    from big_data_share_market_spark.operators import channels, ewm
+    from big_data_share_market_spark.streaming import state as st
+
+    def map_in_pandas_callers(module) -> list[str]:
+        src = pathlib.Path(module.__file__).read_text()
+        callers = sorted(fn.name for fn in ast.parse(src).body
+                         if isinstance(fn, ast.FunctionDef)
+                         for node in ast.walk(fn)
+                         if isinstance(node, ast.Attribute)
+                         and node.attr == "mapInPandas")
+        assert src.count(".mapInPandas(") == len(callers)
+        return callers
+
+    assert map_in_pandas_callers(ewm) == [
+        "_apply_ewm", "keyed_scan", "q_holt_winters", "q_kalman_level"]
+    assert map_in_pandas_callers(channels) == []
+
+    tree = ast.parse(pathlib.Path(st.__file__).read_text())
+    defined = {fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)}
+    assert not defined & {"_ema_step", "_holt_step", "_kalman_step",
+                          "_supertrend_step"}
+    for builder, module, factory in [
+            ("ema_per_key", ewm, "_ewm_step"),
+            ("holt_per_key", ewm, "_holt_step"),
+            ("kalman_per_key", ewm, "_kalman_step"),
+            ("supertrend_per_key", channels, "_supertrend_step")]:
+        cap = _CaptureStream()
+        getattr(st, builder)(cap)
+        assert any(f.__module__ == module.__name__
+                   and f.__qualname__.startswith(factory + ".")
+                   for f in _reachable_functions(cap.call[0])), builder
+
+
 @pytest.mark.usefixtures("spark")
 def test_theil_sen_exact_recovery_with_outliers(spark):
     """y = 2.5 * hours exactly, plus 2 gross outliers out of 12 points:
