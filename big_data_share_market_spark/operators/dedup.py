@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..staging import staged
-from ..tables import fan_out, load_table
+from ..tables import fan_out, iterate, load_table
 
 # Spark-side word-3-gram shingles (0-based); DuckDB mirror is 1-based.
 _SHINGLES_EXPR = (
@@ -879,48 +879,6 @@ ORDER BY doc_id
 # Connected components over the near-dup graph (transitive closure)
 # ---------------------------------------------------------------------------
 
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive dedup clusters: pairwise near-dup decisions are not
-    enough to pick keepers (A~B, B~C must collapse A,B,C together even
-    if A!~C), so the verified MinHash pair graph is closed into
-    connected components by iterative min-label propagation — the
-    Pregel pattern expressed on DataFrames.
-
-    Per iteration: one shuffle joining labels onto edges + a min-agg
-    back onto nodes; `localCheckpoint` truncates the lineage so plan
-    depth stays constant; the driver reads ONE boolean per iteration
-    (did any label change) — not the data. Iteration count is the
-    cluster diameter, which for near-dup graphs is tiny (dup clusters
-    are cliques-ish); the same loop at 100 TB runs the same handful of
-    bounded shuffles. Oracle: DuckDB recursive CTE computing the same
-    min-reachable-id per node."""
-    pairs = minhash_pairs(spark, sf_dir).select("a_id", "b_id")
-    edges = (pairs.union(pairs.select("b_id", "a_id"))
-             .toDF("src", "dst").cache())
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("lbl", F.col("node")).localCheckpoint())
-    while True:
-        nbr_min = (
-            edges.join(labels.select(F.col("node").alias("dst"),
-                                     F.col("lbl").alias("dst_lbl")), "dst")
-            .groupBy("src").agg(F.min("dst_lbl").alias("nbr_lbl")))
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("src", "node"), "node", "left")
-            .select("node",
-                    F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"))
-            .localCheckpoint())
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.lbl") != F.col("o.lbl"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return (labels.select(F.col("node").alias("doc_id"),
-                          F.col("lbl").alias("component_id"))
-            .orderBy("doc_id"))
-
-
 #: Shared recursive-CTE block: symmetrized near-dup edges + the
 #: min-reachable-id closure. The THREE oracles over component labels
 #: (_COMPONENTS_SQL, _CLUSTER_STATS_SQL, _SURVIVORSHIP_SQL) must stay
@@ -976,19 +934,30 @@ def cc_alternating_edges(
 
     Scale shape: per round, two map-side-combined groupBys + two
     equi-joins over an edge set that never exceeds the input size
-    (star-contraction monotonically shrinks it); `localCheckpoint`
-    truncates lineage so plan depth stays O(1) per round instead of
-    O(rounds); the driver reads one boolean (did the edge set
+    (star-contraction monotonically shrinks it); `iterate` freezes the
+    edge set so plan depth stays O(1) per round instead of
+    O(rounds); the driver reads one scalar pair (did the edge set
     change), never data. No collect, no diameter dependence — the
     round count is what survives a 10¹²-edge graph."""
-    e = (edges.filter(F.col("src") != F.col("dst"))
-         .select(F.greatest("src", "dst").alias("u"),
-                 F.least("src", "dst").alias("v"))
-         .distinct().localCheckpoint())
-    rounds = 0
-    prev_stats = None
-    while rounds < max_rounds:
-        rounds += 1
+    seen = {}  # the last probed edge set and its (count, checksum)
+
+    def star_round(i, e):
+        # Convergence probe in ONE driver-side scalar read per round:
+        # (count, order-free hash checksum) of the frozen edge set the
+        # previous round produced. Only when the pair repeats — which
+        # for distinct sets means "almost surely unchanged" — pay the
+        # exact anti-join verify, so the steady-state loop costs 2
+        # jobs/round (freeze + agg) instead of 4 (the checksum never
+        # falsely stops the loop; the verify guards the 2⁻⁶⁴
+        # collision). The input set (i = 1) is never probed.
+        if i > 1:
+            stats = tuple(e.agg(
+                F.count("*"), F.sum(F.xxhash64("u", "v"))).first())
+            if stats == seen.get("stats") and (
+                    e.join(seen["e"], ["u", "v"], "left_anti")
+                    .limit(1).count()) == 0:
+                return None
+            seen.update(e=e, stats=stats)
         # large-star over the symmetrized view
         nbrs = e.select("u", "v").unionAll(
             e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1000,39 +969,30 @@ def cc_alternating_edges(
               .distinct())
         # small-star over the downhill set (all v < u by construction)
         ss_mins = ls.groupBy("u").agg(F.min("v").alias("m"))
-        new_e = (ls.join(ss_mins, "u")
-                 .filter(F.col("v") != F.col("m"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .unionAll(ss_mins.select(
-                     F.col("u"), F.col("m").alias("v")))
-                 .distinct().localCheckpoint())
-        # Convergence probe in ONE driver-side scalar read per round:
-        # (count, order-free hash checksum) of the edge set. Only when
-        # the pair repeats — which for distinct sets means "almost
-        # surely unchanged" — pay the exact anti-join verify, so the
-        # steady-state loop costs 2 jobs/round (checkpoint + agg)
-        # instead of 4 (the checksum never falsely BREAKS the loop;
-        # the verify guards the 2⁻⁶⁴ collision).
-        n, h = new_e.agg(
-            F.count("*"), F.sum(F.xxhash64("u", "v"))).first()
-        if (n, h) == prev_stats:
-            if (new_e.join(e, ["u", "v"], "left_anti")
-                    .limit(1).count()) == 0:
-                e = new_e
-                break
-        prev_stats = (n, h)
-        e = new_e
-    else:
-        # Loop exhausted without the checksum repeating. The set may
-        # STILL have converged exactly in the final round (detection
-        # needs one extra no-change round), so check the fixpoint
-        # PROPERTY directly: a star forest has no edge whose parent v
-        # is itself some edge's child u. Only a genuinely non-star
-        # set — whose labels would map nodes to intermediate parents,
-        # silently splitting components — raises. The theory bound is
-        # O(log² n) rounds; a true non-convergence at 40 means the
-        # input is pathological and wrong labels must never be
-        # returned quietly.
+        return (ls.join(ss_mins, "u")
+                .filter(F.col("v") != F.col("m"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .unionAll(ss_mins.select(
+                    F.col("u"), F.col("m").alias("v")))
+                .distinct())
+
+    e, rounds = iterate(
+        edges.sparkSession,
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.greatest("src", "dst").alias("u"),
+                F.least("src", "dst").alias("v"))
+        .distinct(),
+        star_round, rounds=max_rounds, narrow=False)
+    if rounds == max_rounds:
+        # Budget spent without a repeated edge set. The set may STILL
+        # have converged exactly in the final round (detection needs
+        # one more probe), so check the fixpoint PROPERTY directly: a
+        # star forest has no edge whose parent v is itself some edge's
+        # child u. Only a genuinely non-star set — whose labels would
+        # map nodes to intermediate parents, silently splitting
+        # components — raises. The theory bound is O(log² n) rounds; a
+        # true non-convergence at 40 means the input is pathological
+        # and wrong labels must never be returned quietly.
         non_root_parents = (
             e.join(e.select(F.col("u").alias("v")).distinct(),
                    "v", "left_semi")
@@ -1049,10 +1009,10 @@ def cc_alternating_edges(
 
 
 # Staged component labels per (applicationId, sf_dir): the CC loop's
-# output is consumed by q_cc_alternating AND q_dedup_survivorship —
-# both in the driver window and bench — and the labels are
-# localCheckpointed anyway, so re-running the multi-round loop per
-# consumer would be pure waste.
+# output is consumed by q_cc_alternating (served under two names),
+# q_dedup_cluster_stats AND q_dedup_survivorship — in the driver
+# window and bench — and the loop runs eagerly anyway, so re-running
+# it per consumer would be pure waste.
 @staged("dedup.cc_labels")
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
@@ -1071,12 +1031,14 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-cluster labels over the verified MinHash near-dup graph —
-    semantically identical to q_dedup_components (node → component
-    minimum) but computed by alternating star contraction instead of
-    min-label propagation, so the round count is O(log n) in the
-    largest cluster size instead of O(diameter). Oracle: the same
-    recursive min-reachable-id CTE (the label set is algorithm-
+    """Transitive dedup clusters: pairwise near-dup decisions are not
+    enough to pick keepers (A~B, B~C must collapse A,B,C together even
+    if A!~C), so the verified MinHash pair graph is closed into
+    connected components (node → component minimum) by alternating
+    star contraction, whose round count is O(log n) in the largest
+    cluster size instead of min-label propagation's O(diameter).
+    Served as both `cc_alternating` and `dedup_components`. Oracle:
+    the recursive min-reachable-id CTE (the label set is algorithm-
     independent). tests/test_invariants.py pins the round count on a
     64-node chain at ≤ 8 (propagation needs 63)."""
     labels = _cc_labels(spark, sf_dir)
@@ -1803,7 +1765,7 @@ QUERIES = {
     "dedup_keep_longest": (q_dedup_keep_longest, _KEEP_LONGEST_SQL),
     "dup_ngram_spans": (q_dup_ngram_spans, _DUP_SPANS_SQL),
     "neardup_split_leakage": (q_neardup_split_leakage, _split_leakage_sql()),
-    "dedup_components": (q_dedup_components, _COMPONENTS_SQL),
+    "dedup_components": (q_cc_alternating, _COMPONENTS_SQL),
     "cc_alternating": (q_cc_alternating, _COMPONENTS_SQL),
     "dedup_survivorship": (q_dedup_survivorship, _SURVIVORSHIP_SQL),
     "dedup_cluster_stats": (q_dedup_cluster_stats, _CLUSTER_STATS_SQL),

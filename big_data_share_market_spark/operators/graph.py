@@ -2,7 +2,7 @@
 fixed-iteration PageRank expressed as repeated DataFrame join+agg.
 
 Beyond the reference (whose only graph-adjacent op is the pairwise
-dedup component grouping, see dedup.q_dedup_components) — this is the
+dedup component grouping, see dedup.q_cc_alternating) — this is the
 iterative-algorithm shape a Spark engine must support: a loop that
 re-joins a small per-node state relation against a large, STAGED edge
 relation.
@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..staging import staged
-from ..tables import load_table
+from ..tables import freeze, iterate, load_table
 
 #: Damping = _DAMP_NUM/_DAMP_DEN; fixed iteration count; total rank
 #: mass in fixed-point units (10^15 leaves 85*10^15 « int64 max).
@@ -433,87 +433,58 @@ def q_part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round, the node set semi-restricts the staged
     edge relation (two BROADCAST joins — the active set is node-
-    sized) and one map-side-combined degree count; the peeled-node
-    union rows are emitted as they die. The whole decomposition is a
-    LAZY _KCORE_ROUNDS-deep plan over one persisted edge relation —
-    no driver loop state, no collect (the q_part_pagerank shape). At
-    web scale the broadcast becomes a shuffle semi-join and rounds
-    batch into doubling passes; k-core peeling is O(|E|) total work
-    regardless (each edge dies once).
+    sized) and one map-side-combined degree count; the round's
+    survivors are frozen (`iterate`) and its peeled layer is the lazy
+    anti-join of two frozen sets; the driver reads one count per
+    round, never data. At web scale the broadcast becomes a shuffle
+    semi-join and rounds batch into doubling passes; k-core peeling
+    is O(|E|) total work regardless (each edge dies once).
 
     Exactness: degrees and layers are pure integer set logic —
     bit-identical on any engine; the oracle unrolls the identical
     fixed round chain."""
     edges = _repeat_edges(spark, sf_dir)
-    # Each round references `active` three times (both semi-joins +
-    # the anti-join), so a fully lazy loop TRIPLES the plan tree per
-    # round (3⁸ copies of the base subtree — Catalyst chokes);
-    # localCheckpoint truncates the node-sized relation each round,
-    # keeping the per-round plan constant. Same discipline as
-    # cc_alternating; q_part_pagerank can stay lazy only because its
-    # rank relation is referenced once per round.
-    # The node-state relation is |V|-sized (a few thousand rows at
-    # fixture scale) yet inherits 32 shuffle partitions — per-round
-    # job cost is then task scheduling, not work. coalesce(1) before
-    # each checkpoint: one task per round job, and the subsequent
-    # broadcasts read one block. At web scale (|V| beyond one task)
-    # drop the coalesce and let the semi-joins shuffle — the loop
-    # structure is unchanged.
-    # The peel loop is EAGER (localCheckpoint + count per round), so
-    # AQE is scoped OFF around it and restored before the lazy result
-    # is returned (the q_pca_power_iteration discipline, r11): each
-    # round's V-sized degree job otherwise pays AQE's per-exchange
-    # materialization jobs to re-plan a coalesce(1)-capped shuffle —
-    # measured same-session 4.3-4.7 → 3.1-3.9 s for the build.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    peeled = []
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        active = (edges.select(F.col("src").alias("node")).distinct()
-                  .coalesce(1).localCheckpoint())
-        n_active = active.count()
-        for i in range(1, _KCORE_ROUNDS + 1):
-            sa = active.select(F.col("node").alias("src"))
-            sb = active.select(F.col("node").alias("dst"))
-            deg = (edges
-                   .join(F.broadcast(sa), "src")
-                   .join(F.broadcast(sb), "dst")
-                   .groupBy("src").agg(F.count("*").alias("c")))
-            surv = (deg.filter(F.col("c") >= _KCORE_K)
-                    .select(F.col("src").alias("node"))
-                    .coalesce(1).localCheckpoint())
-            peeled.append(
-                active.join(F.broadcast(surv), "node", "left_anti")
-                .select("node", F.lit(i).alias("peel_round")))
-            n_surv = surv.count()
-            removed_any = n_surv != n_active
-            active, n_active = surv, n_surv
-            # A round that removes nothing IS the fixpoint — every
-            # later round would recompute identical degrees and
-            # remove nothing, so skipping them cannot change the
-            # output (the oracle keeps the full unroll; its extra
-            # rounds are the same no-ops). The count is a free read
-            # off the just-checkpointed relation.
-            if not removed_any:
-                break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    sa = active.select(F.col("node").alias("src"))
-    sb = active.select(F.col("node").alias("dst"))
-    core_deg = (edges
+
+    def degree(active: DataFrame, name: str) -> DataFrame:
+        sa = active.select(F.col("node").alias("src"))
+        sb = active.select(F.col("node").alias("dst"))
+        return (edges
                 .join(F.broadcast(sa), "src")
                 .join(F.broadcast(sb), "dst")
-                .groupBy("src").agg(F.count("*").alias("core_degree")))
-    core = (active.join(
+                .groupBy("src").agg(F.count("*").alias(name)))
+
+    # Each round references `active` three times (both semi-joins +
+    # the anti-join), so a lazy loop would triple the plan per round;
+    # iterate freezes it. q_part_pagerank stays lazy because its rank
+    # relation is referenced once per round.
+    layers = []  # the frozen active set entering each round, and its size
+
+    def peel(_i, active):
+        n = active.count()
+        if layers and layers[-1][1] == n:
+            # The previous round removed nothing: every later round
+            # would recompute the same degrees (the oracle keeps the
+            # full unroll; its extra rounds are the same no-ops).
+            return None
+        layers.append((active, n))
+        return (degree(active, "c").filter(F.col("c") >= _KCORE_K)
+                .select(F.col("src").alias("node")))
+
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    active, _ = iterate(spark, nodes, peel, rounds=_KCORE_ROUNDS,
+                        narrow=True)
+    core_deg = degree(active, "core_degree")
+    out = (active.join(
         F.broadcast(core_deg.withColumnRenamed("src", "node")),
         "node", "left")
-            .select("node", F.lit(None).cast("int").alias("peel_round"),
-                    "core_degree"))
-    out = core
-    for p in peeled:
+        .select("node", F.lit(None).cast("int").alias("peel_round"),
+                "core_degree"))
+    sets = [a for a, _n in layers] + [active]
+    for i, (before, after) in enumerate(zip(sets, sets[1:]), 1):
         out = out.unionByName(
-            p.select("node", "peel_round",
-                     F.lit(None).cast("long").alias("core_degree")))
+            before.join(F.broadcast(after), "node", "left_anti")
+            .select("node", F.lit(i).alias("peel_round"),
+                    F.lit(None).cast("long").alias("core_degree")))
     return out.orderBy("node")
 
 
@@ -575,38 +546,33 @@ def q_part_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops or in other components are absent — the bounded-round
     contract shared with q_part_kcore; an empty frontier exits early
     (all later rounds are provably no-ops). Node-state relations are
-    coalesced to one task at fixture scale (see q_part_kcore note).
+    frozen onto one task per round (`iterate`, narrow).
 
     Exactness: hop labels are pure set logic, and each node joins the
     reached set at its MINIMUM hop by construction (it is excluded
     from every later layer) — identical in the oracle's unrolled
     MATERIALIZED CTE chain."""
     edges = _repeat_edges(spark, sf_dir)
-    # Eager expansion loop → AQE scoped OFF and restored, exactly the
-    # q_part_kcore note above (r11).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        reached = (edges.agg(F.min("src").alias("node"))
-                   .withColumn("hops", F.lit(0))
-                   .coalesce(1).localCheckpoint())
-        frontier = reached.select("node")
-        for i in range(1, _BFS_ROUNDS + 1):
-            nxt = (edges
-                   .join(F.broadcast(
-                       frontier.withColumnRenamed("node", "src")), "src")
-                   .select(F.col("dst").alias("node")).distinct())
-            new = (nxt.join(F.broadcast(reached.select("node")),
-                            "node", "left_anti")
-                   .withColumn("hops", F.lit(i))
-                   .coalesce(1).localCheckpoint())
-            if new.limit(1).count() == 0:
-                break
-            reached = (reached.unionByName(new)
-                       .coalesce(1).localCheckpoint())
-            frontier = new.select("node")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    layers = []  # each round's frozen new layer; the last is the frontier
+
+    def expand(i, reached):
+        frontier = layers[-1] if layers else reached
+        nxt = (edges
+               .join(F.broadcast(
+                   frontier.select(F.col("node").alias("src"))), "src")
+               .select(F.col("dst").alias("node")).distinct())
+        new = freeze(nxt.join(F.broadcast(reached.select("node")),
+                              "node", "left_anti")
+                     .withColumn("hops", F.lit(i)), narrow=True)
+        if new.limit(1).count() == 0:
+            return None
+        layers.append(new)
+        return reached.unionByName(new)
+
+    source = (edges.agg(F.min("src").alias("node"))
+              .withColumn("hops", F.lit(0)))
+    reached, _ = iterate(spark, source, expand, rounds=_BFS_ROUNDS,
+                         narrow=True)
     return reached.orderBy("node")
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..staging import staged
-from ..tables import fan_out, load_table
+from ..tables import fan_out, iterate, load_table
 from .dedup import _BUCKET_CAP
 
 #: dot(a, b) with double casts and sequential summation (Spark SQL).
@@ -765,10 +765,10 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree that grew by that much per iteration, so QUERY CONSTRUCTION
     alone cost 5.5-6.6 s of driver time (measured §1-style: build
     6.0 s / plan 0.17 s / execute 4.3 s). Each iteration's ~650-row
-    per-dim aggregate is localCheckpointed (the kcore/cc loop
-    discipline — freezes the exact computed decimals, keeps the
-    per-iteration plan constant); the means, the rebuilt centroid
-    array (array_sort over (dim, mean) structs — exact), and
+    per-dim aggregate is the loop state `iterate` freezes (the
+    kcore/cc loop discipline — freezes the exact computed decimals,
+    keeps the per-iteration plan constant); the means, the rebuilt
+    centroid array (array_sort over (dim, mean) structs — exact), and
     n_members (count of dim-0/NULL-dim cells = one per assigned
     vector, including empty-embedding rows) all read those frozen
     sums, so every output double is bit-identical to the wide form
@@ -785,9 +785,17 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroids(spark, sf_dir)
     cos_c = (F.expr(_DOT.format(a="embedding", b="centroid"))
              / F.nullif(F.col("e_nrm") * F.col("c_nrm"), F.lit(0.0)))
-    gb = None
-    for _ in range(_KMEANS_ITERS):
-        cents_n = cents.withColumn(
+
+    def lloyd(_i, gb):
+        codebook = cents if gb is None else (
+            gb.filter(F.col("dim").isNotNull())
+            .select("clabel", "dim",
+                    (F.col("s").cast("double") / F.col("c")).alias("m"))
+            .groupBy("clabel")
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda t: t["m"]).alias("centroid")))
+        cents_n = codebook.withColumn(
             "c_nrm", F.sqrt(F.expr(_DOT.format(a="centroid", b="centroid"))))
         assigned = (
             emb.crossJoin(F.broadcast(cents_n))
@@ -799,19 +807,13 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "embedding", "clabel"))
         cells = assigned.select(
             "clabel", F.posexplode_outer("embedding").alias("dim", "x"))
-        gb = (cells.groupBy("clabel", "dim")
-              .agg(F.count("*").alias("nr"),
-                   F.sum(F.col("x").cast("double").cast("decimal(25,6)"))
-                   .alias("s"),
-                   F.count("x").alias("c"))
-              .localCheckpoint())
-        mean = (F.col("s").cast("double") / F.col("c")).alias("m")
-        cents = (gb.filter(F.col("dim").isNotNull())
-                 .select("clabel", "dim", mean)
-                 .groupBy("clabel")
-                 .agg(F.transform(
-                     F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                     lambda t: t["m"]).alias("centroid")))
+        return (cells.groupBy("clabel", "dim")
+                .agg(F.count("*").alias("nr"),
+                     F.sum(F.col("x").cast("double").cast("decimal(25,6)"))
+                     .alias("s"),
+                     F.count("x").alias("c")))
+
+    gb, _ = iterate(spark, None, lloyd, rounds=_KMEANS_ITERS, narrow=False)
     # Exploded scalar output rows, same driver-hashable contract as
     # kmeans_lloyd_step / label_centroids. n_members and the per-dim
     # means both read the final frozen per-dim aggregate.
@@ -1686,38 +1688,34 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver-job overhead (r11; guide §5 — this query IS a driver-step
     loop, so its wall is job count × per-job cost, not data): the 3
-    collect steps run with AQE OFF (scoped + restored around the
-    eager loop; legal here precisely because the steps execute inside
-    the builder): each tiny 2-stage agg was paying AQE's per-exchange
-    materialization job to plan a 64-row shuffle (measured 0.74 →
-    0.47 s per step same-session). The 64-row result frame is built
-    as ONE partition in dim order with an in-partition sort — a
-    global orderBy on it cost a range-sampling pass plus a 32-task
-    parallelize scan (0.7 → 0.17 s, identical rows and order).
+    collect steps run as a narrow `iterate` loop, so with AQE off
+    (legal here precisely because the steps execute inside the
+    builder). The 64-row result frame is built as ONE partition in
+    dim order with an in-partition sort — a global orderBy on it cost
+    a range-sampling pass plus a 32-task parallelize scan (0.7 →
+    0.17 s, identical rows and order).
     Combined same-session A/B: 2.2 → 1.4 s; rows bit-identical."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = [0.125] * _DIM
-    lam = None
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        for _ in range(_PCA_ITERS):
-            varr = F.array(*[F.lit(float(c)) for c in v])
-            s = F.expr(_DOT.format(a="embedding", b="varr"))
-            scored = emb.withColumn("varr", varr).withColumn("s", s)
-            rows = (scored
-                    .select("s", F.posexplode("embedding").alias("dim", "x"))
-                    .groupBy("dim")
-                    .agg(F.sum((F.col("s") * F.col("x").cast("double"))
-                               .cast("decimal(25,6)"))
-                         .cast("double").alias("w"))
-                    .collect())
-            w_by_dim = {r["dim"]: r["w"] for r in rows}
-            w = [w_by_dim[j] for j in range(_DIM)]
-            lam = max(abs(c) for c in w)
-            v = [c / lam for c in w]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+    def power_step(_i, state):
+        v, _lam = state
+        varr = F.array(*[F.lit(float(c)) for c in v])
+        s = F.expr(_DOT.format(a="embedding", b="varr"))
+        scored = emb.withColumn("varr", varr).withColumn("s", s)
+        rows = (scored
+                .select("s", F.posexplode("embedding").alias("dim", "x"))
+                .groupBy("dim")
+                .agg(F.sum((F.col("s") * F.col("x").cast("double"))
+                           .cast("decimal(25,6)"))
+                     .cast("double").alias("w"))
+                .collect())
+        w_by_dim = {r["dim"]: r["w"] for r in rows}
+        w = [w_by_dim[j] for j in range(_DIM)]
+        lam = max(abs(c) for c in w)
+        return [c / lam for c in w], lam
+
+    (v, lam), _ = iterate(spark, ([0.125] * _DIM, None), power_step,
+                          rounds=_PCA_ITERS, narrow=True)
     out = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(j, v[j], lam) for j in range(_DIM)], 1),

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import DEC, dsum_over_sql
+from ..session import scoped_conf
 from ..staging import staged
 from ..tables import load_table
 
@@ -108,19 +109,19 @@ def q_recursive_cte_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # remains the structural bound. The count is free — the relation
     # is staged/persisted.
     #
-    # The raise is SCOPED: the recursion executes eagerly inside the
-    # raised window (localCheckpoint materializes the blocks and
-    # truncates lineage, so the returned frame never re-reads the
-    # conf), then the `finally` restores whatever the session had —
+    # The raise is SCOPED (scoped_conf): the recursion executes
+    # eagerly inside the raised window (localCheckpoint materializes
+    # the blocks and truncates lineage, so the returned frame never
+    # re-reads the conf), then whatever the session had is restored —
     # no ratchet left behind for later fixtures or other queries
     # (tests/test_sqlfeatures_conf.py pins conf-unchanged-after-run).
     key = "spark.sql.cteRecursionRowLimit"
     needed = max(2_000_000, int(ranked.count() * 2))
-    prior = spark.conf.get(key, None)
+    raise_to = ({key: str(needed)}
+                if needed > int(spark.conf.get(key, None) or "1000000")
+                else {})
     q, r = f"CAST({_KAL_Q} AS DOUBLE)", f"CAST({_KAL_R} AS DOUBLE)"
-    try:
-        if needed > int(prior or "1000000"):
-            spark.conf.set(key, str(needed))
+    with scoped_conf(spark, raise_to):
         # The recursion body mirrors _stream_kalman_sql verbatim, with
         # the base CTE swapped for the staged view.
         out = spark.sql(f"""
@@ -143,17 +144,12 @@ SELECT user_id, event_id, ts, y AS close,
        l AS kal_level, p AS kal_p, k AS kal_gain
 FROM h
 """).localCheckpoint(eager=True)
-        ck = (spark.sparkContext.applicationId, sf_dir)
-        prev = _RCTE_RESULT.pop(ck, None)
-        if prev is not None:
-            prev.unpersist()
-        _RCTE_RESULT[ck] = out
-        return out
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+    ck = (spark.sparkContext.applicationId, sf_dir)
+    prev = _RCTE_RESULT.pop(ck, None)
+    if prev is not None:
+        prev.unpersist()
+    _RCTE_RESULT[ck] = out
+    return out
 
 
 def _recursive_kalman_sql() -> str:

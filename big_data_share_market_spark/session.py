@@ -10,6 +10,7 @@ partitions) and is harmless locally.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import zipfile
 
@@ -115,3 +116,23 @@ def prep(spark: SparkSession) -> SparkSession:
         pass
     _ship_package(spark)
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set the runtime conf keys in `conf` for the body, then put each
+    key back as it was — its prior value, or unset if the caller never
+    set it (a registered default reads as unset) — even when the body
+    raises. The one place a query changes a caller's session conf."""
+    explicit = spark.conf._jconf.getAllAsJava()  # `getAll` is 100x slower
+    prior = {key: explicit.get(key) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

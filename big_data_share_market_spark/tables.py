@@ -11,7 +11,13 @@ prunes partitions.
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import scoped_conf
+
+S = TypeVar("S")
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -77,6 +83,55 @@ def keyed_repartition(df: DataFrame, *cols: str,
     if width is None:
         return df.repartition(*cols)
     return df.repartition(width, *cols)
+
+
+def freeze(df: DataFrame, *, narrow: bool) -> DataFrame:
+    """Materialize `df` and cut its lineage (`localCheckpoint`), first
+    onto one partition when `narrow` — see :func:`iterate`."""
+    return (df.coalesce(1) if narrow else df).localCheckpoint()
+
+
+def iterate(spark: SparkSession, state: S,
+            step: Callable[[int, S], S | None], *,
+            rounds: int, narrow: bool) -> tuple[S, int]:
+    """Run an eager driver loop: `state = step(i, state)` for
+    i = 1..rounds, stopping early when `step` returns None (the state
+    it was handed is a fixpoint). Returns (state, rounds_run), where
+    rounds_run counts the steps that returned a new state.
+
+    The loop's physical policy lives here and nowhere else:
+    * Freeze. A DataFrame state is frozen on entry and after every
+      round (:func:`freeze`), so each round plans against a constant-
+      depth scan instead of a lineage that grows — or, when a round
+      references the state more than once, multiplies — per round.
+      Steps hand back lazy frames; they call `freeze` themselves only
+      for side relations they read within the round.
+    * Width. `narrow` loops carry a node- or vector-sized state (a few
+      thousand rows at fixture scale) that would otherwise inherit
+      `spark.sql.shuffle.partitions` tasks, so a round's cost would be
+      task scheduling, not work: each freeze coalesces to one
+      partition, and later broadcasts read one block. At web scale
+      (state beyond one task) pass narrow=False — the loop is the same.
+    * AQE scope. A `narrow` loop runs with AQE off, restored on exit:
+      each round's tiny capped shuffle otherwise pays AQE's
+      per-exchange materialization jobs to re-plan it. Measured (r11)
+      same-session: the k-core peel build 4.3-4.7 → 3.1-3.9 s, a PCA
+      power step 0.74 → 0.47 s. The frames a caller gets back are
+      planned after the scope closes, under the session's own AQE.
+    * Budget. At most `rounds` steps; a step that sees a fixpoint
+      returns None, since every later round would be a no-op."""
+    def settle(s):
+        return freeze(s, narrow=narrow) if isinstance(s, DataFrame) else s
+
+    aqe_off = {"spark.sql.adaptive.enabled": "false"} if narrow else {}
+    with scoped_conf(spark, aqe_off):
+        state = settle(state)
+        for i in range(1, rounds + 1):
+            nxt = step(i, state)
+            if nxt is None:
+                return state, i - 1
+            state = settle(nxt)
+    return state, rounds
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

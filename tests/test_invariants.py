@@ -869,15 +869,38 @@ def test_cc_alternating_chain_logarithmic_rounds(spark):
     assert rounds <= 8, f"expected O(log n) rounds, got {rounds}"
 
 
-def test_cc_alternating_matches_dedup_components(spark):
-    """Same component labeling as the propagation algorithm on the
-    real near-dup graph (both reduce to node -> component minimum);
-    the two queries share one oracle, so this also cross-checks the
-    Spark sides against each other without DuckDB."""
+def _union_find_labels(edges):
+    """node -> component minimum, by plain-Python union-find."""
+    parent = {x: x for e in edges for x in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_cc_labels_match_union_find_on_neardup_graph(spark):
+    """The staged component labels — served as both cc_alternating and
+    dedup_components — equal a plain-Python union-find over the
+    collected MinHash near-dup pairs: an independent cross-check on
+    the real near-dup graph, outside both Spark and the oracle SQL."""
+    from big_data_share_market_spark.operators.dedup import minhash_pairs
+
+    pairs = [(r.a_id, r.b_id)
+             for r in minhash_pairs(spark, SF_DIR).collect()]
+    want = _union_find_labels(pairs)
     q = all_queries()
-    a = sorted(map(tuple, q["cc_alternating"][0](spark, SF_DIR).collect()))
-    b = sorted(map(tuple, q["dedup_components"][0](spark, SF_DIR).collect()))
-    assert a == b and len(a) > 0
+    for name in ("cc_alternating", "dedup_components"):
+        got = {r.doc_id: r.component_id
+               for r in q[name][0](spark, SF_DIR).collect()}
+        assert got == want and got, name
 
 
 def test_kcore_partition_and_degree_bound(spark):
@@ -975,8 +998,8 @@ def test_cc_alternating_matches_union_find_random(spark):
     """Randomized reference check: on deterministic pseudo-random
     graphs (mixed chains, cliques, stars, isolated pairs), the star
     contraction must produce exactly the union-find labeling (min
-    node per component) — an anchor fully independent of both the
-    oracle SQL and the propagation sibling."""
+    node per component) — an anchor fully independent of the oracle
+    SQL."""
     import random
 
     from big_data_share_market_spark.operators.dedup import (
@@ -994,21 +1017,7 @@ def test_cc_alternating_matches_union_find_random(spark):
         edges += [(50, j) for j in range(51, 58)]
         edges += [(rng.randrange(n), rng.randrange(n)) for _ in range(10)]
         edges = [(a, b) for a, b in edges if a != b]
-
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {x for e in edges for x in e}
-        want = {x: find(x) for x in sorted(touched)}
+        want = _union_find_labels(edges)
 
         df = spark.createDataFrame(edges, "src long, dst long")
         labels, _ = cc_alternating_edges(df)
