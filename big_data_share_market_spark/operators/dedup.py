@@ -240,6 +240,18 @@ def _verify_shingle_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate pairs whose exact shingle-set Jaccard
+    ``inter / (|A| + |B| − inter)`` is ≥ 0.8, as (a_id, b_id,
+    jaccard) — verified by :func:`_verify_shingle_pairs`."""
+    inter = F.col("inter")
+    return (_verify_shingle_pairs(sh, cand)
+            .withColumn("jaccard",
+                        inter / (F.col("sz_a") + F.col("sz_b") - inter))
+            .filter(F.col("jaccard") >= 0.8)
+            .select("a_id", "b_id", "jaccard"))
+
+
 def q_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs with word-3-gram Jaccard ≥ 0.8 — the
     join-based candidate generator: shingle equi-join
@@ -277,18 +289,8 @@ def q_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("a_id"),
-                   F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("b_id"),
-                   F.col("shingles").alias("sh_b"))
     return (
-        cand.join(sa, "a_id").join(sb, "b_id")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= 0.8)
-        .select("a_id", "b_id", "jaccard")
+        _jaccard_pairs(sh, cand)
         # Barrier before the presentation sort (r10): a global orderBy
         # range-samples its child, which RE-EXECUTES everything since
         # the last exchange — here the whole broadcast-join +
@@ -365,47 +367,14 @@ def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.a_id", "p.b_id")
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("a_id"),
-                   F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("b_id"),
-                   F.col("shingles").alias("sh_b"))
     return (
-        cand.join(sa, "a_id").join(sb, "b_id")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= 0.8)
-        .select("a_id", "b_id", "jaccard")
+        _jaccard_pairs(sh, cand)
         # Sort-sampler barrier — see q_ngram_jaccard_dedup (measured
         # here: 3.8-4.0 s -> 2.4-2.5 s, the map-side verify no longer
         # runs twice).
         .repartition("a_id")
         .orderBy("a_id", "b_id")
     )
-
-
-_NGRAM_CAPPED_SQL = f"""
-WITH {_SHINGLES_CTE},
-e AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-df AS (SELECT shingle, COUNT(*) AS n_docs FROM e GROUP BY shingle),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM e a JOIN e b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  JOIN df ON df.shingle = a.shingle
-  WHERE df.n_docs <= {_DF_CAP})
-SELECT a_id, b_id,
-       len(list_intersect(sa.shingles, sb.shingles))
-         / (len(sa.shingles) + len(sb.shingles)
-            - len(list_intersect(sa.shingles, sb.shingles))) AS jaccard
-FROM cand
-JOIN sh sa ON sa.doc_id = a_id
-JOIN sh sb ON sb.doc_id = b_id
-WHERE len(list_intersect(sa.shingles, sb.shingles))
-        / (len(sa.shingles) + len(sb.shingles)
-           - len(list_intersect(sa.shingles, sb.shingles))) >= 0.8
-ORDER BY a_id, b_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -529,18 +498,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand, _ = capped_pair_expand(
         bands.groupBy("band", "sig")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids")))
-    # verify candidates with true Jaccard on the shingle sets
-    sa = sh.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sh_b"))
-    return (
-        cand.join(sa, "a_id").join(sb, "b_id")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard",
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= 0.8)
-        .select("a_id", "b_id", "jaccard")
-    )
+    return _jaccard_pairs(sh, cand)
 
 
 def q_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1771,7 +1729,7 @@ QUERIES = {
     "dedup_cluster_stats": (q_dedup_cluster_stats, _CLUSTER_STATS_SQL),
     "clean_corpus": (q_clean_corpus, _CLEAN_CORPUS_SQL),
     "ngram_jaccard_dedup": (q_ngram_jaccard_dedup, _NGRAM_JACCARD_SQL),
-    "ngram_jaccard_capped": (q_ngram_jaccard_capped, _NGRAM_CAPPED_SQL),
+    "ngram_jaccard_capped": (q_ngram_jaccard_capped, _NGRAM_JACCARD_SQL),
     "minhash_lsh_dedup": (q_minhash_lsh_dedup, _MINHASH_SQL),
     "minhash_est_quality": (q_minhash_est_quality, _MINHASH_EST_SQL),
     "simhash_pairs": (q_simhash_pairs, _SIMHASH_SQL),

@@ -40,13 +40,14 @@ and ``streaming.state._keyed_state`` (stream, state checkpointed per
 key). Steps defined here: :func:`_ewm_step` (EMA: `_apply_ewm`, the
 stream EMA and ATR smoothing, channels' TRIX / mass index),
 :func:`_holt_step` (holt_forecast, forecast_anomalies /
-forecast_backtest via :func:`_anomaly_step`, stream Holt) and
-:func:`_kalman_step` (kalman_level, stream Kalman). ``keyed_scan`` runs
-holt_forecast, forecast_anomalies, forecast_backtest and, in
-channels.py, parabolic_sar, supertrend, kama, trix and mass_index. The
-EMA and Kalman kernels keep their own across-key dense paths and run
-the shared step per key only on skewed batches
-(:func:`_dense_layout_ok`).
+forecast_backtest via :func:`_anomaly_step`, stream Holt),
+:func:`_hw_step` (holt_winters) and :func:`_kalman_step`
+(kalman_level, stream Kalman). Every per-key batch kernel in this
+module and in channels.py runs on ``keyed_scan``. A recurrence that is
+element-wise across keys may also hand the runner a `dense` form that
+steps all keys of a batch at once (:func:`_ewm_dense`,
+:func:`_hw_dense`, :func:`_kalman_dense`); the runner alone decides, per batch, whether
+the dense form or the per-key step runs (:func:`_dense_layout_ok`).
 """
 
 from __future__ import annotations
@@ -55,7 +56,6 @@ import math
 from collections.abc import Iterable
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -116,18 +116,18 @@ def _ewm_init(n: int) -> tuple[list[float], list[bool]]:
 
 
 def _apply_ewm(df: DataFrame, order_cols: list[str], value_cols: dict[str, tuple[str, float]],
-               key_col: str = "user_id", assume_sorted: bool = False) -> DataFrame:
-    """Streaming-partition kernel: add one ewm column per entry of
-    value_cols {out_name: (in_name, alpha)}.
+               assume_sorted: bool = False) -> DataFrame:
+    """Add one EMA column per entry of value_cols {out_name: (in_name,
+    alpha)}, per ``user_id`` in (user_id, *order_cols) order.
 
     Physical shape: ONE hash shuffle on the key + in-partition sort,
-    then a single `mapInPandas` pass over each partition — accumulator
-    state carries across Arrow batches, resetting on key change. This
-    beats `groupBy(key).applyInPandas` by ~5× here: with thousands of
-    small keys the per-group pandas-object overhead dominates, while a
-    partition-wide pass costs O(rows) regardless of key count. At
-    100 TB the same plan holds: one exchange, Python touches each row
-    once, no driver involvement.
+    then :func:`keyed_scan` runs :func:`_ewm_step` (or its dense form,
+    :func:`_ewm_dense`) in a single `mapInPandas` pass over each
+    partition. This beats `groupBy(key).applyInPandas` by ~5× here:
+    with thousands of small keys the per-group pandas-object overhead
+    dominates, while a partition-wide pass costs O(rows) regardless of
+    key count. At 100 TB the same plan holds: one exchange, Python
+    touches each row once, no driver involvement.
 
     Set `assume_sorted=True` when the input is already hash-partitioned
     by the key and sorted by (key, *order_cols) within partitions — true
@@ -135,41 +135,27 @@ def _apply_ewm(df: DataFrame, order_cols: list[str], value_cols: dict[str, tuple
     `_apply_ewm` (mapInPandas preserves in-partition row order) — to
     skip the redundant exchange+sort entirely.
 
-    NaN outputs are surfaced as NULL (nanvl) to match the oracle.
-
-    Kernel vectorization (r7): the EMA update is element-wise, so per
-    Arrow batch the contiguous key segments are laid out as a
-    (segments × max_len) NaN-padded matrix and the recurrence steps
-    once per IN-SERIES POSITION across all keys simultaneously —
-    max_len vector steps instead of one Python iteration per row.
-    Every element still sees the exact scalar op sequence
-    (`acc + α(x−acc)`, seed-at-first-valid, NaN keeps the
-    accumulator), so outputs are BIT-IDENTICAL to :func:`ewm_mean` —
-    property-tested in tests/test_pandas_parity.py with random NaN
-    patterns and batch splits. Series length is ~constant while key
-    count scales with data (TESTDATA.md), so batches stay wide and
-    the step count flat: the ewm family's former 100 TB CPU cliff
-    (r6 verdict item 4) drops to ~1/10th the Python-interpreter work.
-    """
+    NaN outputs are surfaced as NULL (nanvl) to match the oracle."""
+    specs = [(dst, src, alpha) for dst, (src, alpha) in value_cols.items()]
     out_fields = ", ".join(f"{name} double" for name in value_cols)
-    schema = f"{_ddl(df)}, {out_fields}"
-
     if assume_sorted:
         staged = df
     else:
         # Width scales with input bytes (r11, guide §5): identical
         # plan at fixture scale, bounded partition bytes at 100 TB.
-        staged = keyed_repartition(df, key_col).sortWithinPartitions(
-            key_col, *order_cols)
-    res = staged.mapInPandas(_ewm_kernel(list(value_cols.items()), key_col),
-                             schema=schema)
+        staged = keyed_repartition(df, "user_id").sortWithinPartitions(
+            "user_id", *order_cols)
+    res = keyed_scan(staged, _ewm_step(specs), init=_ewm_init(len(specs)),
+                     cols=list(dict.fromkeys(src for _, src, _ in specs)),
+                     schema=f"{_ddl(df)}, {out_fields}",
+                     dense=_ewm_dense(specs))
     for out_name in value_cols:
         res = res.withColumn(out_name, F.nanvl(F.col(out_name), F.lit(None)))
     return res
 
 
 def keyed_scan(staged: DataFrame, step, *, init, cols: list[str],
-               schema: str) -> DataFrame:
+               schema: str, dense=None) -> DataFrame:
     """Run the per-key `step` (module docstring) over `staged` in ONE
     `mapInPandas` pass — the batch twin of
     ``streaming.state._keyed_state``.
@@ -182,8 +168,22 @@ def keyed_scan(staged: DataFrame, step, *, init, cols: list[str],
     from the previous batch when it continues that batch's last key, and
     starts from `init` otherwise. The step's columns are added to the
     batch, which is then projected onto `schema`'s fields, so
-    passthrough columns (key, order, price) come from the input."""
+    passthrough columns (key, order, price) come from the input.
+
+    `dense(state, bounds, cols) -> (out, state)`, when given, runs the
+    same recurrence over all segments of a batch at once (segment i is
+    rows bounds[i]:bounds[i+1]; `state` is the first segment's, the
+    returned one the last segment's). The runner uses it for every batch
+    whose layout :func:`_dense_layout_ok` allows and the step otherwise;
+    both must give bit-identical output."""
     names = StructType.fromDDL(schema).fieldNames()
+    return staged.mapInPandas(_scan_kernel(step, init, cols, names, dense),
+                              schema=schema)
+
+
+def _scan_kernel(step, init, cols: list[str], names: list[str], dense=None):
+    """The partition function :func:`keyed_scan` hands to mapInPandas
+    (module level so tests can drive it with synthetic batch splits)."""
 
     def kernel(batches):
         carry_key, carry = None, init
@@ -193,13 +193,17 @@ def keyed_scan(staged: DataFrame, step, *, init, cols: list[str],
             keys = pdf["user_id"].to_numpy()
             arrays = {c: pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
                       for c in cols}
-            outs, carry = _scan_segments(
-                step, init, carry if keys[0] == carry_key else init,
-                _segment_bounds(keys), arrays)
+            bounds = _segment_bounds(keys)
+            state = carry if keys[0] == carry_key else init
+            if dense is not None and _dense_layout_ok(
+                    len(keys), len(bounds) - 1, int(np.diff(bounds).max())):
+                outs, carry = dense(state, bounds, arrays)
+            else:
+                outs, carry = _scan_segments(step, init, state, bounds, arrays)
             carry_key = keys[-1]
             yield pdf.assign(**outs)[names]
 
-    return staged.mapInPandas(kernel, schema=schema)
+    return kernel
 
 
 def _segment_bounds(keys: np.ndarray) -> np.ndarray:
@@ -229,11 +233,20 @@ def _dense_layout_ok(n: int, n_segs: int, max_len: int) -> bool:
     under SKEWED per-key lengths (one 50k-row key + 10k singleton
     keys) blows up quadratically where the scalar loop is O(n). Allow
     the dense path when padding waste is bounded (≤4× the real rows)
-    or the matrix is small outright; otherwise the kernels fall back
-    to the shared per-key step (bit-identical either way — the step IS
-    the reference loop the property tests pin against)."""
+    or the matrix is small outright; otherwise :func:`keyed_scan` runs
+    the per-key step (bit-identical either way — the step IS the
+    reference loop the property tests pin against)."""
     cells = n_segs * max_len
     return cells <= max(4 * n, 1 << 16)
+
+
+def _segment_grid(bounds: np.ndarray):
+    """Row -> (segment, in-segment position) indices into the
+    (segments × max_len) layout of a batch, plus max_len."""
+    starts = bounds[:-1]
+    seg_of_row = np.repeat(np.arange(len(starts)), np.diff(bounds))
+    return (seg_of_row, np.arange(bounds[-1]) - starts[seg_of_row],
+            int(np.diff(bounds).max()))
 
 
 def _ewm_step(specs: list[tuple[str, str, float]]):
@@ -267,62 +280,48 @@ def _ewm_step(specs: list[tuple[str, str, float]]):
     return step
 
 
-def _ewm_kernel(specs: list[tuple[str, tuple[str, float]]], key_col: str):
-    """Arrow kernel for :func:`_apply_ewm` (see its docstring for the
-    across-key vectorization argument; skewed-segment batches run the
-    shared :func:`_ewm_step` per key, see :func:`_dense_layout_ok`).
-    Module-level factory so tests/test_pandas_parity.py can drive it
-    directly with synthetic batch splits and assert bit-equality
-    against :func:`ewm_mean`."""
-    flat = [(dst, src, alpha) for dst, (src, alpha) in specs]
-    step = _ewm_step(flat)
-    init = _ewm_init(len(flat))
-    srcs = {src for _, src, _ in flat}
+def _ewm_dense(specs: list[tuple[str, str, float]]):
+    """Dense form of :func:`_ewm_step` for :func:`keyed_scan` (specs
+    read input columns only; same state).
 
-    def kernel(batches):
-        carry_key, carry = None, init
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf[key_col].to_numpy()
-            n = len(pdf)
-            bounds = _segment_bounds(keys)
-            starts, seg_lens = bounds[:-1], np.diff(bounds)
-            n_segs = len(starts)
-            max_len = int(seg_lens.max())
-            state = carry if keys[0] == carry_key else init
-            cols = {c: pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                    for c in srcs}
-            carry_key = keys[-1]
-            if not _dense_layout_ok(n, n_segs, max_len):
-                outs, carry = _scan_segments(step, init, state, bounds, cols)
-                yield pdf.assign(**outs)
-                continue
-            seg_of_row = np.repeat(np.arange(n_segs), seg_lens)
-            pos_of_row = np.arange(n) - starts[seg_of_row]
-            outs = {}
-            accs, started_last = [], []
-            for j, (out_name, in_name, alpha) in enumerate(flat):
-                xmat = np.full((n_segs, max_len), np.nan)
-                xmat[seg_of_row, pos_of_row] = cols[in_name]
-                rmat = np.empty_like(xmat)
-                acc = np.full(n_segs, np.nan)
-                started = np.zeros(n_segs, dtype=bool)
-                acc[0], started[0] = state[0][j], state[1][j]
-                for t in range(max_len):
-                    x = xmat[:, t]
-                    valid = ~np.isnan(x)
-                    upd = acc + alpha * (x - acc)
-                    acc = np.where(valid, np.where(started, upd, x), acc)
-                    started = started | valid
-                    rmat[:, t] = acc
-                accs.append(float(acc[-1]))
-                started_last.append(bool(started[-1]))
-                outs[out_name] = rmat[seg_of_row, pos_of_row]
-            carry = (accs, started_last)
-            yield pdf.assign(**outs)
+    Vectorization (r7): the EMA update is element-wise, so per Arrow
+    batch the contiguous key segments are laid out as a
+    (segments × max_len) NaN-padded matrix and the recurrence steps
+    once per IN-SERIES POSITION across all keys simultaneously —
+    max_len vector steps instead of one Python iteration per row.
+    Every element still sees the exact scalar op sequence
+    (`acc + α(x−acc)`, seed-at-first-valid, NaN keeps the
+    accumulator), so outputs are BIT-IDENTICAL to :func:`ewm_mean` —
+    property-tested in tests/test_pandas_parity.py with random NaN
+    patterns and batch splits. Series length is ~constant while key
+    count scales with data (TESTDATA.md), so batches stay wide and
+    the step count flat: the ewm family's former 100 TB CPU cliff
+    (r6 verdict item 4) drops to ~1/10th the Python-interpreter work."""
 
-    return kernel
+    def dense(state, bounds, cols):
+        seg_of_row, pos_of_row, max_len = _segment_grid(bounds)
+        n_segs = len(bounds) - 1
+        outs, accs, started_last = {}, [], []
+        for j, (dst, src, alpha) in enumerate(specs):
+            xmat = np.full((n_segs, max_len), np.nan)
+            xmat[seg_of_row, pos_of_row] = cols[src]
+            rmat = np.empty_like(xmat)
+            acc = np.full(n_segs, np.nan)
+            started = np.zeros(n_segs, dtype=bool)
+            acc[0], started[0] = state[0][j], state[1][j]
+            for t in range(max_len):
+                x = xmat[:, t]
+                valid = ~np.isnan(x)
+                upd = acc + alpha * (x - acc)
+                acc = np.where(valid, np.where(started, upd, x), acc)
+                started = started | valid
+                rmat[:, t] = acc
+            accs.append(float(acc[-1]))
+            started_last.append(bool(started[-1]))
+            outs[dst] = rmat[seg_of_row, pos_of_row]
+        return outs, (accs, started_last)
+
+    return dense
 
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -706,6 +705,104 @@ _HW_A = 0.3
 _HW_B = 0.1
 _HW_G = 0.2
 _HW_M = 4
+#: Holt-Winters step state (first-m buffer, level, trend, seasonal)
+#: before a key's first row.
+_HW_INIT = ((), math.nan, math.nan, ())
+
+
+def _hw_step(a: float, b_const: float, g: float, m: int):
+    """Holt-Winters additive step over ``cols["close"]``: the first m
+    rows fill the buffer, and the m-th sets the classical init (level
+    = SEQUENTIAL sum of the buffer / m, trend = 0, s_i = y_i − level);
+    every later row runs ``l2 = a(y − s_1) + (1−a)(l + b);
+    b = b_const(l2 − l) + (1−b_const)b; s_new = g(y − l2) + (1−g)s_1``
+    in that op order (the recursive-CTE oracle's) and rotates the
+    season. Emits level, trend and fc_h = level + h·trend + s_h for
+    h = 1..3 per row, NaN before the m-th row."""
+
+    def step(state, cols):
+        buf, lvl, trend, seas = state
+        rows = []
+        for y in cols["close"].tolist():
+            if seas:
+                l2 = a * (y - seas[0]) + (1.0 - a) * (lvl + trend)
+                trend = b_const * (l2 - lvl) + (1.0 - b_const) * trend
+                seas = seas[1:] + (g * (y - l2) + (1.0 - g) * seas[0],)
+                lvl = l2
+            elif len(buf) + 1 < m:
+                buf += (y,)
+                rows.append((math.nan,) * 5)
+                continue
+            else:
+                buf += (y,)
+                acc = buf[0]
+                for v in buf[1:]:
+                    acc = acc + v
+                lvl, trend = acc / float(m), 0.0
+                seas = tuple(v - lvl for v in buf)
+            rows.append((lvl, trend, *seas[:3]))
+        lv, tr, *ss = np.array(rows, dtype=np.float64).reshape(-1, 5).T
+        return (buf, lvl, trend, seas), {
+            "level": lv, "trend": tr,
+            **{f"fc_{h}": lv + float(h) * tr + ss[h - 1] for h in (1, 2, 3)}}
+
+    return step
+
+
+def _hw_dense(a: float, b_const: float, g: float, m: int):
+    """Dense form of :func:`_hw_step` for :func:`keyed_scan` (same
+    state): level, trend and season update element-wise, so the keys
+    of a batch step together on the (segments × max_len) layout of
+    :func:`_ewm_dense`, in the step's op order. A first segment that
+    continues a key still filling its buffer gets the buffered values
+    put back in front of it, so every segment either starts fresh
+    (init at position m − 1) or continues a started key."""
+
+    def dense(state, bounds, cols):
+        buf, lvl, trend, seas = state
+        lead = 0 if seas else len(buf)
+        ys = np.concatenate([buf[:lead], cols["close"]])
+        bounds = np.r_[0, bounds[1:] + lead]
+        seg_of_row, pos_of_row, max_len = _segment_grid(bounds)
+        seg_lens = np.diff(bounds)
+        n_segs = len(seg_lens)
+        ymat = np.full((n_segs, max_len), np.nan)
+        ymat[seg_of_row, pos_of_row] = ys
+        lv, tr = np.full(n_segs, np.nan), np.full(n_segs, np.nan)
+        ss = np.full((n_segs, m), np.nan)
+        first = np.full(n_segs, m - 1)  # each segment's init row
+        if seas:
+            lv[0], tr[0], ss[0], first[0] = lvl, trend, seas, -1
+        out = np.empty((5, *ymat.shape))  # level, trend, s_1..s_3
+        for t in range(max_len):
+            y = ymat[:, t]
+            upd = (first < t) & (t < seg_lens)
+            l2 = a * (y - ss[:, 0]) + (1.0 - a) * (lv + tr)
+            tr = np.where(upd, b_const * (l2 - lv) + (1.0 - b_const) * tr, tr)
+            s2 = g * (y - l2) + (1.0 - g) * ss[:, 0]
+            ss = np.where(upd[:, None], np.column_stack([ss[:, 1:], s2]), ss)
+            lv = np.where(upd, l2, lv)
+            if t == m - 1:
+                acc = ymat[:, 0]
+                for j in range(1, m):
+                    acc = acc + ymat[:, j]
+                l0 = acc / float(m)
+                init = (first == t) & (seg_lens >= m)
+                lv, tr = np.where(init, l0, lv), np.where(init, 0.0, tr)
+                ss = np.where(init[:, None], ymat[:, :m] - l0[:, None], ss)
+            out[:, :, t] = lv, tr, ss[:, 0], ss[:, 1], ss[:, 2]
+        lv_r, tr_r, *ss_r = out[:, seg_of_row, pos_of_row][:, lead:]
+        n_last = seg_lens[-1]
+        if first[-1] < 0 or n_last >= m:
+            buf = buf if first[-1] < 0 else tuple(ymat[-1, :m])
+            state = (buf, lv[-1], tr[-1], tuple(ss[-1]))
+        else:
+            state = (tuple(ymat[-1, :n_last]), math.nan, math.nan, ())
+        return {"level": lv_r, "trend": tr_r,
+                **{f"fc_{h}": lv_r + float(h) * tr_r + ss_r[h - 1]
+                   for h in (1, 2, 3)}}, state
+
+    return dense
 
 
 def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -716,13 +813,16 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_t = γ(y_t − l_t) + (1−γ)s_{t−m}``, m = 4, classical
     deterministic init at t = m (l = sequential mean of the first m
     observations, b = 0, s_i = y_i − l). Output: one row per key with
-    the final (level, trend) and ŷ_{T+h} = l + h·b + s_{T+h−m} for
-    h = 1..3.
+    at least m observations — the final (level, trend) and
+    ŷ_{T+h} = l + h·b + s_{T+h−m} for h = 1..3.
 
-    Kernel: the m-vector seasonal state rides with (level, trend) in
-    the same partition-wide pass as the Holt kernel; the key's final
-    summary row is emitted on key change (keys are contiguous after
-    the sort), so output is |keys| rows with no window stage at all.
+    Kernel: :func:`_hw_step` (with its dense form, :func:`_hw_dense`)
+    run by :func:`keyed_scan`; the m-vector season rides in the step
+    state with level and trend. The rank
+    (rn) and per-key count (n_obs) are computed BEFORE the kernel on
+    the key-repartitioned, sorted layout, so the last-row pick after
+    it is a row-local filter and the query keeps one hash exchange
+    (the q_holt_forecast pattern).
 
     Oracle: per-key recursive CTE whose rows carry the seasonal
     DOUBLE[] and rotate it with list_append(seas[2:m], s_new) —
@@ -732,68 +832,29 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     first m values (a parallel SUM could round differently)."""
     s = (_series(spark, sf_dir)
          .filter(F.col("close").isNotNull()))
-    schema = ("user_id bigint, n_obs bigint, level double, "
-              "trend double, " + ", ".join(
-                  f"fc_{h} double" for h in (1, 2, 3)))
-    a, bc, g, m = _HW_A, _HW_B, _HW_G, _HW_M
-
-    def kernel(batches):
-        cur_key = None
-        buf: list[float] = []
-        lvl = trend = math.nan
-        seas: list[float] = []
-        n = 0
-        started = False
-
-        def summary_row():
-            if n < m:
-                return None
-            fcs = {f"fc_{h}": lvl + float(h) * trend + seas[h - 1]
-                   for h in (1, 2, 3)}
-            return {"user_id": cur_key, "n_obs": n,
-                    "level": lvl, "trend": trend, **fcs}
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            ys = pdf["close"].to_numpy(dtype=np.float64)
-            rows = []
-            for i in range(len(pdf)):
-                if keys[i] != cur_key:
-                    row = summary_row()
-                    if row is not None:
-                        rows.append(row)
-                    cur_key = keys[i]
-                    buf, seas = [], []
-                    lvl, trend, n, started = math.nan, math.nan, 0, False
-                y = float(ys[i])
-                n += 1
-                if not started:
-                    buf.append(y)
-                    if len(buf) == m:
-                        acc = buf[0]
-                        for v in buf[1:]:
-                            acc = acc + v
-                        lvl = acc / float(m)
-                        trend = 0.0
-                        seas = [v - lvl for v in buf]
-                        started = True
-                else:
-                    l2 = a * (y - seas[0]) + (1.0 - a) * (lvl + trend)
-                    trend = bc * (l2 - lvl) + (1.0 - bc) * trend
-                    snew = g * (y - l2) + (1.0 - g) * seas[0]
-                    seas = seas[1:] + [snew]
-                    lvl = l2
-            if rows:
-                yield pd.DataFrame(rows)
-        row = summary_row()
-        if row is not None:
-            yield pd.DataFrame([row])
-
-    staged = keyed_repartition(s, "user_id").sortWithinPartitions(
-        "user_id", "ts", "event_id")
-    return staged.mapInPandas(kernel, schema=schema).orderBy("user_id")
+    # rn and n_obs share one window spec (one Window node); only
+    # (key, value, rank, count) cross into Python and only the columns
+    # the last-row pick reads come back. A select keeps the
+    # partitioning and the in-partition order.
+    wo = W.partitionBy("user_id").orderBy("ts", "event_id")
+    staged = (keyed_repartition(s, "user_id")
+              .sortWithinPartitions("user_id", "ts", "event_id")
+              .select("user_id", "close",
+                      F.row_number().over(wo).alias("rn"),
+                      F.count("*").over(wo.rowsBetween(
+                          W.unboundedPreceding, W.unboundedFollowing))
+                      .alias("n_obs")))
+    fcs = [f"fc_{h}" for h in (1, 2, 3)]
+    fitted = keyed_scan(
+        staged, _hw_step(_HW_A, _HW_B, _HW_G, _HW_M), init=_HW_INIT,
+        cols=["close"], dense=_hw_dense(_HW_A, _HW_B, _HW_G, _HW_M),
+        schema=(f"{_ddl(staged.drop('close'))}, level double, "
+                "trend double, " + ", ".join(f"{c} double" for c in fcs)))
+    return (fitted
+            .filter((F.col("rn") == F.col("n_obs"))
+                    & (F.col("n_obs") >= _HW_M))
+            .select("user_id", "n_obs", "level", "trend", *fcs)
+            .orderBy("user_id"))
 
 
 def _holt_winters_sql() -> str:
@@ -1142,33 +1203,12 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the local-level model.
 
     Kernel + oracle follow the q_holt_forecast discipline to the
-    letter: the recurrence runs in one partition-wide Arrow pass with
-    the last-row rank precomputed on the same window layout (one
-    exchange total), mirrored by a per-key recursive CTE executing
-    the IDENTICAL operation order — sequential doubles, bit-exact on
-    both engines.
-
-    Kernel vectorization (r7, verdict item 4 — the former per-row
-    Python loop measured 22.6 s at sf10, the worst probe in the
-    tree): two structural facts make the local-level filter
-    vectorizable WITHOUT reassociating a single float op:
-
-    * the (P, gain) recurrence never reads the data — ``P⁻ = P + Q``,
-      ``K = P⁻/(P⁻+R)``, ``P = (1−K)P⁻`` depend only on the row's
-      per-key RANK — so both are a precomputed table indexed by `rn`
-      (computed once by the same scalar ops, grown on demand);
-    * the level update ``l ← l + K(y − l)`` is element-wise, so rows
-      of DIFFERENT keys at the same rank step together: lay the
-      batch's per-key segments out as a (segments × max_len) matrix
-      and run max_len vectorized steps across all keys at once. Each
-      element still sees exactly the scalar op sequence (numpy
-      element-wise ops are per-element IEEE in order), so the result
-      is BIT-IDENTICAL to the row loop — asserted by
-      tests/test_pandas_parity.py's kalman property test and the
-      unchanged oracle. Keys scale with data here (66 rows/user at
-      every SF — TESTDATA.md), so batches are wide and step counts
-      stay ~66 regardless of corpus size; measured 22.6 s → well
-      under the ≤10 s sf10 target (SCALING.md addendum 13)."""
+    letter: :func:`_kalman_step` (with its dense form,
+    :func:`_kalman_dense`) runs in one partition-wide pass of
+    :func:`keyed_scan` with the last-row rank precomputed on the same
+    window layout (one exchange total), mirrored by a per-key recursive
+    CTE executing the IDENTICAL operation order — sequential doubles,
+    bit-exact on both engines."""
     from pyspark.sql.window import Window
 
     s = (_series(spark, sf_dir)
@@ -1177,8 +1217,12 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = (s.withColumn("rn", F.row_number().over(wo))
               .withColumn("n_obs", F.count("*").over(
                   Window.partitionBy("user_id"))))
-    schema = f"{_ddl(staged)}, kal_level double, kal_p double, kal_gain double"
-    fitted = staged.mapInPandas(_kalman_kernel(), schema=schema)
+    fitted = keyed_scan(
+        staged, _kalman_step(_KAL_Q, _KAL_R), init=_KALMAN_INIT,
+        cols=["close", "rn"],
+        schema=(f"{_ddl(staged)}, kal_level double, kal_p double, "
+                "kal_gain double"),
+        dense=_kalman_dense(_KAL_Q, _KAL_R))
     # Single-observation keys never compute a gain: the kernel carries
     # NaN, the oracle NULL — normalize to NULL (the dtype-honest
     # "undefined", matching the recursive CTE's first row).
@@ -1226,87 +1270,74 @@ def _kalman_step(q_noise: float, r_noise: float):
     return step
 
 
-def _kalman_kernel():
-    """Arrow kernel for the local-level filter (see q_kalman_level's
-    docstring for the vectorization argument; skewed-segment batches
-    run the shared :func:`_kalman_step` per key). Module-level factory
-    so tests/test_pandas_parity.py can drive it directly with
-    synthetic batch splits and assert bit-equality against the scalar
-    loop."""
-    step = _kalman_step(_KAL_Q, _KAL_R)
+def _kalman_dense(q_noise: float, r_noise: float):
+    """Dense form of :func:`_kalman_step` for :func:`keyed_scan`; reads
+    ``cols["rn"]``, the row's 1-based rank within its key.
 
-    def kernel(batches):
-        q_noise, r_noise = _KAL_Q, _KAL_R
-        # Rank-indexed gain/variance tables (index 0 unused; rank 1 =
-        # first observation: P=1, gain undefined). Grown on demand by
-        # the same scalar recurrence as the step.
-        k_tab = np.array([np.nan, np.nan])
-        p_tab = np.array([np.nan, 1.0])
+    Vectorization (r7, verdict item 4 — the former per-row Python
+    loop measured 22.6 s at sf10, the worst probe in the tree): two
+    structural facts make the local-level filter vectorizable WITHOUT
+    reassociating a single float op:
 
-        def extend(need: int):
-            nonlocal k_tab, p_tab
-            have = len(k_tab) - 1
-            if need <= have:
-                return
-            k2 = np.empty(need + 1)
-            p2 = np.empty(need + 1)
-            k2[:have + 1] = k_tab
-            p2[:have + 1] = p_tab
+    * the (P, gain) recurrence never reads the data — ``P⁻ = P + Q``,
+      ``K = P⁻/(P⁻+R)``, ``P = (1−K)P⁻`` depend only on the row's
+      per-key RANK — so both are a table indexed by `rn`, computed by
+      the same scalar ops and grown on demand;
+    * the level update ``l ← l + K(y − l)`` is element-wise, so rows
+      of DIFFERENT keys at the same rank step together: lay the
+      batch's per-key segments out as a (segments × max_len) matrix
+      and run max_len vectorized steps across all keys at once. Each
+      element still sees exactly the scalar op sequence (numpy
+      element-wise ops are per-element IEEE in order), so the result
+      is BIT-IDENTICAL to the row loop — asserted by
+      tests/test_pandas_parity.py's kalman property test and the
+      unchanged oracle. Keys scale with data here (66 rows/user at
+      every SF — TESTDATA.md), so batches are wide and step counts
+      stay ~66 regardless of corpus size; measured 22.6 s → well
+      under the ≤10 s sf10 target (SCALING.md addendum 13)."""
+    # Gain / variance by rank; index 0 unused, rank 1 = the first
+    # observation (P = 1, no gain). Held by `dense` alone: cloudpickle
+    # gives each unpickled function its own closure cells, so a second
+    # closure growing them would not be seen by `dense` on a worker.
+    tables = [np.array([np.nan, np.nan]), np.array([np.nan, 1.0])]
+
+    def dense(state, bounds, cols):
+        rns = cols["rn"].astype(np.int64)
+        starts, seg_lens = bounds[:-1], np.diff(bounds)
+        seg_of_row, pos_of_row, max_len = _segment_grid(bounds)
+        offsets = rns[starts] - 1  # 0-based rank before each segment
+        k_tab, p_tab = tables
+        have, need = len(k_tab) - 1, int((offsets + seg_lens).max())
+        if need > have:  # grow by the step's scalar ops
+            k_tab = np.concatenate([k_tab, np.empty(need - have)])
+            p_tab = np.concatenate([p_tab, np.empty(need - have)])
             p = p_tab[have]
             for rn in range(have + 1, need + 1):
                 pp = p + q_noise
                 k = pp / (pp + r_noise)
                 p = (1.0 - k) * pp
-                k2[rn] = k
-                p2[rn] = p
-            k_tab, p_tab = k2, p2
+                k_tab[rn], p_tab[rn] = k, p
+            tables[:] = k_tab, p_tab
+        ymat = np.full((len(starts), max_len), np.nan)
+        ymat[seg_of_row, pos_of_row] = cols["close"]
+        lmat = np.empty_like(ymat)
+        lprev = np.zeros(len(starts))
+        if state[2]:  # segment 0 continues the last batch's key
+            lprev[0] = state[0]
+        for t in range(max_len):
+            y = ymat[:, t]
+            rn_t = offsets + t + 1
+            k = k_tab[np.minimum(rn_t, len(k_tab) - 1)]
+            lvl = np.where(rn_t == 1, y, lprev + k * (y - lprev))
+            lvl = np.where(t < seg_lens, lvl, lprev)
+            lmat[:, t] = lvl
+            lprev = lvl
+        out_l = lmat[seg_of_row, pos_of_row]
+        out_p = p_tab[rns]
+        return ({"kal_level": out_l, "kal_p": out_p, "kal_gain": k_tab[rns]},
+                (float(out_l[-1]), float(out_p[-1]), True))
 
-        carry_key, carry = None, _KALMAN_INIT
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = pdf["user_id"].to_numpy()
-            rns = pdf["rn"].to_numpy()
-            ys = pdf["close"].to_numpy(dtype=np.float64)
-            n = len(pdf)
-            # Contiguous per-key segments (partition is sorted by
-            # (user_id, ts, event_id) — the window stage's layout).
-            bounds = _segment_bounds(keys)
-            starts, seg_lens = bounds[:-1], np.diff(bounds)
-            n_segs = len(starts)
-            max_len = int(seg_lens.max())
-            state = carry if keys[0] == carry_key else _KALMAN_INIT
-            carry_key = keys[-1]
-            if not _dense_layout_ok(n, n_segs, max_len):
-                outs, carry = _scan_segments(step, _KALMAN_INIT, state,
-                                             bounds, {"close": ys})
-                yield pdf.assign(**outs)
-                continue
-            offsets = rns[starts] - 1  # 0-based rank before each seg
-            extend(int((offsets + seg_lens).max()))
-            seg_of_row = np.repeat(np.arange(n_segs), seg_lens)
-            pos_of_row = np.arange(n) - starts[seg_of_row]
-            ymat = np.full((n_segs, max_len), np.nan)
-            ymat[seg_of_row, pos_of_row] = ys
-            lmat = np.empty_like(ymat)
-            lprev = np.zeros(n_segs)
-            if state[2]:  # seg 0 continues the last batch's key
-                lprev[0] = state[0]
-            for t in range(max_len):
-                y = ymat[:, t]
-                rn_t = offsets + t + 1
-                k = k_tab[np.minimum(rn_t, len(k_tab) - 1)]
-                lvl = np.where(rn_t == 1, y, lprev + k * (y - lprev))
-                lvl = np.where(t < seg_lens, lvl, lprev)
-                lmat[:, t] = lvl
-                lprev = lvl
-            out_l = lmat[seg_of_row, pos_of_row]
-            out_p = p_tab[rns]
-            carry = (float(out_l[-1]), float(out_p[-1]), True)
-            yield pdf.assign(kal_level=out_l, kal_p=out_p,
-                             kal_gain=k_tab[rns])
-
-    return kernel
+    return dense
 
 
 def _kalman_sql() -> str:

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..staging import staged
 from ..tables import load_table
 
 #: Okapi BM25 constants (the standard defaults from the literature).
@@ -356,6 +357,46 @@ _MMR_C = 8
 _MMR_K = 3
 
 
+@staged("retrieval.mmr_pool")
+def _mmr_pool(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """MMR's per-query candidate pools, (q_id, cand_id, rel, c_emb) for
+    the top-C by cosine, and their pairwise sims (q_id, a_id, b_id,
+    sim). STAGED: every unrolled greedy stage of q_mmr_rerank joins
+    against both, and without pinning each reference would re-execute
+    the FULL pool scan + scoring subtree (measured 15 re-scans of
+    embeddings in the unpinned plan) — the one part of the query that
+    is unbounded at 100 TB. Pinned state is C rows and C² sims per
+    query."""
+    from pyspark import StorageLevel
+
+    from .similarity import _with_cosine
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = (emb.filter(F.col("vec_id") < 4)
+         .select(F.col("vec_id").alias("q_id"),
+                 F.col("embedding").alias("q_emb")))
+    pool = (emb.filter(F.col("vec_id") >= 4)
+            .select(F.col("vec_id").alias("cand_id"),
+                    F.col("embedding").alias("c_emb")))
+    scored = _with_cosine(pool.crossJoin(F.broadcast(q)), "q_emb", "c_emb") \
+        .withColumnRenamed("cosine", "rel")
+    wq = W.partitionBy("q_id").orderBy(
+        F.col("rel").desc_nulls_last(), "cand_id")
+    cand = (scored.withColumn("rn", F.row_number().over(wq))
+            .filter(F.col("rn") <= _MMR_C)
+            .select("q_id", "cand_id", "rel", "c_emb")
+            .persist(StorageLevel.MEMORY_AND_DISK))
+    ca = cand.select("q_id", F.col("cand_id").alias("a_id"),
+                     F.col("c_emb").alias("a_emb"))
+    cb = cand.select("q_id", F.col("cand_id").alias("b_id"),
+                     F.col("c_emb").alias("b_emb"))
+    sims = (_with_cosine(
+        ca.join(cb, "q_id").filter(F.col("a_id") != F.col("b_id")),
+        "a_emb", "b_emb")
+        .select("q_id", "a_id", "b_id", F.col("cosine").alias("sim"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    return cand, sims
+
+
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance re-rank of dense-retrieval results —
     the diversity-selection step of a training-data curation pipeline
@@ -373,39 +414,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the initial scan, scored against a 4-row broadcast. With millions
     of queries the same plan holds — the per-query pools hash-shuffle
     on q_id once and every later stage joins within that key."""
-    from .similarity import _with_cosine
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = (emb.filter(F.col("vec_id") < 4)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb")))
-    pool = (emb.filter(F.col("vec_id") >= 4)
-            .select(F.col("vec_id").alias("cand_id"),
-                    F.col("embedding").alias("c_emb")))
-    scored = _with_cosine(pool.crossJoin(F.broadcast(q)), "q_emb", "c_emb") \
-        .withColumnRenamed("cosine", "rel")
-    wq = W.partitionBy("q_id").orderBy(
-        F.col("rel").desc_nulls_last(), "cand_id")
-    # Persist the pooled candidates: every unrolled greedy stage joins
-    # against cand/sims, and without pinning each reference would
-    # re-execute the FULL pool scan + scoring subtree (measured 15
-    # re-scans of embeddings in the unpinned plan) — the one part of
-    # this query that is unbounded at 100 TB. Pinned state is C rows
-    # and C² sims per query. Same pattern as part_pagerank's
-    # persisted adjacency.
-    from pyspark import StorageLevel
-    cand = (scored.withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= _MMR_C)
-            .select("q_id", "cand_id", "rel", "c_emb")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    ca = cand.select("q_id", F.col("cand_id").alias("a_id"),
-                     F.col("c_emb").alias("a_emb"))
-    cb = cand.select("q_id", F.col("cand_id").alias("b_id"),
-                     F.col("c_emb").alias("b_emb"))
-    sims = (_with_cosine(
-        ca.join(cb, "q_id").filter(F.col("a_id") != F.col("b_id")),
-        "a_emb", "b_emb")
-        .select("q_id", "a_id", "b_id", F.col("cosine").alias("sim"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    cand, sims = _mmr_pool(spark, sf_dir)
     cand = cand.select("q_id", "cand_id", "rel")
 
     def top1(df: DataFrame, score, pick: int) -> DataFrame:

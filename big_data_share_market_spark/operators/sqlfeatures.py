@@ -83,7 +83,7 @@ def _rcte_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_recursive_cte_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Kalman local-level filter in PURE SQL via Spark 4's
     WITH RECURSIVE — the same recursion text DuckDB runs as the
-    oracle (`streaming/batch_parity._stream_kalman_sql`), so Spark ≡
+    oracle (`streaming/batch_parity._STREAM_KALMAN_SQL`), so Spark ≡
     oracle reduces to both engines executing one recurrence over IEEE
     doubles with the same op order; the third implementation of this
     filter next to the batch Arrow kernel (ewm.q_kalman_level) and
@@ -122,7 +122,7 @@ def q_recursive_cte_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else {})
     q, r = f"CAST({_KAL_Q} AS DOUBLE)", f"CAST({_KAL_R} AS DOUBLE)"
     with scoped_conf(spark, raise_to):
-        # The recursion body mirrors _stream_kalman_sql verbatim, with
+        # The recursion body mirrors _STREAM_KALMAN_SQL verbatim, with
         # the base CTE swapped for the staged view.
         out = spark.sql(f"""
 WITH RECURSIVE h AS (
@@ -153,8 +153,8 @@ FROM h
 
 
 def _recursive_kalman_sql() -> str:
-    from ..streaming.batch_parity import _stream_kalman_sql
-    return _stream_kalman_sql()
+    from ..streaming.batch_parity import _STREAM_KALMAN_SQL
+    return _STREAM_KALMAN_SQL
 
 
 _TOPK = 3

@@ -27,10 +27,9 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: collapses them to ONE task while 31 cores idle (measured r10: the
 #: lag-moment family 2.3-2.9 s -> 1.1-1.6 s at 64k, same plans). On a
 #: production cluster post-shuffle partitions are >> 1 MB and the
-#: floor never binds, so this is a small-input knob, not a cluster
-#: tuning: raise it back via SPARK_GRAFT_AQE_MIN_PARTITION if inputs
-#: per partition are I/O-bound (guide §2.2).
-_AQE_MIN_PARTITION = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
+#: floor never binds, so this is a small-input setting, not a cluster
+#: tuning (guide §2.2).
+_AQE_MIN_PARTITION = "64k"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -62,15 +61,14 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def get_spark(app_name: str = "big_data_share_market_spark",
-              cpus: str | int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults."""
+              cpus: str | int | None = None) -> SparkSession:
+    """Build (or reuse) a SparkSession with scale-aware defaults; the
+    shuffle width is the core count."""
     cpus = str(cpus or _DEFAULT_CPUS)
-    shuffle = int(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

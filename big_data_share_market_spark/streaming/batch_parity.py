@@ -14,8 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dsum_sql
-from ..operators.ewm import _ewm_sql, _ORACLE_KEY_WINDOW
-from ..operators.transforms import BARS_CTE
+from ..operators.ewm import (_EMA_SQL, _KAL_Q, _KAL_R, _ewm_sql,
+                             _ORACLE_KEY_WINDOW)
+from ..operators.keyed import _DEDUP_UPSERT_SQL, _LATEST_N_SQL
+from ..operators.transforms import BARS_CTE, _OHLC_BARS_SQL
+from ..operators.warehouse import _INCR_MERGE_SQL
 from .pipeline import (events_stream, run_available_now, signal_over_bars,
                        stream_ohlc_bars, stream_session_windows,
                        stream_sliding_bars, with_watermark)
@@ -29,9 +32,6 @@ def q_stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate expressions are shared)."""
     return run_available_now(stream_ohlc_bars(events_stream(spark, sf_dir)),
                              spark)
-
-
-_STREAM_BARS_SQL = f"WITH {BARS_CTE} SELECT * FROM bars"
 
 
 def q_stream_signal_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,14 +107,6 @@ def q_stream_last20_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
                              output_mode="update")
 
 
-_STREAM_LAST20_SQL = """
-SELECT user_id, event_id, ts, value, rn FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                               ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events) WHERE rn <= 20
-"""
-
-
 def q_stream_ema_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6+: the reference's live indicator loop (EMA 5/15 per symbol,
     `streamlit_app/streamlit_app.py:165-166` fed by the provider
@@ -129,14 +121,6 @@ def q_stream_ema_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "ts", "close",
         F.nanvl("ema_5", F.lit(None).cast("double")).alias("ema_5"),
         F.nanvl("ema_15", F.lit(None).cast("double")).alias("ema_15"))
-
-
-_STREAM_EMA_SQL = f"""
-SELECT user_id, event_id, ts, value AS close,
-       {_ewm_sql('value', '2.0/(5.0+1.0)', _ORACLE_KEY_WINDOW)} AS ema_5,
-       {_ewm_sql('value', '2.0/(15.0+1.0)', _ORACLE_KEY_WINDOW)} AS ema_15
-FROM events
-"""
 
 
 def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,14 +179,6 @@ def q_stream_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
                       checkpoint_dir=f"{target_root}/ckpt{replay}")
     return spark.read.parquet(target).select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
-
-
-_STREAM_UPSERT_SQL = """
-SELECT event_id, ts, user_id, event_type, value, props FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, ts
-                               ORDER BY event_id DESC) AS rn
-  FROM events) WHERE rn = 1
-"""
 
 
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -864,19 +840,6 @@ def _stream_qsk_sql() -> str:
 
 #: Oracle for q_stream_mv_merge: the single-pass aggregate the merged
 #: generations must equal (identical to the batch twin's oracle).
-_STREAM_MV_SQL = """
-SELECT o_custkey,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-         AS total_spend,
-       MIN(o_orderdate) AS first_order,
-       MAX(o_orderdate) AS last_order
-FROM orders
-GROUP BY o_custkey
-ORDER BY o_custkey
-"""
-
-
 def q_stream_kalman_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Kalman local-level filter as a LIVE operator: per-key
     coupled (level, variance) state in the checkpoint, updated once
@@ -885,7 +848,6 @@ def q_stream_kalman_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     same per-key recursive CTE over the batch table; the only
     normalization is NaN→NULL on the first-observation gain (the
     kernel's "no gain yet" marker vs the CTE's NULL seed)."""
-    from ..operators.ewm import _KAL_Q, _KAL_R
     from .state import kalman_per_key
 
     sdf = events_stream(spark, sf_dir)
@@ -899,10 +861,7 @@ def q_stream_kalman_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(out, spark, output_mode="append")
 
 
-def _stream_kalman_sql() -> str:
-    from ..operators.ewm import _KAL_Q, _KAL_R
-    q, r = f"CAST({_KAL_Q} AS DOUBLE)", f"CAST({_KAL_R} AS DOUBLE)"
-    return f"""
+_STREAM_KALMAN_SQL = f"""
 WITH RECURSIVE s AS (
   SELECT user_id, event_id, ts, CAST(value AS DOUBLE) AS y,
          row_number() OVER (PARTITION BY user_id
@@ -919,8 +878,9 @@ h AS (
          q2.k
   FROM (
     SELECT s.user_id, s.event_id, s.ts, s.rn, s.y, h.l,
-           h.p + {q} AS pp,
-           (h.p + {q}) / ((h.p + {q}) + {r}) AS k
+           h.p + CAST({_KAL_Q} AS DOUBLE) AS pp,
+           (h.p + CAST({_KAL_Q} AS DOUBLE))
+             / ((h.p + CAST({_KAL_Q} AS DOUBLE)) + CAST({_KAL_R} AS DOUBLE)) AS k
     FROM h JOIN s ON s.user_id = h.user_id AND s.rn = h.rn + 1) q2)
 SELECT user_id, event_id, ts, y AS close,
        l AS kal_level, p AS kal_p, k AS kal_gain
@@ -1170,17 +1130,18 @@ QUERIES = {
                                   _stream_supertrend_sql()),
     "stream_event_transitions": (q_stream_event_transitions,
                                  _stream_transitions_sql()),
-    "stream_ohlc_bars": (q_stream_ohlc_bars, _STREAM_BARS_SQL),
+    "stream_ohlc_bars": (q_stream_ohlc_bars, _OHLC_BARS_SQL),
     "stream_ingest_dedup_gate": (q_stream_ingest_dedup_gate,
                                  _STREAM_INGEST_DEDUP_SQL),
     "stream_signal_bars": (q_stream_signal_bars, _STREAM_SIGNAL_SQL),
     "stream_sliding_bars": (q_stream_sliding_bars, _STREAM_SLIDING_SQL),
     "stream_session_windows": (q_stream_session_windows, _STREAM_SESSION_SQL),
-    "stream_last20_per_key": (q_stream_last20_per_key, _STREAM_LAST20_SQL),
-    "stream_ema_per_key": (q_stream_ema_per_key, _STREAM_EMA_SQL),
+    "stream_last20_per_key": (q_stream_last20_per_key, _LATEST_N_SQL),
+    "stream_ema_per_key": (q_stream_ema_per_key, _EMA_SQL),
     "stream_dedup_within_watermark": (q_stream_dedup_within_watermark,
                                       _STREAM_DEDUP_SQL),
-    "stream_upsert_idempotent": (q_stream_upsert_idempotent, _STREAM_UPSERT_SQL),
+    "stream_upsert_idempotent": (q_stream_upsert_idempotent,
+                                 _DEDUP_UPSERT_SQL),
     "stream_static_enrich": (q_stream_static_enrich, _STREAM_STATIC_SQL),
     "stream_interval_join": (q_stream_interval_join, _STREAM_INTERVAL_SQL),
     "stream_left_outer_interval_join": (q_stream_left_outer_interval_join,
@@ -1192,9 +1153,8 @@ QUERIES = {
     "stream_quality_gate": (q_stream_quality_gate,
                             _stream_quality_gate_sql()),
     "stream_bq_topk": (q_stream_bq_topk, _stream_bq_sql()),
-    "stream_kalman_per_key": (q_stream_kalman_per_key,
-                              _stream_kalman_sql()),
-    "stream_mv_merge": (q_stream_mv_merge, _STREAM_MV_SQL),
+    "stream_kalman_per_key": (q_stream_kalman_per_key, _STREAM_KALMAN_SQL),
+    "stream_mv_merge": (q_stream_mv_merge, _INCR_MERGE_SQL),
     "stream_quantile_sketch": (q_stream_quantile_sketch, _stream_qsk_sql()),
     "stream_session_timeout": (q_stream_session_timeout,
                                _stream_session_timeout_sql()),

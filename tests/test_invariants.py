@@ -489,7 +489,7 @@ def test_every_staged_family_releases(spark):
 def test_staged_families_are_declared_once():
     """Every staged family is declared by its `@staged` decorator alone:
     no module keeps a hand-rolled `_*_CACHE` dict beside the registry,
-    and each of the 16 family names is registered exactly once."""
+    and each of the 17 family names is registered exactly once."""
     import ast
     import collections
     import pathlib
@@ -523,8 +523,23 @@ def test_staged_families_are_declared_once():
         "dedup.simhash_table", "dedup.cc_labels", "text.tokens",
         "text.tfidf_index", "graph.adjacency", "graph.oriented",
         "graph.repeat_edges", "sqlfeatures.rcte_ranked", "bpe.merges",
-        "similarity.pq_codebook"}
+        "similarity.pq_codebook", "retrieval.mmr_pool"}
     assert list(staging._BUILDERS) == list(staging._REGISTRY)
+
+
+def test_registry_oracles_are_declared_once():
+    """Registry entries whose oracles have the same text share one
+    oracle object: a twin (a stream query and its batch form, two
+    candidate generators of the same pairs) points at the other's
+    constant instead of keeping a copy that can drift from it."""
+    first, copies = {}, []
+    for name, (_, sql) in all_queries().items():
+        if sql is None:
+            continue
+        twin, twin_sql = first.setdefault(sql, (name, sql))
+        if twin_sql is not sql:
+            copies.append((name, twin))
+    assert copies == []
 
 
 def test_load_table_leaves_session_conf_alone(spark):

@@ -72,7 +72,8 @@ def test_iterate_stops_at_a_fixpoint_and_counts_rounds(spark):
 
 @pytest.mark.parametrize("name", [
     "part_kcore", "part_bfs_hops", "pca_power_iteration", "kmeans_train",
-    "cc_alternating", "dedup_components", "recursive_cte_kalman"])
+    "cc_alternating", "dedup_components", "recursive_cte_kalman",
+    "mmr_rerank"])
 def test_loop_queries_leave_the_session_as_found(spark, name):
     """Runtime conf is unchanged after the query and its action, and
     nothing stays cached once the staged families are released."""

@@ -262,6 +262,30 @@ def test_trix_matches_pandas(spark):
     np.testing.assert_allclose(got, ref, rtol=1e-7)
 
 
+def _ewm_partition_fn(alpha):
+    """keyed_scan's partition function for one EMA of `close`, as
+    _apply_ewm builds it (dense form plus per-key step)."""
+    from big_data_share_market_spark.operators.ewm import (
+        _ewm_dense, _ewm_init, _ewm_step, _scan_kernel)
+
+    specs = [("e", "close", alpha)]
+    return _scan_kernel(_ewm_step(specs), _ewm_init(1), ["close"],
+                        ["user_id", "close", "e"], _ewm_dense(specs))
+
+
+def _kalman_partition_fn():
+    """keyed_scan's partition function for the Kalman filter, as
+    q_kalman_level builds it (dense form plus per-key step)."""
+    from big_data_share_market_spark.operators.ewm import (
+        _KAL_Q, _KAL_R, _KALMAN_INIT, _kalman_dense, _kalman_step,
+        _scan_kernel)
+
+    return _scan_kernel(_kalman_step(_KAL_Q, _KAL_R), _KALMAN_INIT,
+                        ["close", "rn"],
+                        ["user_id", "rn", "close", "kal_level", "kal_p",
+                         "kal_gain"], _kalman_dense(_KAL_Q, _KAL_R))
+
+
 def test_kalman_kernel_bit_equals_scalar_loop():
     """The r7 vectorized Kalman kernel (rank-indexed gain table +
     across-key matrix recurrence) must be BIT-IDENTICAL to the
@@ -274,8 +298,7 @@ def test_kalman_kernel_bit_equals_scalar_loop():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from big_data_share_market_spark.operators.ewm import (
-        _KAL_Q, _KAL_R, _kalman_kernel)
+    from big_data_share_market_spark.operators.ewm import _KAL_Q, _KAL_R
 
     def scalar_reference(pdf):
         import math
@@ -315,7 +338,7 @@ def test_kalman_kernel_bit_equals_scalar_loop():
         bounds = [0, *cuts, len(pdf)]
         batches = [pdf.iloc[a:b].reset_index(drop=True)
                    for a, b in zip(bounds, bounds[1:])]
-        got = pd.concat(list(_kalman_kernel()(iter(batches))),
+        got = pd.concat(list(_kalman_partition_fn()(iter(batches))),
                         ignore_index=True)
         assert len(got) == len(pdf)
         want_l, want_p, want_k = scalar_reference(pdf)
@@ -339,8 +362,7 @@ def test_ewm_kernel_bit_equals_scalar_loop():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from big_data_share_market_spark.operators.ewm import (
-        _ewm_kernel, ewm_mean)
+    from big_data_share_market_spark.operators.ewm import ewm_mean
 
     @settings(max_examples=40, deadline=None)
     @given(st.data())
@@ -363,7 +385,7 @@ def test_ewm_kernel_bit_equals_scalar_loop():
         bounds = [0, *cuts, len(pdf)]
         batches = [pdf.iloc[a:b].reset_index(drop=True)
                    for a, b in zip(bounds, bounds[1:])]
-        kern = _ewm_kernel([("e", ("close", alpha))], "user_id")
+        kern = _ewm_partition_fn(alpha)
         got = pd.concat(list(kern(iter(batches))), ignore_index=True)
         assert len(got) == len(pdf)
         np.testing.assert_array_equal(got["e"].to_numpy(), want)
@@ -379,8 +401,7 @@ def test_skewed_batch_takes_scalar_fallback_bit_equal():
     bit-identical. Exercises both kernels on a layout where
     cells = 401 × 2000 ≫ max(4·n, 2^16)."""
     from big_data_share_market_spark.operators.ewm import (
-        _KAL_Q, _KAL_R, _dense_layout_ok, _ewm_kernel, _kalman_kernel,
-        ewm_mean)
+        _KAL_Q, _KAL_R, _dense_layout_ok, ewm_mean)
 
     rng = np.random.default_rng(13)
     long_key = pd.DataFrame({
@@ -394,8 +415,8 @@ def test_skewed_batch_takes_scalar_fallback_bit_equal():
     assert _dense_layout_ok(66 * 150, 150, 66)  # fixture shape stays dense
 
     alpha = 2 / 6
-    got = pd.concat(list(_ewm_kernel([("e", ("close", alpha))], "user_id")(
-        iter([pdf]))), ignore_index=True)
+    got = pd.concat(list(_ewm_partition_fn(alpha)(iter([pdf]))),
+                    ignore_index=True)
     want = np.concatenate([
         ewm_mean(long_key["close"].to_numpy(), alpha),
         singles["close"].to_numpy(dtype=np.float64)])
@@ -403,7 +424,7 @@ def test_skewed_batch_takes_scalar_fallback_bit_equal():
 
     kin = pdf.assign(rn=np.concatenate([np.arange(1, 2001),
                                         np.ones(400, dtype=int)]))
-    kgot = pd.concat(list(_kalman_kernel()(iter([kin]))),
+    kgot = pd.concat(list(_kalman_partition_fn()(iter([kin]))),
                      ignore_index=True)
     import math
     lvl, p = None, None
@@ -422,11 +443,53 @@ def test_skewed_batch_takes_scalar_fallback_bit_equal():
                                   np.array(want_l))
 
 
-#: Batch queries whose recurrence runs in a per-key kernel that carries
-#: state across Arrow batches (keyed_scan, plus the Kalman kernel).
-_SCAN_QUERIES = ["holt_forecast", "forecast_anomalies", "forecast_backtest",
-                 "kalman_level", "parabolic_sar", "supertrend", "kama",
-                 "trix", "mass_index"]
+def test_hw_dense_bit_equals_step():
+    """Holt-Winters' dense form must match its per-key step bit for
+    bit, whatever the key layout and Arrow-batch split — including a
+    batch that starts inside a key's first m rows (its buffered
+    values are re-fed in front of the first segment) and keys shorter
+    than the season."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from big_data_share_market_spark.operators.ewm import (
+        _HW_A, _HW_B, _HW_G, _HW_INIT, _HW_M, _hw_dense, _hw_step,
+        _scan_kernel)
+
+    names = ["user_id", "close", "level", "trend", "fc_1", "fc_2", "fc_3"]
+    step = _hw_step(_HW_A, _HW_B, _HW_G, _HW_M)
+
+    @settings(max_examples=60, deadline=None)
+    @given(st.data())
+    def run(data):
+        lens = [data.draw(st.integers(1, 12))
+                for _ in range(data.draw(st.integers(1, 6)))]
+        rng = np.random.default_rng(data.draw(st.integers(0, 2**31)))
+        pdf = pd.DataFrame({
+            "user_id": np.repeat(np.arange(len(lens)), lens),
+            "close": 100 + rng.standard_normal(sum(lens)).cumsum()})
+        cuts = sorted(data.draw(
+            st.lists(st.integers(0, len(pdf)), max_size=5)))
+        bounds = [0, *cuts, len(pdf)]
+        batches = [pdf.iloc[a:b].reset_index(drop=True)
+                   for a, b in zip(bounds, bounds[1:])]
+
+        def scan(dense):
+            kern = _scan_kernel(step, _HW_INIT, ["close"], names, dense)
+            return pd.concat(list(kern(iter(batches))), ignore_index=True)
+
+        pd.testing.assert_frame_equal(
+            scan(_hw_dense(_HW_A, _HW_B, _HW_G, _HW_M)), scan(None),
+            check_exact=True)
+
+    run()
+
+
+#: Batch queries whose recurrence keyed_scan runs, carrying state across
+#: Arrow batches (ema and kalman_level through their dense forms).
+_SCAN_QUERIES = ["ema", "holt_forecast", "holt_winters", "forecast_anomalies",
+                 "forecast_backtest", "kalman_level", "parabolic_sar",
+                 "supertrend", "kama", "trix", "mass_index"]
 
 
 def _scan_input(columns: list[str]) -> pd.DataFrame:

@@ -423,11 +423,9 @@ def _reachable_functions(fn) -> list:
 @pytest.mark.usefixtures("spark")
 def test_recurrences_have_one_step_and_one_runner_per_side():
     """Per-key recurrences are written once as steps. In the batch
-    operators only `_apply_ewm`, `keyed_scan` and the two kernels with
-    their own shape (Holt-Winters' per-key summary, the Kalman dense
-    kernel) call mapInPandas; state.py defines no EMA, Holt, Kalman or
-    supertrend step of its own, and its builders run the operator
-    modules' steps."""
+    operators only `keyed_scan` calls mapInPandas; state.py defines no
+    EMA, Holt, Kalman or supertrend step of its own, and its builders
+    run the operator modules' steps."""
     import ast
     import pathlib
 
@@ -444,8 +442,7 @@ def test_recurrences_have_one_step_and_one_runner_per_side():
         assert src.count(".mapInPandas(") == len(callers)
         return callers
 
-    assert map_in_pandas_callers(ewm) == [
-        "_apply_ewm", "keyed_scan", "q_holt_winters", "q_kalman_level"]
+    assert map_in_pandas_callers(ewm) == ["keyed_scan"]
     assert map_in_pandas_callers(channels) == []
 
     tree = ast.parse(pathlib.Path(st.__file__).read_text())

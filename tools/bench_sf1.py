@@ -28,14 +28,16 @@ sys.path.insert(0, REPO)
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/bdsm_sf1.0")
 
 #: Heaviest batch queries by sf0.1 wall (r11 baseline bench), every
-#: eager driver loop (tables.iterate), and the two heaviest stream
-#: replays. theil_sen_trend rides along because it is the documented
-#: at-scale stress kernel.
+#: eager driver loop (tables.iterate), the per-key Arrow kernels with a
+#: dense across-key form or their own step (ema, kalman_level,
+#: holt_winters), and the two heaviest stream replays. theil_sen_trend
+#: rides along because it is the documented at-scale stress kernel.
 HEAVY = [
     "part_triangles", "part_pagerank", "part_kcore", "part_bfs_hops",
     "containment_neardup", "pca_power_iteration", "kmeans_train",
     "cc_alternating", "suppliers_kept_waiting", "quantile_sketch_merge",
     "spearman_corr", "clean_corpus", "theil_sen_trend",
+    "ema", "kalman_level", "holt_winters",
 ]
 STREAMS = ["stream_session_timeout", "stream_ohlc_bars"]
 
