@@ -16,4 +16,8 @@ Layout:
   staging      — staged-relation lifecycle (inspect / unpersist)
 """
 
+from .session import _lazy_zip_invalidation
+
 __version__ = "0.1.0"
+
+_lazy_zip_invalidation()

@@ -613,6 +613,17 @@ def _holt_step(a: float, b_const: float):
     return step
 
 
+def _sorted_by_key(last: DataFrame) -> DataFrame:
+    """`last.orderBy("user_id")` behind a keys-sized hash exchange. A
+    global sort range-samples its child, which re-runs everything
+    since the last exchange — here the Arrow kernel, so every row
+    would cross into Python twice (measured at sf0.1:
+    pythonNumRowsReceived = 200000 for 100 000 rows). The barrier
+    materializes the one-row-per-key result once and the sampler reads
+    its shuffle files (the dedup.q_ngram_jaccard_dedup barrier)."""
+    return last.repartition("user_id").orderBy("user_id")
+
+
 def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key Holt linear-trend state + h-step-ahead forecasts
     (Holt 1957 / Hyndman & Athanasopoulos FPP, public method):
@@ -640,8 +651,9 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard_snapshot pattern): mapInPandas erases known output
     partitioning, so a post-kernel Window would force a second hash
     exchange — pre-computing them keeps the whole query on ONE
-    exchange, and the post-kernel last-row pick is a row-local
-    rn = n_obs filter. Output is |keys| rows."""
+    full-data exchange, and the post-kernel last-row pick is a
+    row-local rn = n_obs filter. Output is |keys| rows, sorted behind a
+    keys-sized barrier (:func:`_sorted_by_key`)."""
     from pyspark.sql.window import Window
 
     s = (_series(spark, sf_dir)
@@ -659,10 +671,11 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "n_obs",
                     F.col("holt_level").alias("level"),
                     F.col("holt_trend").alias("trend")))
-    return last.select(
+    return (last.select(
         "user_id", "n_obs", "level", "trend",
         *[(F.col("level") + F.lit(float(h)) * F.col("trend"))
-          .alias(f"fc_{h}") for h in _HOLT_H]).orderBy("user_id")
+          .alias(f"fc_{h}") for h in _HOLT_H])
+        .transform(_sorted_by_key))
 
 
 def _holt_sql() -> str:
@@ -821,8 +834,8 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     state with level and trend. The rank
     (rn) and per-key count (n_obs) are computed BEFORE the kernel on
     the key-repartitioned, sorted layout, so the last-row pick after
-    it is a row-local filter and the query keeps one hash exchange
-    (the q_holt_forecast pattern).
+    it is a row-local filter and the query keeps one full-data hash
+    exchange (the q_holt_forecast pattern).
 
     Oracle: per-key recursive CTE whose rows carry the seasonal
     DOUBLE[] and rotate it with list_append(seas[2:m], s_new) —
@@ -854,7 +867,7 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter((F.col("rn") == F.col("n_obs"))
                     & (F.col("n_obs") >= _HW_M))
             .select("user_id", "n_obs", "level", "trend", *fcs)
-            .orderBy("user_id"))
+            .transform(_sorted_by_key))
 
 
 def _holt_winters_sql() -> str:
@@ -1105,40 +1118,42 @@ def q_dashboard_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wk = W.partitionBy("user_id").rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing)
-    prev = F.lag("close").over(w)
-    s = (s.withColumn("prev_value", prev)
-         .withColumn("support", F.min("close").over(wk))
-         .withColumn("resistance", F.max("close").over(wk))
-         .withColumn("sma_20", _rolling_mean(F.col("close"), w, 20))
-         .withColumn("delta", F.col("close") - F.lag("close").over(w)))
+    # Two projections, not a withColumn per column: each call
+    # re-analyzes the growing plan (about 1000 py4j round trips a
+    # build). The rolling means sit in the second one, so the decimal
+    # casts inside them are computed after the exchange rather than
+    # shuffled. The latest-row rank is precomputed ASCENDING
+    # (rn == n_rows) so it rides the same exchange/sort as every other
+    # window — ranking after the kernel would force a second exchange,
+    # since mapInPandas erases the known output partitioning.
+    s = s.withColumns({
+        "prev_value": F.lag("close").over(w),
+        "support": F.min("close").over(wk),
+        "resistance": F.max("close").over(wk),
+        "delta": F.col("close") - F.lag("close").over(w),
+        "rn": F.row_number().over(w),
+        "n_rows": F.count("*").over(wk)})
     gain = F.when(F.col("delta") > 0, F.col("delta")).otherwise(F.lit(0.0))
     loss = F.when(F.col("delta") < 0, -F.col("delta")).otherwise(F.lit(0.0))
-    s = (s.withColumn("gain_avg", _rolling_mean(gain, w, 14))
-         .withColumn("loss_avg", _rolling_mean(loss, w, 14)))
-    rs = F.col("gain_avg") / F.nullif(F.col("loss_avg"), F.lit(0.0))
-    s = s.withColumn(
-        "rsi_14", F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)))
-    # Latest-row rank is precomputed ASCENDING (rn == n_rows) so it
-    # rides the same exchange/sort as every other window — ranking
-    # after the kernel would force a second exchange, since
-    # mapInPandas erases the known output partitioning.
-    s = (s.withColumn("rn", F.row_number().over(w))
-         .withColumn("n_rows", F.count("*").over(wk)))
+    s = s.withColumns({"sma_20": _rolling_mean(F.col("close"), w, 20),
+                       "gain_avg": _rolling_mean(gain, w, 14),
+                       "loss_avg": _rolling_mean(loss, w, 14)})
     # Window stages left the layout hash(user_id)-partitioned and
     # (ts, event_id)-sorted — the kernel adds no exchange.
     s = _apply_ewm(s, ["ts", "event_id"],
                    {"ema_5": ("close", 2.0 / (5.0 + 1.0)),
                     "ema_15": ("close", 2.0 / (15.0 + 1.0))},
                    assume_sorted=True)
+    rs = F.col("gain_avg") / F.nullif(F.col("loss_avg"), F.lit(0.0))
+    signal = (F.when(F.col("prev_value").isNull(), "HOLD")
+              .when(F.col("close") > F.col("prev_value"), "BUY")
+              .when(F.col("close") < F.col("prev_value"), "SELL")
+              .otherwise("HOLD"))
     return (s.filter(F.col("rn") == F.col("n_rows"))
-            .withColumn(
-                "signal",
-                F.when(F.col("prev_value").isNull(), "HOLD")
-                .when(F.col("close") > F.col("prev_value"), "BUY")
-                .when(F.col("close") < F.col("prev_value"), "SELL")
-                .otherwise("HOLD"))
-            .select("user_id", "ts", "close", "prev_value", "signal",
-                    "ema_5", "ema_15", "sma_20", "rsi_14",
+            .select("user_id", "ts", "close", "prev_value",
+                    signal.alias("signal"), "ema_5", "ema_15", "sma_20",
+                    (F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)))
+                    .alias("rsi_14"),
                     "support", "resistance"))
 
 
@@ -1206,7 +1221,7 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     letter: :func:`_kalman_step` (with its dense form,
     :func:`_kalman_dense`) runs in one partition-wide pass of
     :func:`keyed_scan` with the last-row rank precomputed on the same
-    window layout (one exchange total), mirrored by a per-key recursive
+    window layout (one full-data exchange), mirrored by a per-key recursive
     CTE executing the IDENTICAL operation order — sequential doubles,
     bit-exact on both engines."""
     from pyspark.sql.window import Window
@@ -1233,7 +1248,7 @@ def q_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("kal_p").alias("p_var"),
                     F.when(F.col("n_obs") > 1, F.col("kal_gain"))
                     .alias("gain"))
-            .orderBy("user_id"))
+            .transform(_sorted_by_key))
 
 
 #: Kalman step state (level, variance, started) before a key's first row.

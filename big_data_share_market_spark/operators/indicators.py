@@ -88,17 +88,17 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in the oracle."""
     s = _series(spark, sf_dir)
     w = _w()
-    delta = F.col("close") - F.lag("close").over(w)
-    s = s.withColumn("delta", delta)
+    # delta feeds windowed sums, which cannot nest a window function:
+    # one projection per dependency level.
+    s = s.withColumn("delta", F.col("close") - F.lag("close").over(w))
     gain = F.when(F.col("delta") > 0, F.col("delta")).otherwise(F.lit(0.0))
     loss = F.when(F.col("delta") < 0, -F.col("delta")).otherwise(F.lit(0.0))
-    s = (s.withColumn("gain_avg", _rolling_mean(gain, _w(), 14))
-         .withColumn("loss_avg", _rolling_mean(loss, _w(), 14)))
+    s = s.withColumns({"gain_avg": _rolling_mean(gain, w, 14),
+                       "loss_avg": _rolling_mean(loss, w, 14)})
     rs = F.col("gain_avg") / F.nullif(F.col("loss_avg"), F.lit(0.0))
-    return (
-        s.withColumn("rsi_14", F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)))
-        .select("user_id", "event_id", "ts", "close", "rsi_14")
-    )
+    return s.select(
+        "user_id", "event_id", "ts", "close",
+        (F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs))).alias("rsi_14"))
 
 
 _RSI_SQL = f"""

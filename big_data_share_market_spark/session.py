@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import contextlib
 import os
+import sys
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -58,6 +60,43 @@ def _ship_package(spark: SparkSession) -> None:
     except Exception:
         pass  # already added under this name in a prior session reuse
     sc._bdsm_package_shipped = True
+
+
+def _lazy_zip_invalidation() -> None:
+    """Worker-side counterpart of :func:`_ship_package`: stop a Python
+    worker from re-reading every zip on its path at each task start.
+
+    PySpark's worker calls `importlib.invalidate_caches()` before every
+    task, and before CPython 3.13 each `zipimporter` answers by
+    re-reading its archive's whole central directory. An engine worker
+    holds 16-19 of them (pyspark.zip, the spark-core jar, the shipped
+    package zip); the re-read measured 110-240 ms per task on a 4-core
+    host, against 250-280 ms for an identity mapInPandas. This ports
+    3.13's lazy behaviour: an archive is re-read, exactly as before,
+    only when its (st_mtime_ns, st_size) stamp differs from the one
+    seen at the importer's last re-read (always on the first call).
+
+    Acts only inside a PySpark worker and only on Python < 3.13;
+    idempotent. The driver process is never patched."""
+    from pyspark import SparkFiles
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if (sys.version_info >= (3, 13) or not SparkFiles._is_running_on_worker
+            or getattr(reread, "_bdsm_stamped", False)):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != self.__dict__.get("_bdsm_stamp"):
+            reread(self)
+            self._bdsm_stamp = stamp
+
+    invalidate_caches._bdsm_stamped = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(app_name: str = "big_data_share_market_spark",

@@ -29,10 +29,21 @@ ORDER_COL = "event_id"
 
 
 def _merge_write(spark: SparkSession, target_dir: str):
+    """foreachBatch body that merges each deduped micro-batch into
+    `target_dir`. The closure is the target's only writer, so after
+    its first write it reads the target with the schema it wrote
+    instead of paying a schema-inference job per micro-batch. Before
+    that, a target left by someone else is read with inference, so one
+    with other columns fails loudly rather than reading as NULLs."""
+    written = None
+
     def write(deduped: DataFrame) -> None:
+        nonlocal written
         cols = deduped.columns
         if os.path.exists(target_dir):
-            existing = spark.read.parquet(target_dir)
+            reader = (spark.read if written is None
+                      else spark.read.schema(written))
+            existing = reader.parquet(target_dir)
             # anti-join: keep target rows whose key is NOT overwritten
             kept = existing.join(deduped.select(*KEYS).distinct(),
                                  on=KEYS, how="left_anti")
@@ -44,6 +55,7 @@ def _merge_write(spark: SparkSession, target_dir: str):
         if os.path.exists(target_dir):
             shutil.rmtree(target_dir)
         os.rename(tmp, target_dir)
+        written = merged.schema
 
     return write
 

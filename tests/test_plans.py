@@ -465,12 +465,57 @@ def test_holt_forecast_single_fulldata_exchange(spark):
     """holt_forecast computes the last-row rank BEFORE the Arrow
     kernel (mapInPandas erases known output partitioning, so a
     post-kernel Window would re-shuffle the full fitted series):
-    exactly one hash exchange total — the only other exchange is the
-    |keys|-row rangepartitioning for the final orderBy."""
+    exactly one hash exchange below the kernel. Above it sit only
+    |keys|-row exchanges: the sort-sampler barrier (hash) and the
+    final orderBy's rangepartitioning."""
     fn, _ = _QUERIES["holt_forecast"]
     plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("hashpartitioning(") == 1, plan[:2000]
     assert plan.count("MapInPandas") == 1
+    above, below = plan.split("MapInPandas")
+    assert below.count("hashpartitioning(") == 1, plan[:2000]
+    assert above.count("hashpartitioning(") == 1, plan[:2000]
+    assert above.index("rangepartitioning(") < above.index(
+        "hashpartitioning("), plan[:2000]
+
+
+def _python_rows_received(qe) -> int:
+    """Sum of `pythonNumRowsReceived` over the executed plan's Arrow
+    kernels (AQE query stages included) — read after the plan ran."""
+    total, todo = 0, [qe.executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        metrics = node.metrics()
+        if metrics.contains("pythonNumRowsReceived"):
+            total += metrics.apply("pythonNumRowsReceived").value()
+        children = node.children()
+        todo += [children.apply(i) for i in range(children.size())]
+    return total
+
+
+@pytest.mark.parametrize("name", ["holt_winters", "kalman_level",
+                                  "holt_forecast"])
+def test_final_sort_does_not_rerun_the_kernel(spark, name):
+    """The presentation orderBy range-samples its child; without the
+    keys-sized barrier in front of it the sampler re-runs the Arrow
+    kernel's stage and every row crosses into Python twice. Each
+    non-NULL close enters the kernel, and the kernel emits one row per
+    input row, so the rows received equal the input rows exactly."""
+    from pyspark.sql import functions as F
+
+    from big_data_share_market_spark.tables import load_table
+
+    fn, _ = _QUERIES[name]
+    qe = fn(spark, SF_DIR)._jdf.queryExecution()
+    qe.toRdd().count()
+    n_in = (load_table(spark, SF_DIR, "events")
+            .filter(F.col("value").isNotNull()).count())
+    assert n_in > 0
+    assert _python_rows_received(qe) == n_in
 
 
 def test_forecast_backtest_tail_filter_precedes_kernel(spark):

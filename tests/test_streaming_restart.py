@@ -228,6 +228,54 @@ def test_upsert_restart_replays_idempotently(spark, scratch):
     assert got == want and len(got) > 0
 
 
+def test_upsert_reads_its_own_target_without_inference(spark, scratch):
+    """After its first write the merge reads its target with the schema
+    it wrote. Merging one batch into two copies of the same target, the
+    closure that wrote the target runs exactly one Spark job fewer (the
+    schema inference) than a fresh closure, and both leave the same
+    rows and schema."""
+    from big_data_share_market_spark.streaming.upsert import _merge_write
+
+    events = load_table(spark, SF_DIR, "events")
+    warm_dir, cold_dir = f"{scratch}/warm", f"{scratch}/cold"
+    warm = _merge_write(spark, warm_dir)
+    warm(events.filter(F.col("user_id") % 2 == 0))
+    shutil.copytree(warm_dir, cold_dir)
+    cold = _merge_write(spark, cold_dir)
+    batch = events.filter(F.col("user_id") % 3 == 0)
+
+    sc = spark.sparkContext
+
+    def jobs(write, group):
+        sc.setJobGroup(group, group)
+        try:
+            write(batch)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(cold, "upsert-cold") - jobs(warm, "upsert-warm") == 1
+    got_warm, got_cold = (spark.read.parquet(d) for d in (warm_dir, cold_dir))
+    assert got_warm.schema == got_cold.schema
+    assert (sorted(map(tuple, got_warm.collect()))
+            == sorted(map(tuple, got_cold.collect())))
+    assert got_warm.count() > 0
+
+
+def test_upsert_rejects_a_target_with_other_columns(spark, scratch):
+    """A target this closure never wrote is read with inference: one
+    with other columns fails the merge instead of reading as NULLs."""
+    from pyspark.errors import AnalysisException
+
+    from big_data_share_market_spark.streaming.upsert import _merge_write
+
+    target = f"{scratch}/target"
+    spark.range(3).toDF("x").write.parquet(target)
+    write = _merge_write(spark, target)
+    with pytest.raises(AnalysisException):
+        write(load_table(spark, SF_DIR, "events"))
+
+
 def test_cusum_state_survives_restart(spark, scratch):
     """The STATEFUL-OPERATOR restart proof (the two above cover the
     sink families): kill a live CUSUM drift query mid-replay, resume
