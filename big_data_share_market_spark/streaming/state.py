@@ -6,8 +6,16 @@ checkpointed by Spark.
 
 Every NoTimeout machine runs on one adapter, :func:`_keyed_state`,
 which owns the select, the optional NULL filter, the grouping, state
-load and update, and the output frame. A machine is a pure step with
-the contract the batch runner ``operators.ewm.keyed_scan`` shares:
+load and update, and the output frame. The adapter groups on a state
+bucket, ``pmod(hash(user_id), _STATE_BUCKETS)``, not on the key: one
+Python call per bucket with rows per micro-batch sorts the bucket's
+rows on ``(user_id, ts, event_id)`` and runs the step once per key
+segment. A bucket's state is ``keys ARRAY<BIGINT>, states
+ARRAY<STRUCT<…>>``, the struct being the machine's ``*_STATE_DDL``;
+every key of the bucket is written back each time the bucket runs, and
+a key without rows in the batch keeps its state unchanged. A machine
+is a pure step with the contract the batch runner
+``operators.ewm.keyed_scan`` shares:
 
     step(state, cols) -> (new_state, out or None)
 
@@ -37,8 +45,20 @@ transitions, drawdown, CUSUM) keep the IEEE op order of their
 recursive-CTE oracles.
 
 Scale notes: state is O(n_keys × a few scalars) (last-N: × N). The
-shuffle is one hash partitioning on the key, the same as any grouped
-agg. Sessionization (EventTimeTimeout) keeps its own function below.
+shuffle is one hash partitioning on the bucket. PySpark pays about 6 ms
+per group per micro-batch (slicing the Arrow batch, JSON state
+properties, pickling, one state frame), against under 1 ms for most
+steps per key, so per-key groups cost ~6 ms × keys touched; bucket
+groups cost ~6 ms × buckets, but the state written per batch grows with
+all keys in the buckets the batch touches, not just the keys that had
+rows. With ``_STATE_BUCKETS`` = 8 every bucket holds n_keys / 8 keys.
+The count is a constant: changing it re-maps keys under an existing
+checkpoint. A checkpoint written by the earlier per-key layout (state
+keyed on ``user_id``, one row per key) cannot be resumed: Spark's
+state-schema check fails the query with
+``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``, so such a stream restarts
+from a new checkpoint. Sessionization (EventTimeTimeout) keeps its
+own per-key function below, because its timers belong to a group.
 """
 
 from __future__ import annotations
@@ -54,7 +74,25 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.channels import _SUPERTREND_INIT, _supertrend_step
 from ..operators.ewm import (_HOLT_INIT, _KALMAN_INIT, _ewm_init, _ewm_step,
-                             _holt_step, _kalman_step)
+                             _holt_step, _kalman_step, _segment_bounds)
+
+
+#: Number of state groups the keyed machines hash their keys into.
+#: Fixed, not a parameter: a different count re-maps keys to other
+#: buckets under an existing checkpoint.
+_STATE_BUCKETS = 8
+
+
+def _plain(v):
+    """`v` with numpy scalars and arrays turned into Python values, the
+    conversion `GroupState.update` applies only at the top level."""
+    if isinstance(v, np.generic):
+        return v.item()
+    if isinstance(v, np.ndarray):
+        return v.tolist()
+    if isinstance(v, (list, tuple)):
+        return [_plain(x) for x in v]
+    return v
 
 
 def _keyed_state(sdf: DataFrame, cols: list[str], step, *, init: tuple,
@@ -62,33 +100,51 @@ def _keyed_state(sdf: DataFrame, cols: list[str], step, *, init: tuple,
                  drop_null: bool = False, price: str | None = None
                  ) -> DataFrame:
     """Run the pure per-key `step` (module docstring) as a NoTimeout
-    `applyInPandasWithState` operator over `user_id` + `cols`."""
+    `applyInPandasWithState` operator over `user_id` + `cols`, grouped
+    by state bucket."""
 
     def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
         parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:  # NoTimeout calls only keys with rows
+        if not parts:  # NoTimeout calls only buckets with rows
             return
         pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+               .sort_values(["user_id", "ts", "event_id"])
+               .reset_index(drop=True))
+        uids = pdf["user_id"].to_numpy(dtype="int64")
         arrays = {c: pdf[c].to_numpy() for c in cols}
         keep = {}
         if price is not None:
             arrays[price] = pdf["value"].to_numpy(dtype="float64")
-            keep = {"event_id": pdf["event_id"].astype("int64"),
-                    "ts": pdf["ts"], price: arrays[price]}
-        new_state, out = step(state.get if state.exists else init, arrays)
-        state.update(new_state)
-        if out is not None:
-            yield pd.DataFrame({"user_id": user_id, **keep, **out})
+            keep = {"event_id": pdf["event_id"].to_numpy(dtype="int64"),
+                    "ts": pdf["ts"].to_numpy(), price: arrays[price]}
+        prior = (dict(zip(state.get[0], map(tuple, state.get[1])))
+                 if state.exists else {})
+        outs = []
+        bounds = _segment_bounds(uids).tolist()
+        for a, b in zip(bounds, bounds[1:]):
+            uid = int(uids[a])
+            new_state, out = step(prior.get(uid, init),
+                                  {c: v[a:b] for c, v in arrays.items()})
+            prior[uid] = _plain(new_state)
+            if out is not None:
+                n = len(next(iter(out.values())))
+                outs.append({"user_id": np.full(n, uid),
+                             **{c: v[a:b] for c, v in keep.items()}, **out})
+        state.update((list(prior), list(prior.values())))
+        if outs:
+            yield pd.DataFrame({c: np.concatenate([np.asarray(o[c])
+                                                   for o in outs])
+                                for c in outs[0]})
 
-    sdf = sdf.select("user_id", *cols)
+    bucket = F.pmod(F.hash("user_id"), F.lit(_STATE_BUCKETS)).alias("bucket")
+    sdf = sdf.select(bucket, "user_id", *cols)
     if drop_null:
         sdf = sdf.filter(F.col("value").isNotNull())
-    return sdf.groupBy("user_id").applyInPandasWithState(
+    return sdf.groupBy("bucket").applyInPandasWithState(
         fn,
         outputStructType=output_ddl,
-        stateStructType=state_ddl,
+        stateStructType=(f"keys ARRAY<BIGINT>, "
+                         f"states ARRAY<STRUCT<{state_ddl}>>"),
         outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -160,8 +216,8 @@ def ema_per_key(sdf: DataFrame,
     so stream output is bit-identical to the batch result when events
     arrive in order. The reference computes this eagerly per dashboard
     refresh (`streamlit_app/streamlit_app.py:165-166,346-347`); here the
-    state lives in the checkpoint. One hash shuffle on the key per
-    micro-batch; state is O(n_keys x 2 doubles)."""
+    state lives in the checkpoint. One hash shuffle on the state bucket
+    per micro-batch; state is O(n_keys x 2 doubles)."""
     step = _ewm_step([(name, "close", alpha)
                       for name, alpha in zip(("ema_5", "ema_15"), alphas)])
     return _keyed_state(sdf, _TICK_COLS, step, init=_ewm_init(len(alphas)),
@@ -195,7 +251,7 @@ def _atr_step(alpha: float):
 def atr_per_key(sdf: DataFrame, alpha: float = 1.0 / 14.0) -> DataFrame:
     """Streaming Wilder ATR(14) per user_id — live volatility per
     symbol. State is O(n_keys × 2 doubles); one hash shuffle on the
-    key per micro-batch, like the EMA/Holt kernels."""
+    state bucket per micro-batch, like the EMA/Holt kernels."""
     return _keyed_state(sdf, _TICK_COLS, _atr_step(alpha),
                         init=(math.nan, math.nan, False),
                         state_ddl=ATR_STATE_DDL, output_ddl=ATR_OUTPUT_DDL,

@@ -6,7 +6,8 @@ the fixture parity harness:
 - the EventTimeTimeout session state machine (fake GroupState — the
   timeout branch, in-batch closure, the empty-iterator re-arm path);
 - the NoTimeout keyed state machines on the shared adapter (same
-  rows and state however the input splits into micro-batches);
+  rows and state however the input splits into micro-batches, and
+  whichever keys share a state bucket);
 - Theil–Sen exact recovery with injected outliers (Spark).
 """
 
@@ -258,16 +259,19 @@ def test_state_fn_vectorized_matches_scalar_reference_randomized():
 
 
 class _CaptureStream:
-    """Stands in for a streaming DataFrame: records the column select,
-    the optional ``value IS NOT NULL`` filter and the function handed
-    to ``applyInPandasWithState``, so a test can drive that function
-    by hand with :class:`_FakeState`."""
+    """Stands in for a streaming DataFrame: records the column select
+    (the state-bucket column apart from the named columns), the
+    optional ``value IS NOT NULL`` filter, the grouping and the
+    function handed to ``applyInPandasWithState``, so a test can drive
+    that function by hand with :class:`_FakeState`."""
 
     def __init__(self):
         self.cols, self.drop_null, self.call = None, False, None
+        self.bucket = self.keys = None
 
     def select(self, *cols):
-        self.cols = list(cols)
+        self.cols = [c for c in cols if isinstance(c, str)]
+        (self.bucket,) = [c for c in cols if not isinstance(c, str)]
         return self
 
     def filter(self, cond):
@@ -278,13 +282,27 @@ class _CaptureStream:
         return self
 
     def groupBy(self, *keys):
-        assert keys == ("user_id",)
+        self.keys = keys
         return self
 
     def applyInPandasWithState(self, func, outputStructType,
                                stateStructType, outputMode, timeoutConf):
         self.call = (func, outputStructType, outputMode)
         return self
+
+    def spark_buckets(self, spark, user_ids) -> dict:
+        """The bucket Spark groups each of `user_ids` into: the
+        recorded bucket column evaluated by Spark itself."""
+        from big_data_share_market_spark.streaming.state import (
+            _STATE_BUCKETS)
+
+        assert self.keys == ("bucket",)
+        ids = spark.createDataFrame([(int(u),) for u in user_ids],
+                                    "user_id BIGINT")
+        got = {r.user_id: r.bucket
+               for r in ids.select("user_id", self.bucket).collect()}
+        assert set(got.values()) <= set(range(_STATE_BUCKETS))
+        return got
 
 
 def _split_series(seed: int = 20261017, n_keys: int = 4,
@@ -319,25 +337,38 @@ def _norm_state(v):
     return v
 
 
-def _replay(func, mode, batches):
+def _replay(func, mode, batches, bucket_of):
     """Drive a captured state function over micro-batches the way
-    Spark does: once per key with rows, each key's rows split over
-    two input frames, state carried between batches."""
+    Spark does: once per group with rows, the group being
+    ``bucket_of[user_id]``, with the group's rows split over two input
+    frames (rows arrive shuffled, so most keys straddle the split) and
+    the group's state carried between batches; a call yields at most
+    one output frame. Returns the output, each key's rows in emission
+    order with keys ascending, and the per-key states read out of the
+    group states."""
     states: dict = {}
     outs: dict = {}
     for batch in batches:
-        for uid, rows in batch.groupby("user_id", sort=True):
+        groups = batch["user_id"].map(bucket_of).rename("bucket")
+        for g, rows in batch.groupby(groups, sort=True):
+            rows = rows.assign(bucket=g)
             half = len(rows) // 2
             frames = [rows.iloc[:half], rows.iloc[half:]]
-            state = states.setdefault(uid, _FakeState())
-            emitted = list(func((int(uid),), iter(frames), state))
-            if mode == "update":  # the key's latest emission holds
-                outs[uid] = emitted
-            else:
-                outs.setdefault(uid, []).extend(emitted)
+            state = states.setdefault(g, _FakeState())
+            emitted = list(func((int(g),), iter(frames), state))
+            assert len(emitted) <= 1  # one frame per group, not per key
+            for out in emitted:
+                for uid, rows_out in out.groupby("user_id", sort=False):
+                    if mode == "update":  # the key's latest emission holds
+                        outs[uid] = [rows_out]
+                    else:
+                        outs.setdefault(uid, []).append(rows_out)
     frames = [f for uid in sorted(outs) for f in outs[uid]]
     out = pd.concat(frames, ignore_index=True)
-    return out, {uid: _norm_state(s.get) for uid, s in states.items()}
+    per_key = {uid: _norm_state(key_state)
+               for s in states.values()
+               for uid, key_state in zip(*s.get)}
+    return out, per_key
 
 
 _STATE_MACHINES = [
@@ -349,45 +380,86 @@ _STATE_MACHINES = [
 ]
 
 
-@pytest.mark.usefixtures("spark")
+def _captured(name, kwargs, series):
+    """Build machine `name` over a :class:`_CaptureStream` and return
+    the capture with `series` narrowed to the machine's columns (NULL
+    values dropped for a machine that drops them)."""
+    from big_data_share_market_spark.streaming import state as st
+
+    cap = _CaptureStream()
+    getattr(st, name)(cap, **kwargs)
+    series = series[cap.cols]
+    if cap.drop_null:
+        series = series[series["value"].notna()]
+    return cap, series.sort_values(["ts", "event_id"])
+
+
+def _three_batches(ordered, rng):
+    """`ordered` cut into three micro-batches, rows shuffled in each."""
+    n = len(ordered)
+    cuts = [0, n // 3, 2 * n // 3, n]
+    return [ordered.iloc[a:b].iloc[rng.permutation(b - a)]
+            for a, b in zip(cuts, cuts[1:])]
+
+
 @pytest.mark.parametrize("name,kwargs", _STATE_MACHINES,
                          ids=[m for m, _ in _STATE_MACHINES])
-def test_state_machine_output_independent_of_batch_split(name, kwargs):
+def test_state_machine_output_independent_of_batch_split(spark, name,
+                                                         kwargs):
     """Every NoTimeout keyed state machine must emit the same rows and
     leave the same state whether the series arrives as one micro-batch
     or as three that carry state between them. The oracle replays read
     one fixture file, so they only ever see a single micro-batch."""
     import numpy as np
 
-    from big_data_share_market_spark.streaming import state as st
-
-    cap = _CaptureStream()
-    getattr(st, name)(cap, **kwargs)
+    cap, ordered = _captured(name, kwargs, _split_series())
     func, output_ddl, mode = cap.call
-    series = _split_series()[cap.cols]
-    if cap.drop_null:
-        series = series[series["value"].notna()]
-    ordered = series.sort_values(["ts", "event_id"])
     assert ordered["ts"].duplicated().any()
     if "value" in cap.cols and not cap.drop_null:
         assert ordered["value"].isna().any()
+    buckets = cap.spark_buckets(spark, ordered["user_id"].unique())
 
     rng = np.random.default_rng(7)
-
-    def shuffled(df):
-        return df.iloc[rng.permutation(len(df))]
-
-    n = len(ordered)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    split = [shuffled(ordered.iloc[a:b]) for a, b in zip(cuts, cuts[1:])]
-    whole_out, whole_state = _replay(func, mode, [shuffled(ordered)])
-    split_out, split_state = _replay(func, mode, split)
+    whole_out, whole_state = _replay(
+        func, mode, [ordered.iloc[rng.permutation(len(ordered))]], buckets)
+    split_out, split_state = _replay(
+        func, mode, _three_batches(ordered, rng), buckets)
 
     assert list(whole_out.columns) == [
         c.split()[0] for c in output_ddl.split(",")]
     assert len(whole_out) > 0
     pd.testing.assert_frame_equal(split_out, whole_out, check_exact=True)
     assert split_state == whole_state
+
+
+@pytest.mark.parametrize("name,kwargs", _STATE_MACHINES,
+                         ids=[m for m, _ in _STATE_MACHINES])
+def test_state_machine_output_independent_of_bucketing(spark, name,
+                                                       kwargs):
+    """A key's rows and state must not depend on which other keys share
+    its state group: all keys in one group, each key in its own, and
+    Spark's own buckets give the same output and per-key state over
+    three micro-batches, each key's rows split across input frames.
+    A third of the keys skip the middle batch, so their group runs
+    without them and must carry their state through untouched."""
+    import numpy as np
+
+    cap, ordered = _captured(name, kwargs, _split_series(n_keys=12))
+    func, _, mode = cap.call
+    uids = ordered["user_id"].unique()
+    spark_buckets = cap.spark_buckets(spark, uids)
+    assert len(set(spark_buckets.values())) < len(uids)
+    batches = _three_batches(ordered, np.random.default_rng(7))
+    batches[1] = batches[1][batches[1]["user_id"] % 3 != 0]
+
+    results = [_replay(func, mode, batches, buckets)
+               for buckets in ({u: 0 for u in uids}, {u: u for u in uids},
+                               spark_buckets)]
+    (one_out, one_state), *others = results
+    assert len(one_out) > 0 and len(one_state) == len(uids)
+    for out, per_key in others:
+        pd.testing.assert_frame_equal(out, one_out, check_exact=True)
+        assert per_key == one_state
 
 
 def test_state_machines_share_one_adapter():

@@ -28,6 +28,7 @@ import os
 import shutil
 import uuid
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -86,6 +87,22 @@ def _run_to_end(sdf, foreach, ckpt: str) -> None:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination()
+
+
+def _run_noop(sdf, ckpt: str):
+    """Run the stream to the end into the no-op sink; return the query."""
+    q = (sdf.writeStream.format("noop")
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return q
+
+
+def _append_to(path: str):
+    """foreachBatch body that appends each micro-batch to `path`."""
+    def fn(batch_df, batch_id):
+        batch_df.write.mode("append").parquet(path)
+    return fn
 
 
 def _mv_rows(spark, root):
@@ -294,20 +311,15 @@ def test_cusum_state_survives_restart(spark, scratch):
     cols = ["user_id", "event_id", "ts", "value",
             "run_mean", "s_pos", "s_neg", "drift"]
 
-    def writer(path):
-        def fn(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(path)
-        return fn
-
     # Uninterrupted reference run.
     ref_out = f"{scratch}/ref_out"
     _run_to_end(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
-                writer(ref_out), f"{scratch}/ref_ckpt")
+                _append_to(ref_out), f"{scratch}/ref_ckpt")
 
     # Crash-injected run: batch 2's output lands but its checkpoint
     # offset (and state snapshot) never commits -> replayed on resume.
     out = f"{scratch}/out"
-    inner, calls = writer(out), {"n": 0}
+    inner, calls = _append_to(out), {"n": 0}
 
     def crash_after_write(batch_df, batch_id):
         inner(batch_df, batch_id)
@@ -320,7 +332,7 @@ def test_cusum_state_survives_restart(spark, scratch):
     _run_to_crash(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
                   crash_after_write, ckpt)
     _run_to_end(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
-                writer(out), ckpt)
+                _append_to(out), ckpt)
 
     got = [tuple(r) for r in (spark.read.parquet(out)
                               .select(*cols).distinct()
@@ -329,6 +341,107 @@ def test_cusum_state_survives_restart(spark, scratch):
                                .select(*cols)
                                .orderBy("user_id", "event_id")).collect()]
     assert got == want and len(got) > 0
+
+
+def _state_by_key(spark, ckpt: str) -> dict:
+    """Each key's state in a keyed machine's checkpoint, read back with
+    Spark's state data source out of the state buckets (repr, so NaN
+    compares equal and doubles compare exactly)."""
+    rows = (spark.read.format("statestore").load(ckpt)
+            .select("value.groupState.*").collect())
+    return {k: repr(s) for r in rows for k, s in zip(r.keys, r.states)}
+
+
+def test_ema_state_survives_restart_with_keys_missing(spark, scratch):
+    """Two availableNow runs of the EMA over one checkpoint, the second
+    over a later slice that lacks a third of the keys, must emit
+    exactly what one uninterrupted run emits, and leave the same state.
+    The keys missing from the second run share state buckets with keys
+    that update, and must keep their state untouched."""
+    from big_data_share_market_spark.streaming.state import ema_per_key
+
+    events = load_table(spark, SF_DIR, "events")
+    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
+    cut = lo + (hi - lo) / 2
+    missing = F.col("user_id") % 3 == 0
+    src = f"{scratch}/events_src"
+    events.filter(F.col("ts") < cut).write.parquet(src)
+
+    out, ckpt = f"{scratch}/out", f"{scratch}/ckpt"
+    _run_to_end(ema_per_key(_stream(spark, src, _EVENTS_DDL)),
+                _append_to(out), ckpt)
+    first = _state_by_key(spark, ckpt)
+    (events.filter((F.col("ts") >= cut) & ~missing)
+     .write.mode("append").parquet(src))
+    _run_to_end(ema_per_key(_stream(spark, src, _EVENTS_DDL)),
+                _append_to(out), ckpt)
+    second = _state_by_key(spark, ckpt)
+
+    ref_out, ref_ckpt = f"{scratch}/ref_out", f"{scratch}/ref_ckpt"
+    _run_to_end(ema_per_key(spark.readStream.schema(_EVENTS_DDL)
+                            .parquet(src)), _append_to(ref_out), ref_ckpt)
+
+    def rows(path):
+        return (spark.read.parquet(path)
+                .orderBy("user_id", "ts", "event_id").toPandas())
+
+    got = rows(out)
+    assert len(got) == spark.read.parquet(src).count()
+    pd.testing.assert_frame_equal(got, rows(ref_out), check_exact=True)
+    assert second == _state_by_key(spark, ref_ckpt)
+    kept = {k for k in first if k % 3 == 0}
+    assert kept and {k: second[k] for k in kept} == {
+        k: first[k] for k in kept}
+    assert all(second[k] != first[k] for k in set(first) - kept)
+
+
+def test_ema_state_is_one_row_per_bucket(spark, scratch):
+    """The EMA's state store holds one row per state bucket, not one
+    per key: 100 keys leave at most `_STATE_BUCKETS` state rows, and
+    those rows carry every key's state."""
+    from big_data_share_market_spark.streaming.state import (
+        _STATE_BUCKETS, ema_per_key)
+
+    src, ckpt = f"{scratch}/ticks", f"{scratch}/ckpt"
+    (spark.range(1000)
+     .selectExpr("id AS event_id", "timestamp_seconds(1700000000 + id) AS ts",
+                 "id % 100 AS user_id", "'view' AS event_type",
+                 "CAST(id % 37 AS DOUBLE) AS value", "'' AS props")
+     .write.parquet(src))
+    q = _run_noop(ema_per_key(_stream(spark, src, _EVENTS_DDL)), ckpt)
+    assert 1 <= q.lastProgress["stateOperators"][0]["numRowsTotal"] \
+        <= _STATE_BUCKETS
+    assert sorted(_state_by_key(spark, ckpt)) == list(range(100))
+
+
+def test_ema_refuses_a_per_key_checkpoint(spark, scratch):
+    """A checkpoint written by a per-key grouping (state keyed on
+    `user_id`, one row per key) is refused by Spark's state-schema
+    check when the bucketed EMA resumes it, rather than read as
+    bucket state."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from big_data_share_market_spark.streaming.state import (
+        EMA_OUTPUT_DDL, EMA_STATE_DDL, ema_per_key)
+
+    def per_key(key, pdf_iter, state):
+        state.update(([0.0, 0.0], [False, False]))
+        yield from ()
+
+    src, ckpt = f"{scratch}/events_src", f"{scratch}/ckpt"
+    events = load_table(spark, SF_DIR, "events")
+    events.filter(F.col("event_id") % 2 == 0).write.parquet(src)
+    old = (_stream(spark, src, _EVENTS_DDL)
+           .select("user_id", "event_id", "ts", "value")
+           .groupBy("user_id")
+           .applyInPandasWithState(per_key, EMA_OUTPUT_DDL, EMA_STATE_DDL,
+                                   "append", GroupStateTimeout.NoTimeout))
+    _run_noop(old, ckpt)
+    events.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
+    with pytest.raises(StreamingQueryException,
+                       match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        _run_noop(ema_per_key(_stream(spark, src, _EVENTS_DDL)), ckpt)
 
 
 def test_python_stream_source_restart_resumes_from_progress(spark, scratch):
